@@ -37,10 +37,7 @@ from pyspark.sql import functions as F
 from citation_graph_spark.checkpointing import CheckpointManager
 from citation_graph_spark.graph.degrees import auto_partitions
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import (
-    iterative_kernel_conf,
-    shuffle_partitions_conf,
-)
+from citation_graph_spark.session import kernel, set_kernel_width
 
 # HLL needs genuinely mixed bits: a linear map (v*A + B mod P) over
 # DENSE vertex ids biases the trailing-zero distribution ~2x (measured
@@ -72,6 +69,7 @@ def _register_cols(vid_col, log2m: int):
     return idx, rho
 
 
+@kernel
 def exact_balls(
     edges: DataFrame,
     radius: int,
@@ -80,45 +78,44 @@ def exact_balls(
     """Exact out-ball sizes ``(vid, r, ball)`` for r = 0..radius over
     the DIRECTED edge set. State is the full reached-pair set — the
     oracle-scale twin of :func:`hyperball`, not a 100-TB operator."""
-    with iterative_kernel_conf(edges.sparkSession):
-        spark = edges.sparkSession
-        e = edges.select("src", "dst").distinct().persist()
-        n_edges = e.count()
-        if num_partitions is None:
-            num_partitions = auto_partitions(spark, n_edges)
+    spark = edges.sparkSession
+    e = edges.select("src", "dst").distinct().persist()
+    n_edges = e.count()
+    if num_partitions is None:
+        num_partitions = auto_partitions(spark, n_edges)
 
-        verts = (
-            e.select(F.col("src").alias("vid"))
-            .unionByName(e.select(F.col("dst").alias("vid")))
-            .distinct()
+    verts = (
+        e.select(F.col("src").alias("vid"))
+        .unionByName(e.select(F.col("dst").alias("vid")))
+        .distinct()
+    )
+    ball = (
+        verts.select(F.col("vid").alias("v"), F.col("vid").alias("u"))
+        .repartition(num_partitions, "v")
+        .localCheckpoint(eager=True)
+    )
+
+    def counts(r: int) -> DataFrame:
+        return ball.groupBy(F.col("v").alias("vid")).agg(
+            F.count(F.lit(1)).alias("ball")
+        ).withColumn("r", F.lit(r))
+
+    out = counts(0)
+    set_kernel_width(spark, num_partitions)
+    for r in range(1, radius + 1):
+        grown = (
+            ball.join(e, ball["u"] == e["src"])
+            .select("v", F.col("dst").alias("u"))
         )
         ball = (
-            verts.select(F.col("vid").alias("v"), F.col("vid").alias("u"))
+            ball.unionByName(grown)
+            .distinct()
             .repartition(num_partitions, "v")
             .localCheckpoint(eager=True)
         )
-
-        def counts(r: int) -> DataFrame:
-            return ball.groupBy(F.col("v").alias("vid")).agg(
-                F.count(F.lit(1)).alias("ball")
-            ).withColumn("r", F.lit(r))
-
-        out = counts(0)
-        with shuffle_partitions_conf(spark, num_partitions):
-            for r in range(1, radius + 1):
-                grown = (
-                    ball.join(e, ball["u"] == e["src"])
-                    .select("v", F.col("dst").alias("u"))
-                )
-                ball = (
-                    ball.unionByName(grown)
-                    .distinct()
-                    .repartition(num_partitions, "v")
-                    .localCheckpoint(eager=True)
-                )
-                out = out.unionByName(counts(r))
-        e.unpersist()
-        return out.select("vid", "r", "ball")
+        out = out.unionByName(counts(r))
+    e.unpersist()
+    return out.select("vid", "r", "ball")
 
 
 def hyperball_round_lineage(e: DataFrame, regs: DataFrame) -> DataFrame:
@@ -136,6 +133,7 @@ def hyperball_round_lineage(e: DataFrame, regs: DataFrame) -> DataFrame:
     )
 
 
+@kernel
 def hyperball(
     edges: DataFrame,
     radius: int,
@@ -159,110 +157,109 @@ def hyperball(
     newest pair and replays only the remaining rounds. Registers are
     integers, so the round-trip is exact and the resumed output is
     bit-identical to an uninterrupted run."""
-    with iterative_kernel_conf(edges.sparkSession):
-        spark = edges.sparkSession
-        metrics = MetricsLogger(metrics_path, "hyperball")
-        ck_regs = (
-            CheckpointManager(checkpoint_dir, "hyperball_regs")
-            if checkpoint_dir
-            else None
+    spark = edges.sparkSession
+    metrics = MetricsLogger(metrics_path, "hyperball")
+    ck_regs = (
+        CheckpointManager(checkpoint_dir, "hyperball_regs")
+        if checkpoint_dir
+        else None
+    )
+    ck_est = (
+        CheckpointManager(checkpoint_dir, "hyperball_est")
+        if checkpoint_dir
+        else None
+    )
+    m = 1 << log2m
+    e = edges.select("src", "dst").distinct().persist()
+    n_edges = e.count()
+    if num_partitions is None:
+        num_partitions = auto_partitions(spark, n_edges)
+
+    verts = (
+        e.select(F.col("src").alias("vid"))
+        .unionByName(e.select(F.col("dst").alias("vid")))
+        .distinct()
+    )
+    idx, rho = _register_cols(F.col("vid"), log2m)
+
+    # alpha_m * m^2 for the raw HLL estimate (Flajolet et al. 2007
+    # constants; m >= 64 here so the m<64 special cases don't apply)
+    alpha = 0.7213 / (1.0 + 1.079 / m) if m >= 128 else 0.709
+    regs = None
+
+    def estimates(r: int) -> DataFrame:
+        agg = regs.groupBy("vid").agg(
+            F.count(F.lit(1)).alias("nnz"),
+            F.sum(F.pow(F.lit(2.0), -F.col("rho"))).alias("s_nz"),
         )
-        ck_est = (
-            CheckpointManager(checkpoint_dir, "hyperball_est")
-            if checkpoint_dir
-            else None
+        zeros = F.lit(m) - F.col("nnz")
+        raw = F.lit(alpha * m * m) / (zeros + F.col("s_nz"))
+        # linear-counting small-range correction
+        est = F.when(
+            (raw <= F.lit(2.5 * m)) & (zeros > 0),
+            F.lit(float(m)) * F.log(F.lit(float(m)) / zeros),
+        ).otherwise(raw)
+        return agg.select(
+            "vid",
+            F.lit(r).alias("r"),
+            F.round(est).cast("long").alias("est"),
         )
-        m = 1 << log2m
-        e = edges.select("src", "dst").distinct().persist()
-        n_edges = e.count()
-        if num_partitions is None:
-            num_partitions = auto_partitions(spark, n_edges)
 
-        verts = (
-            e.select(F.col("src").alias("vid"))
-            .unionByName(e.select(F.col("dst").alias("vid")))
-            .distinct()
-        )
-        idx, rho = _register_cols(F.col("vid"), log2m)
+    import time as _time
 
-        # alpha_m * m^2 for the raw HLL estimate (Flajolet et al. 2007
-        # constants; m >= 64 here so the m<64 special cases don't apply)
-        alpha = 0.7213 / (1.0 + 1.079 / m) if m >= 128 else 0.709
-        regs = None
-
-        def estimates(r: int) -> DataFrame:
-            agg = regs.groupBy("vid").agg(
-                F.count(F.lit(1)).alias("nnz"),
-                F.sum(F.pow(F.lit(2.0), -F.col("rho"))).alias("s_nz"),
-            )
-            zeros = F.lit(m) - F.col("nnz")
-            raw = F.lit(alpha * m * m) / (zeros + F.col("s_nz"))
-            # linear-counting small-range correction
-            est = F.when(
-                (raw <= F.lit(2.5 * m)) & (zeros > 0),
-                F.lit(float(m)) * F.log(F.lit(float(m)) / zeros),
-            ).otherwise(raw)
-            return agg.select(
-                "vid",
-                F.lit(r).alias("r"),
-                F.round(est).cast("long").alias("est"),
-            )
-
-        import time as _time
-
-        start_r = 0
-        out = None
-        if ck_regs and resume:
-            lr = ck_regs.load(spark)
-            le = ck_est.load(spark)
-            if (
-                lr is not None
-                and le is not None
-                and lr[1]["iteration"] == le[1]["iteration"]
-            ):
-                start_r = lr[1]["iteration"]
-                regs = (
-                    lr[0]
-                    .select("vid", "idx", "rho")
-                    .repartition(num_partitions, "vid")
-                    .localCheckpoint(eager=True)
-                )
-                out = (
-                    le[0].select("vid", "r", "est").localCheckpoint(eager=True)
-                )
-                if start_r >= radius:
-                    e.unpersist()
-                    return out
-        if out is None:
+    start_r = 0
+    out = None
+    if ck_regs and resume:
+        lr = ck_regs.load(spark)
+        le = ck_est.load(spark)
+        if (
+            lr is not None
+            and le is not None
+            and lr[1]["iteration"] == le[1]["iteration"]
+        ):
+            start_r = lr[1]["iteration"]
             regs = (
-                verts.select("vid", idx.alias("idx"), rho.alias("rho"))
+                lr[0]
+                .select("vid", "idx", "rho")
                 .repartition(num_partitions, "vid")
                 .localCheckpoint(eager=True)
             )
-            out = estimates(0)
-        with shuffle_partitions_conf(spark, num_partitions):
-            for r in range(start_r + 1, radius + 1):
-                t0 = _time.monotonic()
-                regs = (
-                    hyperball_round_lineage(e, regs)
-                    .repartition(num_partitions, "vid")
-                    .localCheckpoint(eager=True)
-                )
-                out = out.unionByName(estimates(r))
-                metrics.log(
-                    r,
-                    wall_s=round(_time.monotonic() - t0, 4),
-                    msgs=n_edges,
-                )
-                if ck_regs and (
-                    r % checkpoint_interval == 0 or r == radius
-                ):
-                    meta = {"log2m": log2m, "radius": radius}
-                    ck_regs.save(regs, r, meta=meta)
-                    ck_est.save(out, r, meta=meta)
-                    # reading the just-written estimates back caps the
-                    # union lineage at checkpoint_interval rounds
-                    le = ck_est.load(spark)
-                    out = le[0].select("vid", "r", "est")
-        e.unpersist()
-        return out.select("vid", "r", "est")
+            out = (
+                le[0].select("vid", "r", "est").localCheckpoint(eager=True)
+            )
+            if start_r >= radius:
+                e.unpersist()
+                return out
+    if out is None:
+        regs = (
+            verts.select("vid", idx.alias("idx"), rho.alias("rho"))
+            .repartition(num_partitions, "vid")
+            .localCheckpoint(eager=True)
+        )
+        out = estimates(0)
+    set_kernel_width(spark, num_partitions)
+    for r in range(start_r + 1, radius + 1):
+        t0 = _time.monotonic()
+        regs = (
+            hyperball_round_lineage(e, regs)
+            .repartition(num_partitions, "vid")
+            .localCheckpoint(eager=True)
+        )
+        out = out.unionByName(estimates(r))
+        metrics.log(
+            r,
+            wall_s=round(_time.monotonic() - t0, 4),
+            msgs=n_edges,
+        )
+        if ck_regs and (
+            r % checkpoint_interval == 0 or r == radius
+        ):
+            meta = {"log2m": log2m, "radius": radius}
+            ck_regs.save(regs, r, meta=meta)
+            ck_est.save(out, r, meta=meta)
+            # reading the just-written estimates back caps the
+            # union lineage at checkpoint_interval rounds
+            le = ck_est.load(spark)
+            out = le[0].select("vid", "r", "est")
+    e.unpersist()
+    return out.select("vid", "r", "est")

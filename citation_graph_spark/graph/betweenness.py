@@ -41,10 +41,7 @@ from pyspark.sql import functions as F
 
 from citation_graph_spark.graph.degrees import auto_partitions, undirect
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import (
-    iterative_kernel_conf,
-    shuffle_partitions_conf,
-)
+from citation_graph_spark.session import kernel, set_kernel_width
 
 
 def forward_round_lineage(
@@ -98,6 +95,7 @@ def backward_round_lineage(
     )
 
 
+@kernel
 def betweenness_sampled(
     edges: DataFrame,
     sources: DataFrame,
@@ -112,12 +110,25 @@ def betweenness_sampled(
     levels; with a cap the result is the dependency sum over the
     ≤max_iter-hop shortest-path DAG — the (still well-defined) state
     the SQL oracle mirrors."""
-    with iterative_kernel_conf(edges.sparkSession):
-        return _betweenness(
-            edges, sources, max_iter, num_partitions, metrics_path
-        )
+    e, verts, done = _brandes_state(
+        edges, sources, max_iter, num_partitions, metrics_path
+    )
+    bc = (
+        done.filter(F.col("vid") != F.col("s"))
+        .groupBy("vid")
+        .agg(F.sum("delta").alias("bc"))
+    )
+    out = verts.join(bc, "vid", "left").select(
+        "vid",
+        F.floor(F.coalesce(F.col("bc"), F.lit(0.0)) * 1000000 + F.lit(0.5))
+        .cast("long")
+        .alias("bc_micro"),
+    )
+    e.unpersist()
+    return out
 
 
+@kernel
 def edge_betweenness_sampled(
     edges: DataFrame,
     sources: DataFrame,
@@ -135,13 +146,12 @@ def edge_betweenness_sampled(
     score — one extra edge join and groupBy, no extra rounds. Floored
     to micro-integers for exact cross-engine comparison (per-term
     formula identical on both sides; only summation order floats)."""
-    with iterative_kernel_conf(edges.sparkSession):
-        e, verts, done = _brandes_state(
-            edges, sources, max_iter, num_partitions, metrics_path
-        )
-        out = edge_dependency_lineage(e, done)
-        e.unpersist()
-        return out
+    e, verts, done = _brandes_state(
+        edges, sources, max_iter, num_partitions, metrics_path
+    )
+    out = edge_dependency_lineage(e, done)
+    e.unpersist()
+    return out
 
 
 def edge_dependency_lineage(e: DataFrame, done: DataFrame) -> DataFrame:
@@ -196,31 +206,6 @@ def edge_dependency_lineage(e: DataFrame, done: DataFrame) -> DataFrame:
         return out
 
 
-def _betweenness(
-    edges: DataFrame,
-    sources: DataFrame,
-    max_iter: int,
-    num_partitions: int | None,
-    metrics_path: str | None,
-) -> DataFrame:
-    e, verts, done = _brandes_state(
-        edges, sources, max_iter, num_partitions, metrics_path
-    )
-    bc = (
-        done.filter(F.col("vid") != F.col("s"))
-        .groupBy("vid")
-        .agg(F.sum("delta").alias("bc"))
-    )
-    out = verts.join(bc, "vid", "left").select(
-        "vid",
-        F.floor(F.coalesce(F.col("bc"), F.lit(0.0)) * 1000000 + F.lit(0.5))
-        .cast("long")
-        .alias("bc_micro"),
-    )
-    e.unpersist()
-    return out
-
-
 def _brandes_state(
     edges: DataFrame,
     sources: DataFrame,
@@ -266,23 +251,23 @@ def _brandes_state(
     )
     frontier = reach
     lmax = 0
-    with shuffle_partitions_conf(spark, num_partitions):
-        for it in range(1, max_iter + 1):
-            t0 = time.monotonic()
-            new = (
-                forward_round_lineage(e, frontier, reach, it)
-                .repartition(num_partitions, "s", "vid")
-                .localCheckpoint(eager=True)
-            )
-            n_new = new.count()
-            metrics.log(
-                it, frontier=n_new, wall_s=round(time.monotonic() - t0, 4)
-            )
-            if n_new == 0:
-                break
-            lmax = it
-            reach = reach.unionByName(new).localCheckpoint(eager=True)
-            frontier = new
+    set_kernel_width(spark, num_partitions)
+    for it in range(1, max_iter + 1):
+        t0 = time.monotonic()
+        new = (
+            forward_round_lineage(e, frontier, reach, it)
+            .repartition(num_partitions, "s", "vid")
+            .localCheckpoint(eager=True)
+        )
+        n_new = new.count()
+        metrics.log(
+            it, frontier=n_new, wall_s=round(time.monotonic() - t0, 4)
+        )
+        if n_new == 0:
+            break
+        lmax = it
+        reach = reach.unionByName(new).localCheckpoint(eager=True)
+        frontier = new
 
     # ---- backward: descending-level dependency accumulation --------
     done = (
@@ -290,18 +275,18 @@ def _brandes_state(
         .withColumn("delta", F.lit(0.0))
         .localCheckpoint(eager=True)
     )
-    with shuffle_partitions_conf(spark, num_partitions):
-        for lvl in range(lmax - 1, -1, -1):
-            t0 = time.monotonic()
-            cur = reach.filter(F.col("dist") == lvl)
-            lvl_rows = backward_round_lineage(e, done, cur, lvl).repartition(
-                num_partitions, "s", "vid"
-            )
-            done = done.unionByName(lvl_rows).localCheckpoint(eager=True)
-            metrics.log(
-                lmax - lvl,
-                level=lvl,
-                wall_s=round(time.monotonic() - t0, 4),
-            )
+    set_kernel_width(spark, num_partitions)
+    for lvl in range(lmax - 1, -1, -1):
+        t0 = time.monotonic()
+        cur = reach.filter(F.col("dist") == lvl)
+        lvl_rows = backward_round_lineage(e, done, cur, lvl).repartition(
+            num_partitions, "s", "vid"
+        )
+        done = done.unionByName(lvl_rows).localCheckpoint(eager=True)
+        metrics.log(
+            lmax - lvl,
+            level=lvl,
+            wall_s=round(time.monotonic() - t0, 4),
+        )
 
     return e, verts, done

@@ -40,10 +40,7 @@ from citation_graph_spark.checkpointing import CheckpointManager
 from citation_graph_spark.graph.degrees import auto_partitions, undirect
 from citation_graph_spark.graph.mis import mis_round_lineage
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import (
-    iterative_kernel_conf,
-    shuffle_partitions_conf,
-)
+from citation_graph_spark.session import kernel, set_kernel_width
 
 # mex of a sorted ascending distinct color array: first gap, else size
 _MEX_FOLD = (
@@ -116,6 +113,7 @@ def _finish_local_coloring(
     return out
 
 
+@kernel
 def greedy_coloring(
     edges: DataFrame,
     max_iter: int = 100,
@@ -145,29 +143,6 @@ def greedy_coloring(
     remaining rounds replay as one exact driver pass (None → module
     default ``_LOCAL_FINISH_ROWS``; 0 forces the distributed rounds,
     used by their equality tests). Identical colors either way."""
-    with iterative_kernel_conf(edges.sparkSession):
-        return _coloring(
-            edges,
-            max_iter,
-            num_partitions,
-            metrics_path,
-            checkpoint_dir,
-            checkpoint_interval,
-            resume,
-            local_finish_rows,
-        )
-
-
-def _coloring(
-    edges: DataFrame,
-    max_iter: int,
-    num_partitions: int | None,
-    metrics_path: str | None,
-    checkpoint_dir: str | None = None,
-    checkpoint_interval: int = 4,
-    resume: bool = False,
-    local_finish_rows: int | None = None,
-) -> DataFrame:
     if local_finish_rows is None:
         local_finish_rows = _LOCAL_FINISH_ROWS
     spark = edges.sparkSession
@@ -208,91 +183,91 @@ def _coloring(
     ).localCheckpoint(eager=True)
     n_active = active.count()
 
-    with shuffle_partitions_conf(spark, num_partitions):
-        for it in range(start_iter + 1, max_iter + 1):
-            if n_active == 0:
+    set_kernel_width(spark, num_partitions)
+    for it in range(start_iter + 1, max_iter + 1):
+        if n_active == 0:
+            break
+        t0 = time.monotonic()
+        if local_finish_rows:
+            inc = e.join(
+                active.select(F.col("vid").alias("src")),
+                "src",
+                "left_semi",
+            )
+            if inc.count() <= local_finish_rows:
+                inc_rows = [
+                    (r["src"], r["dst"]) for r in inc.collect()
+                ]
+                act_vids = [r["vid"] for r in active.collect()]
+                col_rows = [
+                    (r["vid"], r["color"]) for r in colored.collect()
+                ]
+                new = _finish_local_coloring(
+                    inc_rows, act_vids, col_rows, it, max_iter
+                )
+                if new:
+                    colored = colored.unionByName(
+                        spark.createDataFrame(
+                            new,
+                            "vid long, color long, color_round long",
+                        )
+                    ).localCheckpoint(eager=True)
+                metrics.log(
+                    it,
+                    winners=len(new),
+                    active=len(act_vids) - len(new),
+                    endgame=1,
+                    wall_s=round(time.monotonic() - t0, 4),
+                )
+                n_active = 0
                 break
-            t0 = time.monotonic()
-            if local_finish_rows:
-                inc = e.join(
-                    active.select(F.col("vid").alias("src")),
-                    "src",
-                    "left_semi",
-                )
-                if inc.count() <= local_finish_rows:
-                    inc_rows = [
-                        (r["src"], r["dst"]) for r in inc.collect()
-                    ]
-                    act_vids = [r["vid"] for r in active.collect()]
-                    col_rows = [
-                        (r["vid"], r["color"]) for r in colored.collect()
-                    ]
-                    new = _finish_local_coloring(
-                        inc_rows, act_vids, col_rows, it, max_iter
-                    )
-                    if new:
-                        colored = colored.unionByName(
-                            spark.createDataFrame(
-                                new,
-                                "vid long, color long, color_round long",
-                            )
-                        ).localCheckpoint(eager=True)
-                    metrics.log(
-                        it,
-                        winners=len(new),
-                        active=len(act_vids) - len(new),
-                        endgame=1,
-                        wall_s=round(time.monotonic() - t0, 4),
-                    )
-                    n_active = 0
-                    break
-            winners = mis_round_lineage(e, active, it).localCheckpoint(
-                eager=True
+        winners = mis_round_lineage(e, active, it).localCheckpoint(
+            eager=True
+        )
+        # mex over already-colored neighbors of each winner
+        nb_colors = (
+            e.join(
+                winners.select(F.col("vid").alias("src")),
+                "src",
+                "left_semi",
             )
-            # mex over already-colored neighbors of each winner
-            nb_colors = (
-                e.join(
-                    winners.select(F.col("vid").alias("src")),
-                    "src",
-                    "left_semi",
-                )
-                .join(
-                    colored.select(F.col("vid").alias("dst"), "color"),
-                    "dst",
-                )
-                .groupBy("src")
-                .agg(F.sort_array(F.collect_set("color")).alias("cs"))
-                .select(
-                    F.col("src").alias("vid"),
-                    F.expr(_MEX_FOLD).alias("mex"),
-                )
+            .join(
+                colored.select(F.col("vid").alias("dst"), "color"),
+                "dst",
             )
-            won = winners.join(nb_colors, "vid", "left").select(
-                "vid",
-                F.coalesce("mex", F.lit(0)).cast("long").alias("color"),
-                F.lit(it).cast("long").alias("color_round"),
+            .groupBy("src")
+            .agg(F.sort_array(F.collect_set("color")).alias("cs"))
+            .select(
+                F.col("src").alias("vid"),
+                F.expr(_MEX_FOLD).alias("mex"),
             )
-            colored = colored.unionByName(won)
-            colored = colored.repartition(
-                num_partitions, "vid"
-            ).localCheckpoint(eager=True)
-            active = (
-                active.join(winners, "vid", "left_anti")
-                .repartition(num_partitions, "vid")
-                .localCheckpoint(eager=True)
-            )
-            n_next = active.count()
-            metrics.log(
-                it,
-                winners=n_active - n_next,
-                active=n_next,
-                wall_s=round(time.monotonic() - t0, 4),
-            )
-            n_active = n_next
-            if ckpt and (
-                it % checkpoint_interval == 0 or n_active == 0
-            ):
-                ckpt.save(colored, it, {"n_active": n_active})
+        )
+        won = winners.join(nb_colors, "vid", "left").select(
+            "vid",
+            F.coalesce("mex", F.lit(0)).cast("long").alias("color"),
+            F.lit(it).cast("long").alias("color_round"),
+        )
+        colored = colored.unionByName(won)
+        colored = colored.repartition(
+            num_partitions, "vid"
+        ).localCheckpoint(eager=True)
+        active = (
+            active.join(winners, "vid", "left_anti")
+            .repartition(num_partitions, "vid")
+            .localCheckpoint(eager=True)
+        )
+        n_next = active.count()
+        metrics.log(
+            it,
+            winners=n_active - n_next,
+            active=n_next,
+            wall_s=round(time.monotonic() - t0, 4),
+        )
+        n_active = n_next
+        if ckpt and (
+            it % checkpoint_interval == 0 or n_active == 0
+        ):
+            ckpt.save(colored, it, {"n_active": n_active})
 
     return verts.join(colored, "vid", "left").select(
         "vid",

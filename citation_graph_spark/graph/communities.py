@@ -29,12 +29,10 @@ from pyspark.sql import functions as F
 
 from citation_graph_spark.graph.degrees import auto_partitions, undirect
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import (
-    iterative_kernel_conf,
-    shuffle_partitions_conf,
-)
+from citation_graph_spark.session import kernel, set_kernel_width
 
 
+@kernel
 def label_propagation(
     edges: DataFrame,
     vertices: DataFrame | None = None,
@@ -50,20 +48,6 @@ def label_propagation(
     of 1 (weights cast to BIGINT — integer-exact sums keep the argmax
     deterministic cross-engine; same desc-total, asc-label tie-break).
     """
-    with iterative_kernel_conf(edges.sparkSession):
-        return _label_propagation(
-            edges, vertices, max_iter, num_partitions, metrics_path, weighted
-        )
-
-
-def _label_propagation(
-    edges: DataFrame,
-    vertices: DataFrame | None,
-    max_iter: int,
-    num_partitions: int | None,
-    metrics_path: str | None,
-    weighted: bool = False,
-) -> DataFrame:
     spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "label_propagation")
 
@@ -112,38 +96,37 @@ def _label_propagation(
         .localCheckpoint(eager=True)
     )
 
-    # in-loop shuffles run at the kernel's data-proportional width
-    with shuffle_partitions_conf(spark, num_partitions):
-        for it in range(max_iter):
-            t0 = time.monotonic()
-            msg_cols = [F.col("dst"), F.col("label").alias("nbr_label")] + (
-                [F.col("w")] if weighted else []
+    set_kernel_width(spark, num_partitions)
+    for it in range(max_iter):
+        t0 = time.monotonic()
+        msg_cols = [F.col("dst"), F.col("label").alias("nbr_label")] + (
+            [F.col("w")] if weighted else []
+        )
+        msgs = und.join(labels, und["src"] == labels["vid"]).select(*msg_cols)
+        vote = F.sum("w") if weighted else F.count(F.lit(1))
+        counts = msgs.groupBy("dst", "nbr_label").agg(vote.alias("n"))
+        w = Window.partitionBy("dst").orderBy(F.desc("n"), F.asc("nbr_label"))
+        winner = (
+            counts.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .select("dst", F.col("nbr_label").alias("new_label"))
+        )
+        new_labels = (
+            labels.join(winner, labels["vid"] == winner["dst"], "left")
+            .select(
+                labels["vid"],
+                F.coalesce("new_label", labels["label"]).alias("label"),
+                labels["label"].alias("_prev"),
             )
-            msgs = und.join(labels, und["src"] == labels["vid"]).select(*msg_cols)
-            vote = F.sum("w") if weighted else F.count(F.lit(1))
-            counts = msgs.groupBy("dst", "nbr_label").agg(vote.alias("n"))
-            w = Window.partitionBy("dst").orderBy(F.desc("n"), F.asc("nbr_label"))
-            winner = (
-                counts.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .select("dst", F.col("nbr_label").alias("new_label"))
-            )
-            new_labels = (
-                labels.join(winner, labels["vid"] == winner["dst"], "left")
-                .select(
-                    labels["vid"],
-                    F.coalesce("new_label", labels["label"]).alias("label"),
-                    labels["label"].alias("_prev"),
-                )
-                # lazy: the convergence count below materializes the
-                # checkpoint — one Spark job per round, not two
-                .localCheckpoint(eager=False)
-            )
-            changed = new_labels.filter(F.col("label") != F.col("_prev")).count()
-            labels = new_labels.drop("_prev")
-            metrics.log(it + 1, changed=changed, wall_s=round(time.monotonic() - t0, 4))
-            if changed == 0:
-                break
+            # lazy: the convergence count below materializes the
+            # checkpoint — one Spark job per round, not two
+            .localCheckpoint(eager=False)
+        )
+        changed = new_labels.filter(F.col("label") != F.col("_prev")).count()
+        labels = new_labels.drop("_prev")
+        metrics.log(it + 1, changed=changed, wall_s=round(time.monotonic() - t0, 4))
+        if changed == 0:
+            break
 
     und.unpersist()
     return labels.select("vid", "label")

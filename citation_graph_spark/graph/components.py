@@ -30,10 +30,7 @@ from pyspark.sql import functions as F
 from citation_graph_spark.checkpointing import CheckpointManager
 from citation_graph_spark.graph.degrees import auto_partitions, undirect
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import (
-    iterative_kernel_conf,
-    shuffle_partitions_conf,
-)
+from citation_graph_spark.session import kernel, set_kernel_width
 
 
 # Below this many collected edge rows the component computation runs as
@@ -95,6 +92,7 @@ def _local_components(und: DataFrame, vertices: DataFrame) -> DataFrame:
     )
 
 
+@kernel
 def connected_components(
     edges: DataFrame,
     vertices: DataFrame | None = None,
@@ -137,28 +135,6 @@ def connected_components(
     suppressed when ``checkpoint_dir``/``resume`` are set: the star
     variant carries no CheckpointManager, and the durable kill+resume
     contract always wins over the round-count optimization."""
-    with iterative_kernel_conf(edges.sparkSession):
-        return _connected_components(
-            edges, vertices, max_iter, num_partitions, checkpoint_dir,
-            checkpoint_interval, resume, metrics_path, star_contraction,
-            star_threshold, init_labels, local_finish_edges,
-        )
-
-
-def _connected_components(
-    edges: DataFrame,
-    vertices: DataFrame | None,
-    max_iter: int,
-    num_partitions: int | None,
-    checkpoint_dir: str | None,
-    checkpoint_interval: int,
-    resume: bool,
-    metrics_path: str | None,
-    star_contraction: bool | None,
-    star_threshold: int,
-    init_labels: DataFrame | None = None,
-    local_finish_edges: int | None = None,
-) -> DataFrame:
     if local_finish_edges is None:
         local_finish_edges = _LOCAL_FINISH_UND_ROWS
     if star_contraction:
@@ -225,6 +201,7 @@ def _connected_components(
         )
     if num_partitions is None:
         num_partitions = auto_partitions(spark, n_und)
+    set_kernel_width(spark, num_partitions)
     und = und0.repartition(num_partitions, "src").persist()
     und.count()
     und0.unpersist()
@@ -260,33 +237,32 @@ def _connected_components(
                 .localCheckpoint(eager=True)
             )
 
-    with shuffle_partitions_conf(spark, num_partitions):
-        for it in range(start_iter, max_iter):
-            t0 = time.monotonic()
-            msgs = und.join(labels, und["src"] == labels["vid"]).select(
-                F.col("dst"), F.col("label").alias("nbr_label")
+    for it in range(start_iter, max_iter):
+        t0 = time.monotonic()
+        msgs = und.join(labels, und["src"] == labels["vid"]).select(
+            F.col("dst"), F.col("label").alias("nbr_label")
+        )
+        nbr_min = msgs.groupBy("dst").agg(F.min("nbr_label").alias("nbr_min"))
+        new_labels = (
+            labels.join(nbr_min, labels["vid"] == nbr_min["dst"], "left")
+            .select(
+                labels["vid"],
+                F.least(
+                    labels["label"], F.coalesce("nbr_min", labels["label"])
+                ).alias("label"),
+                labels["label"].alias("_prev"),
             )
-            nbr_min = msgs.groupBy("dst").agg(F.min("nbr_label").alias("nbr_min"))
-            new_labels = (
-                labels.join(nbr_min, labels["vid"] == nbr_min["dst"], "left")
-                .select(
-                    labels["vid"],
-                    F.least(
-                        labels["label"], F.coalesce("nbr_min", labels["label"])
-                    ).alias("label"),
-                    labels["label"].alias("_prev"),
-                )
-                # lazy: the convergence count below materializes the
-                # checkpoint — one Spark job per round, not two
-                .localCheckpoint(eager=False)
-            )
-            changed = new_labels.filter(F.col("label") != F.col("_prev")).count()
-            labels = new_labels.drop("_prev")
-            metrics.log(it + 1, changed=changed, wall_s=round(time.monotonic() - t0, 4))
-            if ckpt and ((it + 1) % checkpoint_interval == 0):
-                ckpt.save(labels, it + 1, {"changed": changed})
-            if changed == 0:
-                break
+            # lazy: the convergence count below materializes the
+            # checkpoint — one Spark job per round, not two
+            .localCheckpoint(eager=False)
+        )
+        changed = new_labels.filter(F.col("label") != F.col("_prev")).count()
+        labels = new_labels.drop("_prev")
+        metrics.log(it + 1, changed=changed, wall_s=round(time.monotonic() - t0, 4))
+        if ckpt and ((it + 1) % checkpoint_interval == 0):
+            ckpt.save(labels, it + 1, {"changed": changed})
+        if changed == 0:
+            break
 
     if ckpt:
         ckpt.save(labels, it + 1, {"changed": changed, "converged": changed == 0})
@@ -332,6 +308,7 @@ def _star_components(
             vertices,
         ).localCheckpoint(eager=True)
     num_partitions = auto_partitions(spark, n_e)
+    set_kernel_width(spark, num_partitions)
 
     # Each round SELF-JOINS the evolving edge list twice (nbrs with its
     # own groupBy-min), which SQUARES Catalyst's sizeInBytes estimate —
@@ -344,53 +321,52 @@ def _star_components(
     # stay bounded; caches are freed after the loop — the checkpoint
     # underneath keeps the final edge list recomputable.
     handles = []
-    with shuffle_partitions_conf(spark, num_partitions):
-        for it in range(max_iter):
-            t0 = time.monotonic()
-            # large-star: γ(u) ∪ {u} grouped by u → link every w > u to min
-            nbrs = e.unionByName(
-                e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-            )
-            with_min = nbrs.join(
-                nbrs.groupBy("u").agg(F.min("v").alias("m")), "u"
-            ).withColumn("m", F.least("m", "u"))
-            large = (
-                with_min.filter(F.col("v") > F.col("u"))
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .filter(F.col("u") != F.col("v"))
-                .distinct()
-            )
-            # small-star on the result
-            nbrs2 = large.unionByName(
-                large.select(F.col("v").alias("u"), F.col("u").alias("v"))
-            ).filter(F.col("u") > F.col("v"))
-            with_min2 = nbrs2.join(
-                nbrs2.groupBy("u").agg(F.min("v").alias("m")), "u"
-            )
-            small = (
-                with_min2.select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .unionByName(with_min2.select(F.col("u"), F.col("m").alias("v")))
-                .filter(F.col("u") != F.col("v"))
-                .distinct()
-                # lazy: the star-forest check below materializes it
-                .localCheckpoint(eager=False)
-                .persist()
-            )
-            handles.append(small)
-            # converged when small-star output is stable star forest:
-            # every u appears with exactly one v and v is a root (not a
-            # u); this count also materializes small's checkpoint + cache
-            non_star = (
-                small.alias("a")
-                .join(small.alias("b"), F.col("a.v") == F.col("b.u"), "left_semi")
-                .count()
-            )
-            e = small
-            metrics.log(
-                it + 1, non_star=non_star, wall_s=round(time.monotonic() - t0, 4)
-            )
-            if non_star == 0:
-                break
+    for it in range(max_iter):
+        t0 = time.monotonic()
+        # large-star: γ(u) ∪ {u} grouped by u → link every w > u to min
+        nbrs = e.unionByName(
+            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        )
+        with_min = nbrs.join(
+            nbrs.groupBy("u").agg(F.min("v").alias("m")), "u"
+        ).withColumn("m", F.least("m", "u"))
+        large = (
+            with_min.filter(F.col("v") > F.col("u"))
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .filter(F.col("u") != F.col("v"))
+            .distinct()
+        )
+        # small-star on the result
+        nbrs2 = large.unionByName(
+            large.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        ).filter(F.col("u") > F.col("v"))
+        with_min2 = nbrs2.join(
+            nbrs2.groupBy("u").agg(F.min("v").alias("m")), "u"
+        )
+        small = (
+            with_min2.select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .unionByName(with_min2.select(F.col("u"), F.col("m").alias("v")))
+            .filter(F.col("u") != F.col("v"))
+            .distinct()
+            # lazy: the star-forest check below materializes it
+            .localCheckpoint(eager=False)
+            .persist()
+        )
+        handles.append(small)
+        # converged when small-star output is stable star forest:
+        # every u appears with exactly one v and v is a root (not a
+        # u); this count also materializes small's checkpoint + cache
+        non_star = (
+            small.alias("a")
+            .join(small.alias("b"), F.col("a.v") == F.col("b.u"), "left_semi")
+            .count()
+        )
+        e = small
+        metrics.log(
+            it + 1, non_star=non_star, wall_s=round(time.monotonic() - t0, 4)
+        )
+        if non_star == 0:
+            break
     for h in handles:
         h.unpersist()
 
@@ -398,4 +374,5 @@ def _star_components(
     return (
         vertices.join(comp, "vid", "left")
         .select("vid", F.coalesce("component", "vid").alias("component"))
+        .localCheckpoint(eager=True)
     )

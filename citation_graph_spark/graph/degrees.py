@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from citation_graph_spark.session import session_width
+
 
 def auto_partitions(
     spark: SparkSession,
@@ -24,10 +26,9 @@ def auto_partitions(
     a 20k-edge fixture graph over 32 partitions pays 32 task launches
     per round for microseconds of work each, while a 10^11-edge graph
     needs far more than the session default. Cap at the session setting
-    (the cluster's parallelism), floor at a small constant, target
+    (the cluster's parallelism; not a running kernel's width), floor at a small constant, target
     ``rows_per_partition`` messages per task."""
-    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return max(floor, min(cap, n_rows // rows_per_partition + 1))
+    return max(floor, min(session_width(spark), n_rows // rows_per_partition + 1))
 
 
 def out_degrees(edges: DataFrame, weighted: bool = True) -> DataFrame:

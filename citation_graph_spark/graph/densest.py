@@ -33,10 +33,7 @@ from pyspark.sql import functions as F
 
 from citation_graph_spark.graph.degrees import auto_partitions, undirect
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import (
-    iterative_kernel_conf,
-    shuffle_partitions_conf,
-)
+from citation_graph_spark.session import kernel, set_kernel_width
 
 # eps = 1/10: keep v iff EPS_NUM * deg(v) * V > EPS_DEN * E_sym,
 # i.e. deg(v) > 2(1+eps) * |E|/|V|  with  2(1+eps) = 22/10 = EPS_DEN/EPS_NUM
@@ -58,6 +55,7 @@ def peel_round_lineage(
     )
 
 
+@kernel
 def densest_subgraph_rounds(
     edges: DataFrame,
     max_iter: int = 100,
@@ -71,8 +69,7 @@ def densest_subgraph_rounds(
     maximum density — the 2(1+eps)-approximate densest subgraph is the
     survivor set entering that round (see
     :func:`densest_subgraph_vertices`)."""
-    with iterative_kernel_conf(edges.sparkSession):
-        rows, _ = _peel(edges, max_iter, num_partitions, metrics_path, None)
+    rows, _ = _peel(edges, max_iter, num_partitions, metrics_path, None)
     spark = edges.sparkSession
     best_density = max(r[3] for r in rows)
     best_round = min(r[0] for r in rows if r[3] == best_density)
@@ -84,6 +81,7 @@ def densest_subgraph_rounds(
     )
 
 
+@kernel
 def densest_subgraph_vertices(
     edges: DataFrame,
     max_iter: int = 100,
@@ -92,10 +90,9 @@ def densest_subgraph_vertices(
 ) -> DataFrame:
     """Returns ``(vid: long)`` — the survivor set at the best-density
     round (the 2(1+eps)-approximate densest subgraph)."""
-    with iterative_kernel_conf(edges.sparkSession):
-        rows, snapshots = _peel(
-            edges, max_iter, num_partitions, metrics_path, keep_snapshots=True
-        )
+    rows, snapshots = _peel(
+        edges, max_iter, num_partitions, metrics_path, keep_snapshots=True
+    )
     best_density = max(r[3] for r in rows)
     best_round = min(r[0] for r in rows if r[3] == best_density)
     return snapshots[best_round]
@@ -122,34 +119,34 @@ def _peel(
 
     rows: list[tuple[int, int, int, int]] = []
     snapshots: dict[int, DataFrame] = {}
-    with shuffle_partitions_conf(spark, num_partitions):
-        for it in range(1, max_iter + 1):
-            t0 = time.monotonic()
-            # the round's one aggregation: surviving degree + V in one pass
-            deg = alive.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-            deg = deg.localCheckpoint(eager=True)
-            n_v = deg.count()
-            if n_v == 0:
-                break
-            n_sym = alive.count()
-            density_micro = 1_000_000 * (n_sym // 2) // n_v
-            rows.append((it, n_v, n_sym // 2, density_micro))
-            if keep_snapshots:
-                snapshots[it] = deg.select(F.col("src").alias("vid"))
-            # keep v iff 10*deg*V > 11*E_sym — pure int64, oracle-identical
-            alive = (
-                peel_round_lineage(alive, deg, n_v, n_sym)
-                .repartition(num_partitions, "src")
-                .localCheckpoint(eager=True)
-            )
-            n_next = alive.count()
-            metrics.log(
-                it,
-                vertices=n_v,
-                sym_edges=n_sym,
-                density_micro=density_micro,
-                wall_s=round(time.monotonic() - t0, 4),
-            )
-            if n_next == 0:
-                break
+    set_kernel_width(spark, num_partitions)
+    for it in range(1, max_iter + 1):
+        t0 = time.monotonic()
+        # the round's one aggregation: surviving degree + V in one pass
+        deg = alive.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+        deg = deg.localCheckpoint(eager=True)
+        n_v = deg.count()
+        if n_v == 0:
+            break
+        n_sym = alive.count()
+        density_micro = 1_000_000 * (n_sym // 2) // n_v
+        rows.append((it, n_v, n_sym // 2, density_micro))
+        if keep_snapshots:
+            snapshots[it] = deg.select(F.col("src").alias("vid"))
+        # keep v iff 10*deg*V > 11*E_sym — pure int64, oracle-identical
+        alive = (
+            peel_round_lineage(alive, deg, n_v, n_sym)
+            .repartition(num_partitions, "src")
+            .localCheckpoint(eager=True)
+        )
+        n_next = alive.count()
+        metrics.log(
+            it,
+            vertices=n_v,
+            sym_edges=n_sym,
+            density_micro=density_micro,
+            wall_s=round(time.monotonic() - t0, 4),
+        )
+        if n_next == 0:
+            break
     return rows, snapshots

@@ -51,10 +51,7 @@ from pyspark.sql import functions as F
 from citation_graph_spark.checkpointing import CheckpointManager
 from citation_graph_spark.graph.degrees import auto_partitions, undirect
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import (
-    iterative_kernel_conf,
-    shuffle_partitions_conf,
-)
+from citation_graph_spark.session import kernel, set_kernel_width
 
 EV_SCALE = 1000000
 
@@ -75,6 +72,7 @@ def eigenvector_round_lineage(sym2: DataFrame, x: DataFrame) -> DataFrame:
     )
 
 
+@kernel
 def eigenvector_centrality(
     edges: DataFrame,
     max_iter: int = 10,
@@ -94,76 +92,75 @@ def eigenvector_centrality(
     bit-identical final scores — the state is int64, so the parquet
     round-trip is exact by construction (stronger than the
     double-precision kernels' IEEE-round-trip argument)."""
-    with iterative_kernel_conf(edges.sparkSession):
-        spark = edges.sparkSession
-        metrics = MetricsLogger(metrics_path, "eigenvector")
-        ckpt = (
-            CheckpointManager(checkpoint_dir, "eigenvector")
-            if checkpoint_dir
-            else None
+    spark = edges.sparkSession
+    metrics = MetricsLogger(metrics_path, "eigenvector")
+    ckpt = (
+        CheckpointManager(checkpoint_dir, "eigenvector")
+        if checkpoint_dir
+        else None
+    )
+    sym = undirect(edges.select("src", "dst"))
+    verts = sym.select(F.col("src").alias("vid")).distinct()
+    sym2 = sym.unionByName(
+        verts.select(
+            F.col("vid").alias("src"), F.col("vid").alias("dst")
         )
-        sym = undirect(edges.select("src", "dst"))
-        verts = sym.select(F.col("src").alias("vid")).distinct()
-        sym2 = sym.unionByName(
-            verts.select(
-                F.col("vid").alias("src"), F.col("vid").alias("dst")
-            )
-        ).persist()
-        n_edges = sym2.count()
-        if num_partitions is None:
-            num_partitions = auto_partitions(spark, n_edges)
+    ).persist()
+    n_edges = sym2.count()
+    if num_partitions is None:
+        num_partitions = auto_partitions(spark, n_edges)
 
-        start_iter = 0
-        x = None
-        if ckpt and resume:
-            loaded = ckpt.load(spark)
-            if loaded is not None:
-                saved, manifest = loaded
-                start_iter = manifest["iteration"]
-                x = (
-                    saved.select("vid", "x")
-                    .repartition(num_partitions, "vid")
-                    .localCheckpoint(eager=True)
-                )
-                if start_iter >= max_iter:
-                    sym2.unpersist()
-                    return x.select("vid", F.col("x").alias("score_ppm"))
-        if x is None:
+    start_iter = 0
+    x = None
+    if ckpt and resume:
+        loaded = ckpt.load(spark)
+        if loaded is not None:
+            saved, manifest = loaded
+            start_iter = manifest["iteration"]
             x = (
-                verts.select(
-                    "vid", F.lit(EV_SCALE).cast("long").alias("x")
-                )
+                saved.select("vid", "x")
                 .repartition(num_partitions, "vid")
                 .localCheckpoint(eager=True)
             )
+            if start_iter >= max_iter:
+                sym2.unpersist()
+                return x.select("vid", F.col("x").alias("score_ppm"))
+    if x is None:
+        x = (
+            verts.select(
+                "vid", F.lit(EV_SCALE).cast("long").alias("x")
+            )
+            .repartition(num_partitions, "vid")
+            .localCheckpoint(eager=True)
+        )
 
-        with shuffle_partitions_conf(spark, num_partitions):
-            for it in range(start_iter + 1, max_iter + 1):
-                t0 = time.monotonic()
-                y = eigenvector_round_lineage(sym2, x)
-                m = y.agg(F.max("y")).first()[0]  # scalar-only collect
-                if not m:  # edgeless graph: all mass is gone, stop
-                    sym2.unpersist()
-                    return x.select(
-                        "vid", F.lit(0).cast("long").alias("score_ppm")
-                    )
-                x = (
-                    y.select(
-                        "vid",
-                        F.expr(f"div(y * {EV_SCALE}, {m})").alias("x"),
-                    )
-                    .repartition(num_partitions, "vid")
-                    .localCheckpoint(eager=True)
-                )
-                metrics.log(
-                    it,
-                    wall_s=round(time.monotonic() - t0, 4),
-                    msgs=n_edges,
-                    max_y=int(m),
-                )
-                if ckpt and (
-                    it % checkpoint_interval == 0 or it == max_iter
-                ):
-                    ckpt.save(x, it, meta={"max_iter": max_iter})
-        sym2.unpersist()
-        return x.select("vid", F.col("x").alias("score_ppm"))
+    set_kernel_width(spark, num_partitions)
+    for it in range(start_iter + 1, max_iter + 1):
+        t0 = time.monotonic()
+        y = eigenvector_round_lineage(sym2, x)
+        m = y.agg(F.max("y")).first()[0]  # scalar-only collect
+        if not m:  # edgeless graph: all mass is gone, stop
+            sym2.unpersist()
+            return x.select(
+                "vid", F.lit(0).cast("long").alias("score_ppm")
+            )
+        x = (
+            y.select(
+                "vid",
+                F.expr(f"div(y * {EV_SCALE}, {m})").alias("x"),
+            )
+            .repartition(num_partitions, "vid")
+            .localCheckpoint(eager=True)
+        )
+        metrics.log(
+            it,
+            wall_s=round(time.monotonic() - t0, 4),
+            msgs=n_edges,
+            max_y=int(m),
+        )
+        if ckpt and (
+            it % checkpoint_interval == 0 or it == max_iter
+        ):
+            ckpt.save(x, it, meta={"max_iter": max_iter})
+    sym2.unpersist()
+    return x.select("vid", F.col("x").alias("score_ppm"))

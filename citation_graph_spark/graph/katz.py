@@ -38,10 +38,7 @@ from pyspark.sql import functions as F
 from citation_graph_spark.checkpointing import CheckpointManager
 from citation_graph_spark.graph.degrees import auto_partitions
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import (
-    iterative_kernel_conf,
-    shuffle_partitions_conf,
-)
+from citation_graph_spark.session import kernel, set_kernel_width
 
 
 def round_lineage(
@@ -70,6 +67,7 @@ def round_lineage(
     )
 
 
+@kernel
 def katz_centrality(
     edges: DataFrame,
     vertices: DataFrame | None = None,
@@ -91,25 +89,6 @@ def katz_centrality(
     ``resume=True`` continues from the newest snapshot — bit-identical
     final scores (doubles round-trip parquet exactly; the resumed run
     replays the identical remaining schedule)."""
-    with iterative_kernel_conf(edges.sparkSession):
-        return _katz(
-            edges, vertices, alpha, beta, max_iter, num_partitions,
-            metrics_path, checkpoint_dir, checkpoint_interval, resume,
-        )
-
-
-def _katz(
-    edges: DataFrame,
-    vertices: DataFrame | None,
-    alpha: float,
-    beta: float,
-    max_iter: int,
-    num_partitions: int | None,
-    metrics_path: str | None,
-    checkpoint_dir: str | None = None,
-    checkpoint_interval: int = 4,
-    resume: bool = False,
-) -> DataFrame:
     spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "katz")
     ckpt = CheckpointManager(checkpoint_dir, "katz") if checkpoint_dir else None
@@ -155,22 +134,22 @@ def _katz(
             .localCheckpoint(eager=True)
         )
 
-    with shuffle_partitions_conf(spark, num_partitions):
-        for it in range(start_iter + 1, max_iter + 1):
-            t0 = time.monotonic()
-            state = (
-                round_lineage(e, state, alpha, beta)
-                .repartition(num_partitions, "vid")
-                .localCheckpoint(eager=True)
+    set_kernel_width(spark, num_partitions)
+    for it in range(start_iter + 1, max_iter + 1):
+        t0 = time.monotonic()
+        state = (
+            round_lineage(e, state, alpha, beta)
+            .repartition(num_partitions, "vid")
+            .localCheckpoint(eager=True)
+        )
+        metrics.log(
+            it, wall_s=round(time.monotonic() - t0, 4), msgs=n_edges
+        )
+        if ckpt and (it % checkpoint_interval == 0 or it == max_iter):
+            ckpt.save(
+                state, it,
+                meta={"alpha": alpha, "beta": beta, "max_iter": max_iter},
             )
-            metrics.log(
-                it, wall_s=round(time.monotonic() - t0, 4), msgs=n_edges
-            )
-            if ckpt and (it % checkpoint_interval == 0 or it == max_iter):
-                ckpt.save(
-                    state, it,
-                    meta={"alpha": alpha, "beta": beta, "max_iter": max_iter},
-                )
 
     e.unpersist()
     return state.select("vid", F.col("x").alias("score"))

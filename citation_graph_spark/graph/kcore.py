@@ -32,12 +32,10 @@ from pyspark.sql import functions as F
 
 from citation_graph_spark.graph.degrees import auto_partitions, undirect
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import (
-    iterative_kernel_conf,
-    shuffle_partitions_conf,
-)
+from citation_graph_spark.session import kernel, set_kernel_width
 
 
+@kernel
 def k_core(
     edges: DataFrame,
     k: int,
@@ -50,17 +48,6 @@ def k_core(
     remove-all-below-k rounds. ``max_iter`` caps the rounds; with a cap
     the result is the (still well-defined) state after exactly that
     many synchronous peels, which the SQL oracle mirrors."""
-    with iterative_kernel_conf(edges.sparkSession):
-        return _k_core(edges, k, max_iter, num_partitions, metrics_path)
-
-
-def _k_core(
-    edges: DataFrame,
-    k: int,
-    max_iter: int,
-    num_partitions: int | None,
-    metrics_path: str | None,
-) -> DataFrame:
     spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "k_core")
 
@@ -80,33 +67,32 @@ def _k_core(
     )
     n_alive = alive.count()
 
-    # in-loop shuffles run at the kernel's data-proportional width
-    with shuffle_partitions_conf(spark, num_partitions):
-        for it in range(1, max_iter + 1):
-            t0 = time.monotonic()
-            # edges whose BOTH endpoints survive, then surviving degree
-            e_alive = e.join(
-                alive.select(F.col("vid").alias("src")), "src", "left_semi"
-            ).join(alive.select(F.col("vid").alias("dst")), "dst", "left_semi")
-            survivors = (
-                e_alive.groupBy("src")
-                .agg(F.count(F.lit(1)).alias("deg"))
-                .filter(F.col("deg") >= k)
-                .select(F.col("src").alias("vid"))
-                .repartition(num_partitions, "vid")
-                .localCheckpoint(eager=True)
-            )
-            n_new = survivors.count()
-            metrics.log(
-                it,
-                alive=n_new,
-                dropped=n_alive - n_new,
-                wall_s=round(time.monotonic() - t0, 4),
-            )
-            converged = n_new == n_alive
-            alive, n_alive = survivors, n_new
-            if converged or n_alive == 0:
-                break
+    set_kernel_width(spark, num_partitions)
+    for it in range(1, max_iter + 1):
+        t0 = time.monotonic()
+        # edges whose BOTH endpoints survive, then surviving degree
+        e_alive = e.join(
+            alive.select(F.col("vid").alias("src")), "src", "left_semi"
+        ).join(alive.select(F.col("vid").alias("dst")), "dst", "left_semi")
+        survivors = (
+            e_alive.groupBy("src")
+            .agg(F.count(F.lit(1)).alias("deg"))
+            .filter(F.col("deg") >= k)
+            .select(F.col("src").alias("vid"))
+            .repartition(num_partitions, "vid")
+            .localCheckpoint(eager=True)
+        )
+        n_new = survivors.count()
+        metrics.log(
+            it,
+            alive=n_new,
+            dropped=n_alive - n_new,
+            wall_s=round(time.monotonic() - t0, 4),
+        )
+        converged = n_new == n_alive
+        alive, n_alive = survivors, n_new
+        if converged or n_alive == 0:
+            break
 
     e.unpersist()
     return alive

@@ -40,10 +40,7 @@ from pyspark.sql import functions as F
 from citation_graph_spark.graph.degrees import auto_partitions
 from citation_graph_spark.graph.triangles import oriented_edges
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import (
-    iterative_kernel_conf,
-    shuffle_partitions_conf,
-)
+from citation_graph_spark.session import kernel, set_kernel_width
 
 
 def _support_from_oriented(o: DataFrame) -> DataFrame:
@@ -90,6 +87,7 @@ def _support_from_oriented(o: DataFrame) -> DataFrame:
     return sides.groupBy("a", "b").agg(F.count(F.lit(1)).alias("support"))
 
 
+@kernel
 def k_truss(
     edges: DataFrame,
     k: int,
@@ -105,17 +103,6 @@ def k_truss(
     that many synchronous peels, which the SQL oracle mirrors."""
     if k < 3:
         raise ValueError(f"k-truss needs k >= 3, got {k}")
-    with iterative_kernel_conf(edges.sparkSession):
-        return _k_truss(edges, k, max_iter, num_partitions, metrics_path)
-
-
-def _k_truss(
-    edges: DataFrame,
-    k: int,
-    max_iter: int,
-    num_partitions: int | None,
-    metrics_path: str | None,
-) -> DataFrame:
     spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "k_truss")
 
@@ -135,28 +122,28 @@ def _k_truss(
     canon.unpersist()
     n_alive = alive.count()
 
-    with shuffle_partitions_conf(spark, num_partitions):
-        for it in range(1, max_iter + 1):
-            t0 = time.monotonic()
-            survivors = (
-                _edge_support(alive, num_partitions)
-                .filter(F.col("support") >= k - 2)
-                .repartition(num_partitions, "a")
-                .localCheckpoint(eager=True)
-            )
-            n_new = survivors.count()
-            metrics.log(
-                it,
-                edges=n_new,
-                dropped=n_alive - n_new,
-                wall_s=round(time.monotonic() - t0, 4),
-            )
-            converged = n_new == n_alive
-            alive, n_alive = survivors.select("a", "b"), n_new
-            if converged or n_alive == 0:
-                # converged: this round's support is the fixpoint
-                # support — reuse it instead of one more enumeration
-                return survivors.select("a", "b", "support")
+    set_kernel_width(spark, num_partitions)
+    for it in range(1, max_iter + 1):
+        t0 = time.monotonic()
+        survivors = (
+            _edge_support(alive, num_partitions)
+            .filter(F.col("support") >= k - 2)
+            .repartition(num_partitions, "a")
+            .localCheckpoint(eager=True)
+        )
+        n_new = survivors.count()
+        metrics.log(
+            it,
+            edges=n_new,
+            dropped=n_alive - n_new,
+            wall_s=round(time.monotonic() - t0, 4),
+        )
+        converged = n_new == n_alive
+        alive, n_alive = survivors.select("a", "b"), n_new
+        if converged or n_alive == 0:
+            # converged: this round's support is the fixpoint
+            # support — reuse it instead of one more enumeration
+            return survivors.select("a", "b", "support")
 
     # round cap hit: report the capped state with its support
     return (

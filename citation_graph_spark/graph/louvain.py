@@ -46,10 +46,7 @@ from pyspark.sql.window import Window
 from citation_graph_spark.checkpointing import CheckpointManager
 from citation_graph_spark.graph.degrees import auto_partitions, undirect
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import (
-    iterative_kernel_conf,
-    shuffle_partitions_conf,
-)
+from citation_graph_spark.session import kernel, set_kernel_width
 
 
 def louvain_round_lineage(
@@ -122,6 +119,7 @@ def louvain_round_lineage(
     )
 
 
+@kernel
 def louvain_local_moves(
     edges: DataFrame,
     rounds: int = 2,
@@ -141,76 +139,76 @@ def louvain_local_moves(
     newest snapshot. Community ids are integers, so the round-trip is
     exact and the resumed fixpoint is bit-identical.
     """
-    with iterative_kernel_conf(edges.sparkSession):
-        spark = edges.sparkSession
-        e = (
-            edges.select("src", "dst")
-            .filter(F.col("src") != F.col("dst"))
-            .select(
-                F.least("src", "dst").alias("src"),
-                F.greatest("src", "dst").alias("dst"),
+    spark = edges.sparkSession
+    e = (
+        edges.select("src", "dst")
+        .filter(F.col("src") != F.col("dst"))
+        .select(
+            F.least("src", "dst").alias("src"),
+            F.greatest("src", "dst").alias("dst"),
+        )
+        .distinct()
+        .persist()
+    )
+    m = e.count()
+    if num_partitions is None:
+        num_partitions = auto_partitions(spark, m)
+    sym = undirect(e).persist()
+    deg = (
+        sym.groupBy(F.col("src").alias("vid"))
+        .agg(F.count(F.lit(1)).alias("d"))
+        .repartition(num_partitions, "vid")
+        .persist()
+    )
+    deg.count()
+
+    metrics = MetricsLogger(metrics_path, "louvain")
+    ckpt = (
+        CheckpointManager(checkpoint_dir, "louvain")
+        if checkpoint_dir
+        else None
+    )
+    start_round = 0
+    comm = None
+    if ckpt and resume:
+        loaded = ckpt.load(spark)
+        if loaded is not None:
+            saved, manifest = loaded
+            start_round = manifest["iteration"]
+            comm = (
+                saved.select("vid", "community")
+                .repartition(num_partitions, "vid")
+                .localCheckpoint(eager=True)
             )
-            .distinct()
-            .persist()
-        )
-        m = e.count()
-        if num_partitions is None:
-            num_partitions = auto_partitions(spark, m)
-        sym = undirect(e).persist()
-        deg = (
-            sym.groupBy(F.col("src").alias("vid"))
-            .agg(F.count(F.lit(1)).alias("d"))
+            if start_round >= rounds:
+                e.unpersist()
+                sym.unpersist()
+                deg.unpersist()
+                return comm
+    if comm is None:
+        comm = deg.select("vid", F.col("vid").alias("community"))
+    set_kernel_width(spark, num_partitions)
+    for it in range(start_round + 1, rounds + 1):
+        t0 = time.monotonic()
+        comm = (
+            louvain_round_lineage(sym, deg, comm, m)
             .repartition(num_partitions, "vid")
-            .persist()
+            .localCheckpoint(eager=True)
         )
-        deg.count()
-
-        metrics = MetricsLogger(metrics_path, "louvain")
-        ckpt = (
-            CheckpointManager(checkpoint_dir, "louvain")
-            if checkpoint_dir
-            else None
+        metrics.log(
+            it, wall_s=round(time.monotonic() - t0, 4), msgs=2 * m
         )
-        start_round = 0
-        comm = None
-        if ckpt and resume:
-            loaded = ckpt.load(spark)
-            if loaded is not None:
-                saved, manifest = loaded
-                start_round = manifest["iteration"]
-                comm = (
-                    saved.select("vid", "community")
-                    .repartition(num_partitions, "vid")
-                    .localCheckpoint(eager=True)
-                )
-                if start_round >= rounds:
-                    e.unpersist()
-                    sym.unpersist()
-                    deg.unpersist()
-                    return comm
-        if comm is None:
-            comm = deg.select("vid", F.col("vid").alias("community"))
-        with shuffle_partitions_conf(spark, num_partitions):
-            for it in range(start_round + 1, rounds + 1):
-                t0 = time.monotonic()
-                comm = (
-                    louvain_round_lineage(sym, deg, comm, m)
-                    .repartition(num_partitions, "vid")
-                    .localCheckpoint(eager=True)
-                )
-                metrics.log(
-                    it, wall_s=round(time.monotonic() - t0, 4), msgs=2 * m
-                )
-                if ckpt and (
-                    it % checkpoint_interval == 0 or it == rounds
-                ):
-                    ckpt.save(comm, it, meta={"rounds": rounds, "m": m})
-        e.unpersist()
-        sym.unpersist()
-        deg.unpersist()
-        return comm
+        if ckpt and (
+            it % checkpoint_interval == 0 or it == rounds
+        ):
+            ckpt.save(comm, it, meta={"rounds": rounds, "m": m})
+    e.unpersist()
+    sym.unpersist()
+    deg.unpersist()
+    return comm
 
 
+@kernel
 def louvain_local_moves_weighted(
     wedges: DataFrame,
     self_weights: DataFrame | None = None,
@@ -230,60 +228,59 @@ def louvain_local_moves_weighted(
 
     ``wedges``: (src, dst, w) — undirected, one row per unordered pair
     (src < dst), no self rows. Returns (vid, community)."""
-    with iterative_kernel_conf(wedges.sparkSession):
-        spark = wedges.sparkSession
-        e = (
-            wedges.select("src", "dst", F.col("w").cast("long").alias("w"))
-            .filter(F.col("src") != F.col("dst"))
-            .persist()
+    spark = wedges.sparkSession
+    e = (
+        wedges.select("src", "dst", F.col("w").cast("long").alias("w"))
+        .filter(F.col("src") != F.col("dst"))
+        .persist()
+    )
+    n_e = e.count()
+    if num_partitions is None:
+        num_partitions = auto_partitions(spark, n_e)
+    sym = e.unionByName(
+        e.select(
+            F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
         )
-        n_e = e.count()
-        if num_partitions is None:
-            num_partitions = auto_partitions(spark, n_e)
-        sym = e.unionByName(
-            e.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
-            )
-        ).persist()
-        wdeg = sym.groupBy(F.col("src").alias("vid")).agg(
-            F.sum("w").alias("dw")
+    ).persist()
+    wdeg = sym.groupBy(F.col("src").alias("vid")).agg(
+        F.sum("w").alias("dw")
+    )
+    sw = (
+        self_weights.select(
+            "vid", F.col("sw").cast("long").alias("sw")
         )
-        sw = (
-            self_weights.select(
-                "vid", F.col("sw").cast("long").alias("sw")
-            )
-            if self_weights is not None
-            else spark.createDataFrame([], "vid long, sw long")
+        if self_weights is not None
+        else spark.createDataFrame([], "vid long, sw long")
+    )
+    deg = (
+        sw.join(wdeg, "vid", "full")
+        .select(
+            "vid",
+            (
+                F.coalesce("dw", F.lit(0)) + F.coalesce("sw", F.lit(0))
+            ).alias("d"),
         )
-        deg = (
-            sw.join(wdeg, "vid", "full")
-            .select(
-                "vid",
-                (
-                    F.coalesce("dw", F.lit(0)) + F.coalesce("sw", F.lit(0))
-                ).alias("d"),
-            )
+        .repartition(num_partitions, "vid")
+        .persist()
+    )
+    total_vol = deg.agg(F.sum("d")).first()[0] or 0
+    assert total_vol % 2 == 0, "self_weights must use the 2x convention"
+    metrics = MetricsLogger(metrics_path, "louvain_weighted")
+    comm = deg.select("vid", F.col("vid").alias("community"))
+    set_kernel_width(spark, num_partitions)
+    for it in range(1, rounds + 1):
+        t0 = time.monotonic()
+        comm = (
+            louvain_round_lineage(sym, deg, comm, total_vol // 2)
             .repartition(num_partitions, "vid")
-            .persist()
+            .localCheckpoint(eager=True)
         )
-        total_vol = deg.agg(F.sum("d")).first()[0] or 0
-        assert total_vol % 2 == 0, "self_weights must use the 2x convention"
-        metrics = MetricsLogger(metrics_path, "louvain_weighted")
-        comm = deg.select("vid", F.col("vid").alias("community"))
-        with shuffle_partitions_conf(spark, num_partitions):
-            for it in range(1, rounds + 1):
-                t0 = time.monotonic()
-                comm = (
-                    louvain_round_lineage(sym, deg, comm, total_vol // 2)
-                    .repartition(num_partitions, "vid")
-                    .localCheckpoint(eager=True)
-                )
-                metrics.log(
-                    it,
-                    wall_s=round(time.monotonic() - t0, 4),
-                    msgs=total_vol,
-                )
-        e.unpersist()
-        sym.unpersist()
-        deg.unpersist()
-        return comm
+        metrics.log(
+            it,
+            wall_s=round(time.monotonic() - t0, 4),
+            msgs=total_vol,
+        )
+    e.unpersist()
+    sym.unpersist()
+    deg.unpersist()
+    return comm

@@ -50,10 +50,7 @@ from pyspark.sql import functions as F
 from citation_graph_spark.checkpointing import CheckpointManager
 from citation_graph_spark.graph.degrees import auto_partitions, undirect
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import (
-    iterative_kernel_conf,
-    shuffle_partitions_conf,
-)
+from citation_graph_spark.session import kernel, set_kernel_width
 
 _P = 2147483647
 _EID_S = 2147483648  # 2^31: eid = a * 2^31 + b, injective for vid < 2^31
@@ -130,6 +127,7 @@ def matching_round_lineage(act: DataFrame, it: int) -> DataFrame:
     )
 
 
+@kernel
 def maximal_matching(
     edges: DataFrame,
     max_iter: int = 100,
@@ -158,29 +156,6 @@ def maximal_matching(
     remaining rounds replay as one exact driver pass (None → module
     default ``_LOCAL_FINISH_ROWS``; 0 forces the distributed rounds,
     used by their equality tests). Identical matching either way."""
-    with iterative_kernel_conf(edges.sparkSession):
-        return _matching(
-            edges,
-            max_iter,
-            num_partitions,
-            metrics_path,
-            checkpoint_dir,
-            checkpoint_interval,
-            resume,
-            local_finish_rows,
-        )
-
-
-def _matching(
-    edges: DataFrame,
-    max_iter: int,
-    num_partitions: int | None,
-    metrics_path: str | None,
-    checkpoint_dir: str | None = None,
-    checkpoint_interval: int = 4,
-    resume: bool = False,
-    local_finish_rows: int | None = None,
-) -> DataFrame:
     if local_finish_rows is None:
         local_finish_rows = _LOCAL_FINISH_ROWS
     spark = edges.sparkSession
@@ -235,63 +210,63 @@ def _matching(
     )
     n_active = act.count()
 
-    with shuffle_partitions_conf(spark, num_partitions):
-        for it in range(start_iter + 1, max_iter + 1):
-            if n_active == 0:
-                break
-            t0 = time.monotonic()
-            if local_finish_rows and n_active <= local_finish_rows:
-                act_rows = [
-                    (r["a"], r["b"], r["m"]) for r in act.collect()
-                ]
-                new = _finish_local_matching(act_rows, it, max_iter)
-                if new:
-                    matched = matched.unionByName(
-                        spark.createDataFrame(
-                            new, "a long, b long, match_round long"
-                        )
-                    ).localCheckpoint(eager=True)
-                metrics.log(
-                    it,
-                    winners=len(new),
-                    active=0,
-                    endgame=1,
-                    wall_s=round(time.monotonic() - t0, 4),
-                )
-                n_active = 0
-                break
-            winners = matching_round_lineage(act, it).localCheckpoint(
-                eager=True
-            )
-            n_win = winners.count()
-            won = winners.withColumn("match_round", F.lit(it).cast("long"))
-            matched = matched.unionByName(won)
-            matched = matched.localCheckpoint(eager=True)
-            mv = (
-                winners.select(F.col("a").alias("vid"))
-                .unionByName(winners.select(F.col("b").alias("vid")))
-                .distinct()
-            )
-            act = (
-                act.join(mv.withColumnRenamed("vid", "a"), "a", "left_anti")
-                .join(mv.withColumnRenamed("vid", "b"), "b", "left_anti")
-                .select("a", "b", "m")
-                .repartition(num_partitions, "a")
-                .localCheckpoint(eager=True)
-            )
-            n_next = act.count()
+    set_kernel_width(spark, num_partitions)
+    for it in range(start_iter + 1, max_iter + 1):
+        if n_active == 0:
+            break
+        t0 = time.monotonic()
+        if local_finish_rows and n_active <= local_finish_rows:
+            act_rows = [
+                (r["a"], r["b"], r["m"]) for r in act.collect()
+            ]
+            new = _finish_local_matching(act_rows, it, max_iter)
+            if new:
+                matched = matched.unionByName(
+                    spark.createDataFrame(
+                        new, "a long, b long, match_round long"
+                    )
+                ).localCheckpoint(eager=True)
             metrics.log(
                 it,
-                winners=n_win,
-                active=n_next,
-                removed=n_active - n_next,
+                winners=len(new),
+                active=0,
+                endgame=1,
                 wall_s=round(time.monotonic() - t0, 4),
             )
-            n_active = n_next
-            if ckpt and (
-                it % checkpoint_interval == 0 or n_active == 0
-            ):
-                ckpt.save(matched, it, {"n_active": n_active})
+            n_active = 0
+            break
+        winners = matching_round_lineage(act, it).localCheckpoint(
+            eager=True
+        )
+        n_win = winners.count()
+        won = winners.withColumn("match_round", F.lit(it).cast("long"))
+        matched = matched.unionByName(won)
+        matched = matched.localCheckpoint(eager=True)
+        mv = (
+            winners.select(F.col("a").alias("vid"))
+            .unionByName(winners.select(F.col("b").alias("vid")))
+            .distinct()
+        )
+        act = (
+            act.join(mv.withColumnRenamed("vid", "a"), "a", "left_anti")
+            .join(mv.withColumnRenamed("vid", "b"), "b", "left_anti")
+            .select("a", "b", "m")
+            .repartition(num_partitions, "a")
+            .localCheckpoint(eager=True)
+        )
+        n_next = act.count()
+        metrics.log(
+            it,
+            winners=n_win,
+            active=n_next,
+            removed=n_active - n_next,
+            wall_s=round(time.monotonic() - t0, 4),
+        )
+        n_active = n_next
+        if ckpt and (
+            it % checkpoint_interval == 0 or n_active == 0
+        ):
+            ckpt.save(matched, it, {"n_active": n_active})
 
     mates = matched.select(
         F.col("a").alias("vid"), F.col("b").alias("mate"), "match_round"

@@ -37,10 +37,7 @@ from pyspark.sql import functions as F
 
 from citation_graph_spark.graph.degrees import auto_partitions, undirect
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import (
-    iterative_kernel_conf,
-    shuffle_partitions_conf,
-)
+from citation_graph_spark.session import kernel, set_kernel_width
 
 _P = 2147483647
 _M = 8388608  # 2^23
@@ -71,6 +68,7 @@ def mis_round_lineage(e: DataFrame, active: DataFrame, it: int) -> DataFrame:
     )
 
 
+@kernel
 def maximal_independent_set(
     edges: DataFrame,
     max_iter: int = 100,
@@ -83,16 +81,6 @@ def maximal_independent_set(
     maximality hold at the fixpoint; with a ``max_iter`` cap the
     result is the state after exactly that many synchronous rounds
     (which the SQL oracle mirrors)."""
-    with iterative_kernel_conf(edges.sparkSession):
-        return _mis(edges, max_iter, num_partitions, metrics_path)
-
-
-def _mis(
-    edges: DataFrame,
-    max_iter: int,
-    num_partitions: int | None,
-    metrics_path: str | None,
-) -> DataFrame:
     spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "mis")
 
@@ -114,43 +102,43 @@ def _mis(
     n_active = active.count()
     mis = None
 
-    with shuffle_partitions_conf(spark, num_partitions):
-        for it in range(1, max_iter + 1):
-            t0 = time.monotonic()
-            e_act = e.join(
-                active.select(F.col("vid").alias("src")), "src", "left_semi"
-            ).join(active.select(F.col("vid").alias("dst")), "dst", "left_semi")
-            winners = mis_round_lineage(e, active, it).localCheckpoint(
-                eager=True
+    set_kernel_width(spark, num_partitions)
+    for it in range(1, max_iter + 1):
+        t0 = time.monotonic()
+        e_act = e.join(
+            active.select(F.col("vid").alias("src")), "src", "left_semi"
+        ).join(active.select(F.col("vid").alias("dst")), "dst", "left_semi")
+        winners = mis_round_lineage(e, active, it).localCheckpoint(
+            eager=True
+        )
+        n_win = winners.count()
+        won = winners.withColumn("mis_round", F.lit(it).cast("long"))
+        mis = won if mis is None else mis.unionByName(won)
+        mis = mis.localCheckpoint(eager=True)
+        removed_nb = (
+            e_act.join(
+                winners.select(F.col("vid").alias("src")), "src", "left_semi"
             )
-            n_win = winners.count()
-            won = winners.withColumn("mis_round", F.lit(it).cast("long"))
-            mis = won if mis is None else mis.unionByName(won)
-            mis = mis.localCheckpoint(eager=True)
-            removed_nb = (
-                e_act.join(
-                    winners.select(F.col("vid").alias("src")), "src", "left_semi"
-                )
-                .select(F.col("dst").alias("vid"))
-                .distinct()
-            )
-            active = (
-                active.join(winners, "vid", "left_anti")
-                .join(removed_nb, "vid", "left_anti")
-                .repartition(num_partitions, "vid")
-                .localCheckpoint(eager=True)
-            )
-            n_next = active.count()
-            metrics.log(
-                it,
-                winners=n_win,
-                active=n_next,
-                removed=n_active - n_next,
-                wall_s=round(time.monotonic() - t0, 4),
-            )
-            n_active = n_next
-            if n_active == 0:
-                break
+            .select(F.col("dst").alias("vid"))
+            .distinct()
+        )
+        active = (
+            active.join(winners, "vid", "left_anti")
+            .join(removed_nb, "vid", "left_anti")
+            .repartition(num_partitions, "vid")
+            .localCheckpoint(eager=True)
+        )
+        n_next = active.count()
+        metrics.log(
+            it,
+            winners=n_win,
+            active=n_next,
+            removed=n_active - n_next,
+            wall_s=round(time.monotonic() - t0, 4),
+        )
+        n_active = n_next
+        if n_active == 0:
+            break
 
     e.unpersist()
     return verts.join(mis, "vid", "left").select(

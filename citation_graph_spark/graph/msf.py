@@ -31,12 +31,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from citation_graph_spark.graph.degrees import auto_partitions
-from citation_graph_spark.session import (
-    iterative_kernel_conf,
-    shuffle_partitions_conf,
-)
+from citation_graph_spark.session import kernel, set_kernel_width
 
 
+@kernel
 def boruvka_msf(
     edges: DataFrame,
     vertices: DataFrame | None = None,
@@ -58,8 +56,70 @@ def boruvka_msf(
     loop to run out, used by its equality tests).  Identical forest
     either way.
     """
-    with iterative_kernel_conf(edges.sparkSession):
-        return _boruvka_msf(edges, vertices, max_rounds, local_finish_comps)
+    if local_finish_comps is None:
+        local_finish_comps = _LOCAL_FINISH_COMPS
+    spark = edges.sparkSession
+    e = normalize_edges(edges).localCheckpoint(eager=True)
+    if vertices is None:
+        vertices = (
+            e.select(F.col("src").alias("vid"))
+            .unionByName(e.select(F.col("dst").alias("vid")))
+            .distinct()
+        )
+    labels = vertices.select("vid", F.col("vid").alias("comp")).localCheckpoint(
+        eager=True
+    )
+
+    n_edges = e.count()
+    if local_finish_comps > 0 and n_edges <= _LOCAL_FINISH_EDGE_ROWS:
+        # round-zero filtering endgame: the whole graph fits the
+        # driver, so the identity-labels quotient IS the normalized
+        # edge set — one collect, one Kruskal, zero loop rounds
+        # (local_finish_comps=0 still forces the distributed loop for
+        # the equality tests)
+        return _local_kruskal_tail(e, labels)
+
+    forest_parts: list[DataFrame] = []
+    set_kernel_width(spark, auto_partitions(spark, n_edges))
+    for _ in range(max_rounds):
+        sel = nomination_lineage(e, labels).localCheckpoint(eager=True)
+        n_live = sel.count()
+        if n_live == 0:  # no cross-component edge left anywhere
+            break
+        if n_live <= local_finish_comps:
+            # Kruskal endgame (filtering, Lattanzi et al. SPAA'11):
+            # ≤1024 live components bound the min-edge-per-pair
+            # quotient to ≤524k rows — reduce distributedly, collect,
+            # and finish the remaining forest in one driver Kruskal
+            # under the same (w, src, dst) total order.  The quotient
+            # MSF equals the MSF of the remaining contracted graph
+            # (cycle property kills non-minimal parallel edges), so
+            # the result is bit-identical to running the loop out.
+            forest_parts.append(_local_kruskal_tail(e, labels))
+            break
+        forest_parts.append(sel.select("src", "dst", "w").distinct())
+
+        # contract: components joined by nominated edges merge.  The
+        # nomination map is functional with only 2-cycles (see
+        # rooted_nominations), so pointer doubling resolves the merge
+        # in O(log depth) one-join rounds — no general CC kernel needed.
+        merged = contract_nominations(sel, max_rounds=max_rounds)
+        labels = (
+            labels.join(merged, "comp", "left")
+            .select("vid", F.coalesce("newc", "comp").alias("comp"))
+            .localCheckpoint(eager=True)
+        )
+    else:
+        raise RuntimeError(
+            f"boruvka_msf did not converge in {max_rounds} rounds"
+        )
+
+    if not forest_parts:
+        return spark.createDataFrame([], e.schema)
+    out = forest_parts[0]
+    for p in forest_parts[1:]:
+        out = out.unionByName(p)
+    return out.distinct().localCheckpoint(eager=True)
 
 
 def normalize_edges(edges: DataFrame) -> DataFrame:
@@ -266,75 +326,3 @@ def contract_nominations(sel: DataFrame, max_rounds: int = 40) -> DataFrame:
     for h in handles:
         h.unpersist()
     return out
-
-
-def _boruvka_msf(
-    edges: DataFrame,
-    vertices: DataFrame | None,
-    max_rounds: int,
-    local_finish_comps: int | None = None,
-) -> DataFrame:
-    if local_finish_comps is None:
-        local_finish_comps = _LOCAL_FINISH_COMPS
-    spark = edges.sparkSession
-    e = normalize_edges(edges).localCheckpoint(eager=True)
-    if vertices is None:
-        vertices = (
-            e.select(F.col("src").alias("vid"))
-            .unionByName(e.select(F.col("dst").alias("vid")))
-            .distinct()
-        )
-    labels = vertices.select("vid", F.col("vid").alias("comp")).localCheckpoint(
-        eager=True
-    )
-
-    n_edges = e.count()
-    if local_finish_comps > 0 and n_edges <= _LOCAL_FINISH_EDGE_ROWS:
-        # round-zero filtering endgame: the whole graph fits the
-        # driver, so the identity-labels quotient IS the normalized
-        # edge set — one collect, one Kruskal, zero loop rounds
-        # (local_finish_comps=0 still forces the distributed loop for
-        # the equality tests)
-        return _local_kruskal_tail(e, labels)
-
-    forest_parts: list[DataFrame] = []
-    with shuffle_partitions_conf(spark, auto_partitions(spark, n_edges)):
-        for _ in range(max_rounds):
-            sel = nomination_lineage(e, labels).localCheckpoint(eager=True)
-            n_live = sel.count()
-            if n_live == 0:  # no cross-component edge left anywhere
-                break
-            if n_live <= local_finish_comps:
-                # Kruskal endgame (filtering, Lattanzi et al. SPAA'11):
-                # ≤1024 live components bound the min-edge-per-pair
-                # quotient to ≤524k rows — reduce distributedly, collect,
-                # and finish the remaining forest in one driver Kruskal
-                # under the same (w, src, dst) total order.  The quotient
-                # MSF equals the MSF of the remaining contracted graph
-                # (cycle property kills non-minimal parallel edges), so
-                # the result is bit-identical to running the loop out.
-                forest_parts.append(_local_kruskal_tail(e, labels))
-                break
-            forest_parts.append(sel.select("src", "dst", "w").distinct())
-
-            # contract: components joined by nominated edges merge.  The
-            # nomination map is functional with only 2-cycles (see
-            # rooted_nominations), so pointer doubling resolves the merge
-            # in O(log depth) one-join rounds — no general CC kernel needed.
-            merged = contract_nominations(sel, max_rounds=max_rounds)
-            labels = (
-                labels.join(merged, "comp", "left")
-                .select("vid", F.coalesce("newc", "comp").alias("comp"))
-                .localCheckpoint(eager=True)
-            )
-        else:
-            raise RuntimeError(
-                f"boruvka_msf did not converge in {max_rounds} rounds"
-            )
-
-    if not forest_parts:
-        return spark.createDataFrame([], e.schema)
-    out = forest_parts[0]
-    for p in forest_parts[1:]:
-        out = out.unionByName(p)
-    return out.distinct().localCheckpoint(eager=True)

@@ -35,27 +35,17 @@ from __future__ import annotations
 
 import time
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from citation_graph_spark.checkpointing import CheckpointManager
 from citation_graph_spark.graph.degrees import auto_partitions
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import (
-    iterative_kernel_conf,
-    shuffle_partitions_conf,
-)
-
-# rounds fused per materialization job on the fixed-round path.
-# A/B on the sf0.1 part graph (190k sym edges, 20 rounds, warm):
-# unroll 1 → 7.3s, 2 → 7.2s, 4 → 8.6s. Fusing rounds LOSES: between
-# materializations the vertex state isn't cached, so Catalyst plans
-# fresh exchanges for every fused round instead of reusing the pinned
-# vid-partitioning the materialized path gets for free. Kept at 1; the
-# knob documents the measured negative result.
-UNROLL = 1
+from citation_graph_spark.session import kernel, set_kernel_width
 
 
+@kernel
 def pagerank(
     edges: DataFrame,
     vertices: DataFrame | None = None,
@@ -89,28 +79,6 @@ def pagerank(
     scratch after each ingest batch — data_sources/utils.py:23-121;
     warm start is the Spark-native O(drift) version of that refresh).
     """
-    with iterative_kernel_conf(edges.sparkSession):
-        return _pagerank(
-            edges, vertices, alpha, tol, max_iter, num_partitions,
-            checkpoint_dir, checkpoint_interval, resume, metrics_path,
-            salt_buckets, init_ranks,
-        )
-
-
-def _pagerank(
-    edges: DataFrame,
-    vertices: DataFrame | None,
-    alpha: float,
-    tol: float,
-    max_iter: int,
-    num_partitions: int | None,
-    checkpoint_dir: str | None,
-    checkpoint_interval: int,
-    resume: bool,
-    metrics_path: str | None,
-    salt_buckets: int,
-    init_ranks: DataFrame | None = None,
-) -> DataFrame:
     spark = edges.sparkSession
 
     metrics = MetricsLogger(metrics_path, "pagerank")
@@ -124,10 +92,13 @@ def _pagerank(
     # and its src set doubles as the dangling-vertex detector (replacing
     # a from-scratch edges.select(src).distinct() scan). At 100 TB the
     # edge table is the big object; setup must not materialize it twice.
-    edges_p = edges.persist()
+    # A caller's cache is used as it is and left alone.
+    own_edges = edges.storageLevel == StorageLevel.NONE
+    edges_p = edges.persist() if own_edges else edges
     edge_count = edges_p.count()
     if num_partitions is None:
         num_partitions = auto_partitions(spark, edge_count)
+    set_kernel_width(spark, num_partitions)
 
     if vertices is None:
         vertices = (
@@ -137,20 +108,15 @@ def _pagerank(
         )
     vertices = vertices.select("vid")
 
-    with shuffle_partitions_conf(spark, num_partitions):
-        out_deg = (
-            edges_p.groupBy("src").agg(F.sum("weight").alias("_wout")).persist()
-        )
-        # pin the co-partitioning every round reuses (SURVEY §4.3)
-        edges_n = (
-            edges_p.repartition(num_partitions, "src")
-            .join(out_deg, "src")
-            .select(
-                "src", "dst", (F.col("weight") / F.col("_wout")).alias("wnorm")
-            )
-            .persist()
-        )
-        edges_n.count()
+    out_deg = edges_p.groupBy("src").agg(F.sum("weight").alias("_wout")).persist()
+    # pin the co-partitioning every round reuses (SURVEY §4.3)
+    edges_n = (
+        edges_p.repartition(num_partitions, "src")
+        .join(out_deg, "src")
+        .select("src", "dst", (F.col("weight") / F.col("_wout")).alias("wnorm"))
+        .persist()
+    )
+    edges_n.count()
     # edges_p stays cached until the initial rank vector is materialized:
     # the derived-vertices lineage and the dangling anti-join read it.
 
@@ -170,7 +136,8 @@ def _pagerank(
                 # already at fixpoint — identical results, no extra rounds
                 edges_n.unpersist()
                 out_deg.unpersist()
-                edges_p.unpersist()
+                if own_edges:
+                    edges_p.unpersist()
                 return ranks.select("vid", F.col("rank").alias("score"))
     if ranks is None:
         dangling_flags = vertices.join(
@@ -212,7 +179,8 @@ def _pagerank(
 
     # ranks is eagerly checkpointed — lineage cut; release the setup caches
     out_deg.unpersist()
-    edges_p.unpersist()
+    if own_edges:
+        edges_p.unpersist()
 
     teleport = (1.0 - alpha) / n
     total_wall = 0.0
@@ -227,11 +195,6 @@ def _pagerank(
     # iteration count) the per-round stats collect is pure driver
     # latency — skip it; d_mass stays 0 and l1 stays inf
     need_stats = (tol > 0.0) or (d_mass > 0.0)
-    # fixed-round, no-dangling, no-durable-checkpoint runs have no
-    # per-round driver decision to make — fuse several rounds into one
-    # materialization job (identical per-round arithmetic, just a
-    # deeper plan per job; lineage still truncated at each block)
-    unroll = UNROLL if (not need_stats and ckpt is None) else 1
 
     def one_round(cur: DataFrame) -> DataFrame:
         contribs = edges_n.join(
@@ -263,50 +226,39 @@ def _pagerank(
         )
 
     it, l1 = start_iter, float("inf")
-    # in-loop shuffles (the groupBy("dst") and rank join) must run at
-    # the kernel's own data-proportional width, not the session default
-    # — same alignment rationale as the CC/Borůvka loops
-    with shuffle_partitions_conf(spark, num_partitions):
-        while it < max_iter:
-            t0 = time.monotonic()
-            steps = min(unroll, max_iter - it)
-            new_ranks = ranks
-            for _ in range(steps):
-                new_ranks = one_round(new_ranks.drop("_prev"))
-            # lazy checkpoint: when stats run, their collect materializes
-            # the checkpoint as a side effect — ONE Spark job per block,
-            # not two
-            new_ranks = new_ranks.localCheckpoint(eager=not need_stats)
+    while it < max_iter:
+        t0 = time.monotonic()
+        # lazy checkpoint: when stats run, their collect materializes
+        # the checkpoint as a side effect — ONE Spark job per round,
+        # not two
+        new_ranks = one_round(ranks).localCheckpoint(eager=not need_stats)
 
-            if need_stats:
-                stats = new_ranks.agg(
-                    F.sum(F.abs(F.col("rank") - F.col("_prev"))).alias("l1"),
-                    F.coalesce(
-                        F.sum(F.when(F.col("is_dangling"), F.col("rank"))),
-                        F.lit(0.0),
-                    ).alias("d_mass"),
-                ).collect()[0]
-                l1, d_mass = stats["l1"], stats["d_mass"]
-            ranks = new_ranks.drop("_prev")
-            it += steps
+        if need_stats:
+            stats = new_ranks.agg(
+                F.sum(F.abs(F.col("rank") - F.col("_prev"))).alias("l1"),
+                F.coalesce(
+                    F.sum(F.when(F.col("is_dangling"), F.col("rank"))),
+                    F.lit(0.0),
+                ).alias("d_mass"),
+            ).collect()[0]
+            l1, d_mass = stats["l1"], stats["d_mass"]
+        ranks = new_ranks.drop("_prev")
+        it += 1
 
-            wall = time.monotonic() - t0
-            total_wall += wall
-            metrics.log(
-                it,
-                l1_delta=l1 if l1 != float("inf") else None,
-                wall_s=round(wall, 4),
-                rounds_in_job=steps,
-                edges=edge_count,
-                vertices=n,
-                edges_per_sec=(
-                    round(steps * edge_count / wall, 1) if wall > 0 else None
-                ),
-            )
-            if ckpt and (it % checkpoint_interval == 0):
-                ckpt.save(ranks, it, {"l1": l1, "alpha": alpha, "tol": tol})
-            if l1 < tol:
-                break
+        wall = time.monotonic() - t0
+        total_wall += wall
+        metrics.log(
+            it,
+            l1_delta=l1 if l1 != float("inf") else None,
+            wall_s=round(wall, 4),
+            edges=edge_count,
+            vertices=n,
+            edges_per_sec=round(edge_count / wall, 1) if wall > 0 else None,
+        )
+        if ckpt and (it % checkpoint_interval == 0):
+            ckpt.save(ranks, it, {"l1": l1, "alpha": alpha, "tol": tol})
+        if l1 < tol:
+            break
 
     if ckpt:
         ckpt.save(ranks, it, {"l1": l1, "converged": l1 < tol})

@@ -34,12 +34,10 @@ from pyspark.sql import functions as F
 
 from citation_graph_spark.graph.degrees import auto_partitions, undirect
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import (
-    iterative_kernel_conf,
-    shuffle_partitions_conf,
-)
+from citation_graph_spark.session import kernel, set_kernel_width
 
 
+@kernel
 def bfs_distances(
     edges: DataFrame,
     seeds: DataFrame,
@@ -57,20 +55,6 @@ def bfs_distances(
     joins only the NEW frontier against the cached edges and anti-joins
     already-settled vertices away.
     """
-    with iterative_kernel_conf(edges.sparkSession):
-        return _bfs(
-            edges, seeds, max_iter, directed, num_partitions, metrics_path
-        )
-
-
-def _bfs(
-    edges: DataFrame,
-    seeds: DataFrame,
-    max_iter: int,
-    directed: bool,
-    num_partitions: int | None,
-    metrics_path: str | None,
-) -> DataFrame:
     spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "bfs")
 
@@ -94,34 +78,34 @@ def _bfs(
     )
     frontier = dist.select("vid")
 
-    # in-loop shuffles run at the kernel's data-proportional width
-    with shuffle_partitions_conf(spark, num_partitions):
-        for it in range(1, max_iter + 1):
-            t0 = time.monotonic()
-            reached = (
-                e.join(frontier, e["src"] == frontier["vid"])
-                .select(F.col("dst").alias("vid"))
-                .distinct()
-            )
-            new = (
-                reached.join(dist.select("vid"), "vid", "left_anti")
-                .withColumn("dist", F.lit(it))
-                .repartition(num_partitions, "vid")
-                .localCheckpoint(eager=True)
-            )
-            n_new = new.count()
-            metrics.log(
-                it, frontier=n_new, wall_s=round(time.monotonic() - t0, 4)
-            )
-            if n_new == 0:
-                break
-            dist = dist.unionByName(new).localCheckpoint(eager=True)
-            frontier = new.select("vid")
+    set_kernel_width(spark, num_partitions)
+    for it in range(1, max_iter + 1):
+        t0 = time.monotonic()
+        reached = (
+            e.join(frontier, e["src"] == frontier["vid"])
+            .select(F.col("dst").alias("vid"))
+            .distinct()
+        )
+        new = (
+            reached.join(dist.select("vid"), "vid", "left_anti")
+            .withColumn("dist", F.lit(it))
+            .repartition(num_partitions, "vid")
+            .localCheckpoint(eager=True)
+        )
+        n_new = new.count()
+        metrics.log(
+            it, frontier=n_new, wall_s=round(time.monotonic() - t0, 4)
+        )
+        if n_new == 0:
+            break
+        dist = dist.unionByName(new).localCheckpoint(eager=True)
+        frontier = new.select("vid")
 
     e.unpersist()
     return dist
 
 
+@kernel
 def bfs_per_source(
     edges: DataFrame,
     seeds: DataFrame,
@@ -141,19 +125,6 @@ def bfs_per_source(
     on web-scale graphs: exact per-source distances for a K-seed
     sample instead of O(n) BFS runs (cf. the harmonic-centrality query
     built on it)."""
-    with iterative_kernel_conf(edges.sparkSession):
-        return _bfs_per_source(
-            edges, seeds, max_iter, directed, num_partitions
-        )
-
-
-def _bfs_per_source(
-    edges: DataFrame,
-    seeds: DataFrame,
-    max_iter: int,
-    directed: bool,
-    num_partitions: int | None,
-) -> DataFrame:
     spark = edges.sparkSession
     e0 = edges.select("src", "dst") if directed else undirect(edges).select(
         "src", "dst"
@@ -179,29 +150,29 @@ def _bfs_per_source(
     )
     frontier = dist.select("seed", "vid")
 
-    # in-loop shuffles run at the kernel's data-proportional width
-    with shuffle_partitions_conf(spark, num_partitions):
-        for it in range(1, max_iter + 1):
-            reached = (
-                e.join(frontier, e["src"] == frontier["vid"])
-                .select("seed", F.col("dst").alias("vid"))
-                .distinct()
-            )
-            new = (
-                reached.join(dist.select("seed", "vid"), ["seed", "vid"], "left_anti")
-                .withColumn("dist", F.lit(it))
-                .repartition(num_partitions, "vid")
-                .localCheckpoint(eager=True)
-            )
-            if new.count() == 0:
-                break
-            dist = dist.unionByName(new).localCheckpoint(eager=True)
-            frontier = new.select("seed", "vid")
+    set_kernel_width(spark, num_partitions)
+    for it in range(1, max_iter + 1):
+        reached = (
+            e.join(frontier, e["src"] == frontier["vid"])
+            .select("seed", F.col("dst").alias("vid"))
+            .distinct()
+        )
+        new = (
+            reached.join(dist.select("seed", "vid"), ["seed", "vid"], "left_anti")
+            .withColumn("dist", F.lit(it))
+            .repartition(num_partitions, "vid")
+            .localCheckpoint(eager=True)
+        )
+        if new.count() == 0:
+            break
+        dist = dist.unionByName(new).localCheckpoint(eager=True)
+        frontier = new.select("seed", "vid")
 
     e.unpersist()
     return dist
 
 
+@kernel
 def sssp(
     edges: DataFrame,
     seeds: DataFrame,
@@ -224,20 +195,6 @@ def sssp(
     new in round r) while doing frontier-proportional work — the same
     property that makes BFS above scale.
     """
-    with iterative_kernel_conf(edges.sparkSession):
-        return _sssp(
-            edges, seeds, max_iter, directed, num_partitions, metrics_path
-        )
-
-
-def _sssp(
-    edges: DataFrame,
-    seeds: DataFrame,
-    max_iter: int,
-    directed: bool,
-    num_partitions: int | None,
-    metrics_path: str | None,
-) -> DataFrame:
     spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "sssp")
 
@@ -267,55 +224,55 @@ def _sssp(
     )
     frontier = dist
 
-    # in-loop shuffles run at the kernel's data-proportional width
-    with shuffle_partitions_conf(spark, num_partitions):
-        for it in range(1, max_iter + 1):
-            t0 = time.monotonic()
-            cand = (
-                e.join(frontier, e["src"] == frontier["vid"])
-                .select(
-                    F.col("dst").alias("vid"),
-                    (F.col("dist") + F.col("w")).alias("cand"),
-                )
-                .groupBy("vid")
-                .agg(F.min("cand").alias("cand"))
+    set_kernel_width(spark, num_partitions)
+    for it in range(1, max_iter + 1):
+        t0 = time.monotonic()
+        cand = (
+            e.join(frontier, e["src"] == frontier["vid"])
+            .select(
+                F.col("dst").alias("vid"),
+                (F.col("dist") + F.col("w")).alias("cand"),
             )
-            merged = (
-                dist.join(cand, "vid", "full")
-                .select(
-                    "vid",
-                    # least() skips NULLs (returns NULL only if both are),
-                    # exactly min-ignoring-infinity
-                    F.least("dist", "cand").alias("new_dist"),
-                    F.col("dist").alias("old_dist"),
-                )
+            .groupBy("vid")
+            .agg(F.min("cand").alias("cand"))
+        )
+        merged = (
+            dist.join(cand, "vid", "full")
+            .select(
+                "vid",
+                # least() skips NULLs (returns NULL only if both are),
+                # exactly min-ignoring-infinity
+                F.least("dist", "cand").alias("new_dist"),
+                F.col("dist").alias("old_dist"),
             )
-            improved = (
-                merged.filter(
-                    F.col("old_dist").isNull()
-                    | (F.col("new_dist") < F.col("old_dist"))
-                )
-                .select("vid", F.col("new_dist").alias("dist"))
-                .repartition(num_partitions, "vid")
-                .localCheckpoint(eager=True)
+        )
+        improved = (
+            merged.filter(
+                F.col("old_dist").isNull()
+                | (F.col("new_dist") < F.col("old_dist"))
             )
-            n_improved = improved.count()
-            metrics.log(
-                it, improved=n_improved, wall_s=round(time.monotonic() - t0, 4)
-            )
-            if n_improved == 0:
-                break
-            dist = (
-                merged.select("vid", F.col("new_dist").alias("dist"))
-                .repartition(num_partitions, "vid")
-                .localCheckpoint(eager=True)
-            )
-            frontier = improved
+            .select("vid", F.col("new_dist").alias("dist"))
+            .repartition(num_partitions, "vid")
+            .localCheckpoint(eager=True)
+        )
+        n_improved = improved.count()
+        metrics.log(
+            it, improved=n_improved, wall_s=round(time.monotonic() - t0, 4)
+        )
+        if n_improved == 0:
+            break
+        dist = (
+            merged.select("vid", F.col("new_dist").alias("dist"))
+            .repartition(num_partitions, "vid")
+            .localCheckpoint(eager=True)
+        )
+        frontier = improved
 
     e.unpersist()
     return dist
 
 
+@kernel
 def personalized_pagerank(
     edges: DataFrame,
     seeds: DataFrame,
@@ -331,20 +288,6 @@ def personalized_pagerank(
     ``(vid: long, score: double)`` over all vertices that appear as an
     edge endpoint or a seed; Σ score = 1.
     """
-    with iterative_kernel_conf(edges.sparkSession):
-        return _ppr(
-            edges, seeds, alpha, max_iter, num_partitions, metrics_path
-        )
-
-
-def _ppr(
-    edges: DataFrame,
-    seeds: DataFrame,
-    alpha: float,
-    max_iter: int,
-    num_partitions: int | None,
-    metrics_path: str | None,
-) -> DataFrame:
     spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "personalized_pagerank")
 
@@ -401,43 +344,42 @@ def _ppr(
     )
     has_dangling = ranks.filter(F.col("is_dangling")).limit(1).count() > 0
 
-    # in-loop shuffles run at the kernel's data-proportional width
-    with shuffle_partitions_conf(spark, num_partitions):
-        for it in range(1, max_iter + 1):
-            t0 = time.monotonic()
-            d_mass = 0.0
-            if has_dangling:
-                # one small agg over the checkpointed state — no recompute
-                d_mass = (
-                    ranks.agg(
-                        F.coalesce(
-                            F.sum(F.when(F.col("is_dangling"), F.col("rank"))),
-                            F.lit(0.0),
-                        )
-                    ).collect()[0][0]
-                )
-            contribs = e.join(
-                ranks.select("vid", "rank"), e["src"] == F.col("vid")
-            ).select(F.col("dst"), (F.col("rank") * F.col("wnorm")).alias("c"))
-            sums = contribs.groupBy("dst").agg(F.sum("c").alias("m"))
-            ranks = (
-                ranks.join(sums, ranks["vid"] == sums["dst"], "left")
-                .select(
-                    ranks["vid"],
-                    ranks["s"],
-                    ranks["is_dangling"],
-                    (
-                        F.lit(1.0 - alpha) * F.col("s")
-                        + F.lit(alpha)
-                        * (
-                            F.coalesce(F.col("m"), F.lit(0.0))
-                            + F.lit(d_mass) * F.col("s")
-                        )
-                    ).alias("rank"),
-                )
-                .localCheckpoint(eager=True)
+    set_kernel_width(spark, num_partitions)
+    for it in range(1, max_iter + 1):
+        t0 = time.monotonic()
+        d_mass = 0.0
+        if has_dangling:
+            # one small agg over the checkpointed state — no recompute
+            d_mass = (
+                ranks.agg(
+                    F.coalesce(
+                        F.sum(F.when(F.col("is_dangling"), F.col("rank"))),
+                        F.lit(0.0),
+                    )
+                ).collect()[0][0]
             )
-            metrics.log(it, wall_s=round(time.monotonic() - t0, 4), edges=n_edges)
+        contribs = e.join(
+            ranks.select("vid", "rank"), e["src"] == F.col("vid")
+        ).select(F.col("dst"), (F.col("rank") * F.col("wnorm")).alias("c"))
+        sums = contribs.groupBy("dst").agg(F.sum("c").alias("m"))
+        ranks = (
+            ranks.join(sums, ranks["vid"] == sums["dst"], "left")
+            .select(
+                ranks["vid"],
+                ranks["s"],
+                ranks["is_dangling"],
+                (
+                    F.lit(1.0 - alpha) * F.col("s")
+                    + F.lit(alpha)
+                    * (
+                        F.coalesce(F.col("m"), F.lit(0.0))
+                        + F.lit(d_mass) * F.col("s")
+                    )
+                ).alias("rank"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        metrics.log(it, wall_s=round(time.monotonic() - t0, 4), edges=n_edges)
 
     e.unpersist()
     return ranks.select("vid", F.col("rank").alias("score"))
@@ -446,6 +388,7 @@ def _ppr(
 _WIDEST_INF = 4611686018427387904  # 2^62 — internal "unbounded" capacity
 
 
+@kernel
 def widest_paths(
     edges: DataFrame,
     seeds: DataFrame,
@@ -469,20 +412,6 @@ def widest_paths(
     the frontier argument carries over verbatim): each round relaxes
     only the out-edges of vertices whose width improved last round.
     """
-    with iterative_kernel_conf(edges.sparkSession):
-        return _widest(
-            edges, seeds, max_iter, directed, num_partitions, metrics_path
-        )
-
-
-def _widest(
-    edges: DataFrame,
-    seeds: DataFrame,
-    max_iter: int,
-    directed: bool,
-    num_partitions: int | None,
-    metrics_path: str | None,
-) -> DataFrame:
     spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "widest")
 
@@ -512,45 +441,45 @@ def _widest(
     )
     frontier = cap
 
-    with shuffle_partitions_conf(spark, num_partitions):
-        for it in range(1, max_iter + 1):
-            t0 = time.monotonic()
-            cand = (
-                e.join(frontier, e["src"] == frontier["vid"])
-                .select(
-                    F.col("dst").alias("vid"),
-                    F.least("width", "w").alias("cand"),
-                )
-                .groupBy("vid")
-                .agg(F.max("cand").alias("cand"))
+    set_kernel_width(spark, num_partitions)
+    for it in range(1, max_iter + 1):
+        t0 = time.monotonic()
+        cand = (
+            e.join(frontier, e["src"] == frontier["vid"])
+            .select(
+                F.col("dst").alias("vid"),
+                F.least("width", "w").alias("cand"),
             )
-            merged = cap.join(cand, "vid", "full").select(
-                "vid",
-                # greatest() skips NULLs: max-ignoring-unreached
-                F.greatest("width", "cand").alias("new_w"),
-                F.col("width").alias("old_w"),
+            .groupBy("vid")
+            .agg(F.max("cand").alias("cand"))
+        )
+        merged = cap.join(cand, "vid", "full").select(
+            "vid",
+            # greatest() skips NULLs: max-ignoring-unreached
+            F.greatest("width", "cand").alias("new_w"),
+            F.col("width").alias("old_w"),
+        )
+        improved = (
+            merged.filter(
+                F.col("old_w").isNull()
+                | (F.col("new_w") > F.col("old_w"))
             )
-            improved = (
-                merged.filter(
-                    F.col("old_w").isNull()
-                    | (F.col("new_w") > F.col("old_w"))
-                )
-                .select("vid", F.col("new_w").alias("width"))
-                .repartition(num_partitions, "vid")
-                .localCheckpoint(eager=True)
-            )
-            n_improved = improved.count()
-            metrics.log(
-                it, improved=n_improved, wall_s=round(time.monotonic() - t0, 4)
-            )
-            if n_improved == 0:
-                break
-            cap = (
-                merged.select("vid", F.col("new_w").alias("width"))
-                .repartition(num_partitions, "vid")
-                .localCheckpoint(eager=True)
-            )
-            frontier = improved
+            .select("vid", F.col("new_w").alias("width"))
+            .repartition(num_partitions, "vid")
+            .localCheckpoint(eager=True)
+        )
+        n_improved = improved.count()
+        metrics.log(
+            it, improved=n_improved, wall_s=round(time.monotonic() - t0, 4)
+        )
+        if n_improved == 0:
+            break
+        cap = (
+            merged.select("vid", F.col("new_w").alias("width"))
+            .repartition(num_partitions, "vid")
+            .localCheckpoint(eager=True)
+        )
+        frontier = improved
 
     e.unpersist()
     return cap.select(

@@ -22,6 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from citation_graph_spark.graph.degrees import auto_partitions
+from citation_graph_spark.session import kernel, set_kernel_width
+
 
 def _canonical_edges(edges: DataFrame) -> DataFrame:
     return (
@@ -57,13 +60,15 @@ def oriented_edges(edges: DataFrame) -> DataFrame:
     )
 
 
+@kernel
 def triangle_counts(
     edges: DataFrame, vertices: DataFrame | None = None
 ) -> DataFrame:
     """Returns ``(vid: long, n_triangles: long)`` — number of triangles
     each vertex participates in; Σ = 3 × global triangle count."""
+    spark = edges.sparkSession
     o = oriented_edges(edges).persist()
-    o.count()
+    set_kernel_width(spark, auto_partitions(spark, o.count()))
 
     e1 = o.select(F.col("u").alias("w0"), F.col("v").alias("w1"))
     e2 = o.select(F.col("u").alias("w0"), F.col("v").alias("w2"))
@@ -84,16 +89,18 @@ def triangle_counts(
         .unionByName(triangles.select(F.col("w2").alias("vid")))
     )
     counts = corners.groupBy("vid").agg(F.count(F.lit(1)).alias("n_triangles"))
-    o.unpersist()
     if vertices is not None:
         counts = (
             vertices.select("vid")
             .join(counts, "vid", "left")
             .select("vid", F.coalesce("n_triangles", F.lit(0)).alias("n_triangles"))
         )
+    counts = counts.localCheckpoint(eager=True)
+    o.unpersist()
     return counts
 
 
+@kernel
 def four_clique_counts(
     edges: DataFrame, vertices: DataFrame | None = None
 ) -> DataFrame:
@@ -112,8 +119,9 @@ def four_clique_counts(
 
     Returns ``(vid, n_four_cliques)``; Σ = 4 × global 4-clique count.
     """
+    spark = edges.sparkSession
     o = oriented_edges(edges).persist()
-    o.count()
+    set_kernel_width(spark, auto_partitions(spark, o.count()))
     counts = four_clique_lineage(o, vertices).localCheckpoint(eager=True)
     o.unpersist()
     return counts

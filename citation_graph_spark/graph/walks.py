@@ -26,10 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from citation_graph_spark.graph.degrees import auto_partitions
-from citation_graph_spark.session import (
-    iterative_kernel_conf,
-    shuffle_partitions_conf,
-)
+from citation_graph_spark.session import kernel, set_kernel_width
 
 # shared with the SQL oracle and the python replay (tests): int64-safe
 # for dense vids up to ~2^40
@@ -67,6 +64,7 @@ def walk_round_lineage(e: DataFrame, frontier: DataFrame, t: int) -> DataFrame:
     )
 
 
+@kernel
 def deterministic_walks(
     edges: DataFrame,
     seeds: DataFrame,
@@ -76,40 +74,40 @@ def deterministic_walks(
     """One walk per seed vertex: ``(wid, step, vid)`` rows for
     step = 0..steps (fewer if the walk hits a sink). ``wid`` is the
     seed's vid; ``seeds`` is a DataFrame with a ``vid`` column."""
-    with iterative_kernel_conf(edges.sparkSession):
-        spark = edges.sparkSession
-        e0 = edges.select("src", "dst").distinct().persist()
-        n_edges = e0.count()
-        if num_partitions is None:
-            num_partitions = auto_partitions(spark, n_edges)
-        e = e0.repartition(num_partitions, "src").persist()
-        e.count()
-        e0.unpersist()
+    spark = edges.sparkSession
+    e0 = edges.select("src", "dst").distinct().persist()
+    n_edges = e0.count()
+    if num_partitions is None:
+        num_partitions = auto_partitions(spark, n_edges)
+    e = e0.repartition(num_partitions, "src").persist()
+    e.count()
+    e0.unpersist()
 
-        frontier = (
-            seeds.select("vid")
-            .distinct()
-            .select(
-                F.col("vid").alias("wid"),
-                F.lit(0).alias("step"),
-                F.col("vid").alias("v"),
-            )
-            .localCheckpoint(eager=True)
+    frontier = (
+        seeds.select("vid")
+        .distinct()
+        .select(
+            F.col("vid").alias("wid"),
+            F.lit(0).alias("step"),
+            F.col("vid").alias("v"),
         )
-        out = frontier
+        .localCheckpoint(eager=True)
+    )
+    out = frontier
 
-        with shuffle_partitions_conf(spark, num_partitions):
-            for t in range(1, steps + 1):
-                frontier = walk_round_lineage(e, frontier, t).localCheckpoint(
-                    eager=True
-                )
-                if frontier.isEmpty():
-                    break
-                out = out.unionByName(frontier)
-        e.unpersist()
-        return out.select("wid", "step", F.col("v").alias("vid"))
+    set_kernel_width(spark, num_partitions)
+    for t in range(1, steps + 1):
+        frontier = walk_round_lineage(e, frontier, t).localCheckpoint(
+            eager=True
+        )
+        if frontier.isEmpty():
+            break
+        out = out.unionByName(frontier)
+    e.unpersist()
+    return out.select("wid", "step", F.col("v").alias("vid"))
 
 
+@kernel
 def neighbor_sample(
     edges: DataFrame,
     seeds: DataFrame,
@@ -137,44 +135,43 @@ def neighbor_sample(
     most Π fanouts rows per seed."""
     if not fanouts:
         raise ValueError("fanouts must name at least one hop")
-    with iterative_kernel_conf(edges.sparkSession):
-        spark = edges.sparkSession
-        e0 = edges.select("src", "dst").distinct().persist()
-        n_edges = e0.count()
-        if num_partitions is None:
-            num_partitions = auto_partitions(spark, n_edges)
-        e = e0.repartition(num_partitions, "src").persist()
-        e.count()
-        e0.unpersist()
+    spark = edges.sparkSession
+    e0 = edges.select("src", "dst").distinct().persist()
+    n_edges = e0.count()
+    if num_partitions is None:
+        num_partitions = auto_partitions(spark, n_edges)
+    e = e0.repartition(num_partitions, "src").persist()
+    e.count()
+    e0.unpersist()
 
-        frontier = seeds.select(
-            F.col("vid").alias("seed"), F.col("vid").alias("v")
+    frontier = seeds.select(
+        F.col("vid").alias("seed"), F.col("vid").alias("v")
+    ).distinct()
+    out = None
+    w = Window.partitionBy("src").orderBy("h_pri", "dst")
+    set_kernel_width(spark, num_partitions)
+    for hop, fanout in enumerate(fanouts, start=1):
+        samp = (
+            e.withColumn(
+                "h_pri",
+                walk_priority(F.col("src"), F.lit(hop), F.col("dst")),
+            )
+            .withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") <= fanout)
+            .select("src", "dst")
+        )
+        rows = (
+            frontier.join(samp, frontier["v"] == samp["src"])
+            .select(
+                "seed", F.lit(hop).alias("hop"), "src", "dst"
+            )
+            .localCheckpoint(eager=True)
+        )
+        out = rows if out is None else out.unionByName(rows)
+        frontier = rows.select(
+            "seed", F.col("dst").alias("v")
         ).distinct()
-        out = None
-        w = Window.partitionBy("src").orderBy("h_pri", "dst")
-        with shuffle_partitions_conf(spark, num_partitions):
-            for hop, fanout in enumerate(fanouts, start=1):
-                samp = (
-                    e.withColumn(
-                        "h_pri",
-                        walk_priority(F.col("src"), F.lit(hop), F.col("dst")),
-                    )
-                    .withColumn("rn", F.row_number().over(w))
-                    .filter(F.col("rn") <= fanout)
-                    .select("src", "dst")
-                )
-                rows = (
-                    frontier.join(samp, frontier["v"] == samp["src"])
-                    .select(
-                        "seed", F.lit(hop).alias("hop"), "src", "dst"
-                    )
-                    .localCheckpoint(eager=True)
-                )
-                out = rows if out is None else out.unionByName(rows)
-                frontier = rows.select(
-                    "seed", F.col("dst").alias("v")
-                ).distinct()
-                if frontier.isEmpty():  # every branch hit a sink:
-                    break  # later hops would rank O(E) rows for nothing
-        e.unpersist()
-        return out
+        if frontier.isEmpty():  # every branch hit a sink:
+            break  # later hops would rank O(E) rows for nothing
+    e.unpersist()
+    return out

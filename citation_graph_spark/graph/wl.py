@@ -35,10 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from citation_graph_spark.graph.degrees import auto_partitions, undirect
-from citation_graph_spark.session import (
-    iterative_kernel_conf,
-    shuffle_partitions_conf,
-)
+from citation_graph_spark.session import kernel, set_kernel_width
 
 WL_P = 2147483647
 WL_C1 = 1000003
@@ -72,6 +69,7 @@ def wl_round_lineage(sym: DataFrame, colors: DataFrame) -> DataFrame:
     )
 
 
+@kernel
 def wl_refinement(
     edges: DataFrame,
     rounds: int = 3,
@@ -80,24 +78,23 @@ def wl_refinement(
     """``(vid, color)`` after ``rounds`` WL refinement rounds on the
     undirected simple graph of ``edges``, starting from degree colors.
     """
-    with iterative_kernel_conf(edges.sparkSession):
-        spark = edges.sparkSession
-        sym = undirect(edges.select("src", "dst")).persist()
-        n_edges = sym.count()
-        if num_partitions is None:
-            num_partitions = auto_partitions(spark, n_edges)
+    spark = edges.sparkSession
+    sym = undirect(edges.select("src", "dst")).persist()
+    n_edges = sym.count()
+    if num_partitions is None:
+        num_partitions = auto_partitions(spark, n_edges)
+    colors = (
+        sym.groupBy(F.col("src").alias("vid"))
+        .agg(F.count(F.lit(1)).cast("long").alias("color"))
+        .repartition(num_partitions, "vid")
+        .localCheckpoint(eager=True)
+    )
+    set_kernel_width(spark, num_partitions)
+    for _ in range(rounds):
         colors = (
-            sym.groupBy(F.col("src").alias("vid"))
-            .agg(F.count(F.lit(1)).cast("long").alias("color"))
+            wl_round_lineage(sym, colors)
             .repartition(num_partitions, "vid")
             .localCheckpoint(eager=True)
         )
-        with shuffle_partitions_conf(spark, num_partitions):
-            for _ in range(rounds):
-                colors = (
-                    wl_round_lineage(sym, colors)
-                    .repartition(num_partitions, "vid")
-                    .localCheckpoint(eager=True)
-                )
-        sym.unpersist()
-        return colors
+    sym.unpersist()
+    return colors

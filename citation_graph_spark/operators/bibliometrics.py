@@ -58,16 +58,16 @@ _EV_ITERS = 10
 def cap_adjacency(
     adj: DataFrame, center: str, max_degree: int | None
 ) -> DataFrame:
-    """Top-k per-vertex adjacency cap for wedge self-joins — THE
-    standard mitigation for the hub-degree quadratic (a wedge join
-    emits O(deg²) pairs per center, and a power-law hub at 100× corpus
-    scale turns that into the stage's whole cost). One window, no
-    shape change: keep at most ``max_degree`` rows per wedge-center
-    ``center``, deterministic under the ascending order of the
-    remaining columns (with a weighted adjacency, order by weight
-    descending first — same one-line window). ``None`` = exact
-    (unchanged plan); the capped result is a deterministic subset, so
-    downstream counts are reproducible, just truncated at hubs."""
+    """Per-vertex adjacency cap for wedge self-joins — THE standard
+    mitigation for the hub-degree quadratic (a wedge join emits O(deg²)
+    pairs per center, and a power-law hub at 100× corpus scale turns
+    that into the stage's whole cost). One window, no shape change:
+    keep at most ``max_degree`` rows per wedge-center ``center``, the
+    first ones in ascending order of every other column, left to right
+    (a weight column sorts ascending like the rest, so the cap keeps
+    the lightest edges, not the heaviest). ``None`` = exact (unchanged
+    plan); the capped result is a deterministic subset, so downstream
+    counts are reproducible, just truncated at hubs."""
     if max_degree is None:
         return adj
     others = [c for c in adj.columns if c != center]

@@ -7,21 +7,16 @@ from __future__ import annotations
 
 import io
 import re
-from contextlib import contextmanager, redirect_stdout
+from contextlib import redirect_stdout
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
-from citation_graph_spark.session import iterative_kernel_conf
+from citation_graph_spark.session import kernel_scope
 
-
-@contextmanager
-def static_plans(spark: SparkSession):
-    """AQE off for the duration: adaptive planning defers physical
-    decisions to runtime and hides codegen markers in pre-execution
-    plans, so plan audits read the static plan. Same mechanics as the
-    kernel toggle — delegate so the save/restore semantics live once."""
-    with iterative_kernel_conf(spark):
-        yield
+# Plan audits read the static plan: adaptive planning defers physical
+# decisions to runtime and hides codegen markers in pre-execution plans.
+# The kernel scope turns AQE off and restores it on exit.
+static_plans = kernel_scope
 
 
 def plan_stats(df: DataFrame) -> dict:

@@ -1,67 +1,117 @@
-"""SparkSession factory with scale-oriented defaults.
+"""SparkSession factory and the one execution policy of the graph kernels.
 
 Single place where engine-relevant Spark configuration lives so tests,
-bench harness and spark-submit entry points agree. Defaults are tuned
-for correctness-at-scale first:
+bench harness and spark-submit entry points agree. Session defaults are
+tuned for correctness-at-scale first:
 
 - AQE on (runtime re-planning, skew-join splitting) — power-law vertex
   degree is a first-class concern for link graphs.
 - Arrow transport on for every pandas UDF (the extraction stage is a
   vectorized pandas UDF; per-row Python is banned by design).
 - shuffle partitions sized to the parallelism level, not the 200
-  default: the iterative kernels repartition edges ONCE and keep vertex
-  state co-partitioned, so oversized shuffles only add task overhead.
+  default.
+- the driver's young generation fixed at its ceiling from the start,
+  so its resident memory follows the work, not the garbage
+  collector's history (see ``get_spark``).
+
+Every graph kernel runs under ``@kernel``, which owns the kernel policy:
+
+- AQE is off for the kernel's duration. AQE re-plans every stage at
+  runtime; on a fixpoint loop that is a per-round scheduling tax with
+  nothing to re-plan (both join sides are cached with known sizes,
+  partitioning is pinned by the kernel). Measured: 13% per-round win on
+  the 346k-edge bench graph, and a triangle count over a cached
+  200-vertex edge table ran 134 Spark jobs under AQE against 3 without.
+- The kernel sets its shuffle width once, when it knows its size
+  (``set_kernel_width``), so every groupBy/join inside its rounds
+  shuffles at its own data-proportional width instead of paying a
+  session-width task launch per tiny shuffle and an extra exchange per
+  misaligned join.
+- The scope restores AQE and the width on return, on exception and
+  when kernels nest; ``session_width`` stays the session's own value
+  inside any kernel.
+- A kernel returns a materialized frame: its result reads a checkpoint
+  or local rows, so the caller never re-runs the kernel's joins (under
+  the caller's AQE setting) and nothing the kernel released is needed
+  again. It materializes before it unpersists anything the result
+  depends on.
+- Cache ownership: a kernel calls persist/unpersist only on frames it
+  created. ``df.persist()`` returns ``df`` itself, so persisting and
+  later unpersisting a caller's frame would drop the caller's cache; a
+  caller's cached input is used as it is.
 """
 
 from __future__ import annotations
 
+import functools
 import os
+import re
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+_AQE = "spark.sql.adaptive.enabled"
+_WIDTH = "spark.sql.shuffle.partitions"
+# confs saved by each kernel scope open now, outermost first; the confs
+# are session-wide, so kernels on one session run one at a time
+_open_scopes: list[dict[str, str]] = []
 
 
 @contextmanager
-def shuffle_partitions_conf(spark: SparkSession, num_partitions: int):
-    """Pin ``spark.sql.shuffle.partitions`` for a kernel's duration.
-
-    The iterative kernels repartition their big frames to a
-    data-proportional count (graph.degrees.auto_partitions), but every
-    groupBy/join INSIDE the round still shuffles at the session default
-    — on a small graph that misaligns partitioning (forcing an extra
-    exchange per join) and pays a session-width task launch per tiny
-    shuffle.  Setting the session value to the kernel's own count for
-    the loop's duration aligns both; restored on exit.  At scale
-    auto_partitions caps at the session setting, so this is a no-op on
-    a big graph."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(num_partitions))
+def kernel_scope(spark: SparkSession):
+    """AQE off until exit; AQE and shuffle width restored on exit."""
+    saved = {k: spark.conf.get(k) for k in (_AQE, _WIDTH)}
+    _open_scopes.append(saved)
+    spark.conf.set(_AQE, "false")
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        _open_scopes.pop()
+        for k, v in saved.items():
+            spark.conf.set(k, v)
 
 
-@contextmanager
-def iterative_kernel_conf(spark: SparkSession):
-    """AQE off for the duration of an iterative kernel.
+def kernel(fn):
+    """Run ``fn`` under ``kernel_scope`` of the session of its first
+    DataFrame argument (see the module docstring for the policy)."""
 
-    AQE re-plans every stage at runtime; on a fixpoint loop that is a
-    per-round scheduling tax with nothing to re-plan (both join sides
-    are cached with known sizes, partitioning is pinned by the kernel).
-    Measured: 13% per-round win on the 346k-edge bench graph; the
-    standalone-cluster scaling job ships with the same setting. Restored
-    on exit so interactive/one-shot queries keep runtime re-planning."""
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    @functools.wraps(fn)
+    def scoped(*args, **kwargs):
+        frame = next(
+            a for a in (*args, *kwargs.values()) if isinstance(a, DataFrame)
+        )
+        with kernel_scope(frame.sparkSession):
+            return fn(*args, **kwargs)
+
+    return scoped
+
+
+def set_kernel_width(spark: SparkSession, num_partitions: int) -> None:
+    """Set the running kernel's shuffle width; its scope restores it."""
+    if not _open_scopes:
+        raise RuntimeError("set_kernel_width called outside a kernel scope")
+    spark.conf.set(_WIDTH, str(num_partitions))
+
+
+def session_width(spark: SparkSession) -> int:
+    """The session's shuffle width, not the width of a running kernel."""
+    if _open_scopes:
+        return int(_open_scopes[0][_WIDTH])
+    return int(spark.conf.get(_WIDTH))
 
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+
+def _young_generation_mb(mem: str) -> int:
+    """A third of a heap of ``mem`` (a Spark size such as "8g"; no unit
+    means MiB), in MiB."""
+    m = re.fullmatch(r"(\d+)([kmgt]?)b?", mem.strip().lower())
+    if m is None:
+        raise ValueError(f"unrecognised driver memory size: {mem!r}")
+    mib = {"k": 1 / 1024, "": 1, "m": 1, "g": 1024, "t": 1024**2}[m[2]]
+    return int(int(m[1]) * mib) // 3
 
 
 def get_spark(
@@ -84,22 +134,25 @@ def get_spark(
         shuffle_partitions = max(cores, 4)
 
     mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
-    # JVM memory flags are EMPIRICAL on this sandbox host and the host
-    # changes regimes. History: an early regime had a slow page-fault
-    # path (a growing 24g heap made a 1s job take 46s), fixed then by
-    # -Xms == -Xmx + AlwaysPreTouch (fault every page once at start).
-    # The late-round-4 regime INVERTED that: pre-touched pages appear
-    # to be reclaimed/deduplicated behind the guest's back (zero-page
-    # KSM-style), so first REAL writes re-fault through the slow path
-    # mid-job — a controlled A/B (bench_out/extract_ab_jvm.json) put
-    # the 32-thread extraction stage at 66-109 s with
-    # -Xms24g+AlwaysPreTouch vs 18-19 s with a plain -Xmx24g heap,
-    # proportional to heap size (12g pre-touch: 38-61 s). Default is
-    # therefore a plain grow-on-demand heap; set SPARK_GRAFT_JVM_OPTS
-    # to override (e.g. restore pre-touch if the host regime flips
-    # back). ParallelGC stays: it does not uncommit, so pages fault at
-    # most once either way.
-    java_opts = os.environ.get("SPARK_GRAFT_JVM_OPTS", "-XX:+UseParallelGC")
+    # The young generation is fixed at a third of the heap, ParallelGC's
+    # own ceiling for it. Left to ParallelGC, it starts small and grows
+    # from the collector's GC-time history, so a short job's peak RSS
+    # depended on how many collections it happened to run: ten runs of
+    # perfbench's analytics workload (2g heap, 4-core host) peaked at
+    # 0.90-1.21 GB (interquartile range 152 MB); fourteen with the young
+    # generation fixed peaked at 1.10-1.21 GB (IQR 54 MB). The old
+    # generation still grows on demand, so a long-lived driver's RSS
+    # follows its live data.
+    # Nothing is pre-touched: on a host where pre-touched pages were
+    # reclaimed behind the guest's back, first real writes re-faulted
+    # through a slow path mid-job (an A/B, bench_out/extract_ab_jvm.json,
+    # put the 32-thread extraction stage at 66-109 s with
+    # -Xms24g+AlwaysPreTouch vs 18-19 s without). SPARK_GRAFT_JVM_OPTS
+    # replaces the collector flag and comes after -Xmn, so it can
+    # override the young generation too.
+    java_opts = f"-Xmn{_young_generation_mb(mem)}m " + os.environ.get(
+        "SPARK_GRAFT_JVM_OPTS", "-XX:+UseParallelGC"
+    )
     local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local")
     try:
         os.makedirs(local_dir, exist_ok=True)

@@ -12,6 +12,8 @@ from citation_graph_spark.graph import (
     pagerank,
     triangle_counts,
 )
+from citation_graph_spark.session import kernel, session_width, set_kernel_width
+from citation_graph_spark.streaming.incremental import refresh_pagerank
 from tests.conftest import edges_df, vertices_df
 from tests.oracles import (
     MICRO_GRAPHS,
@@ -704,3 +706,104 @@ def test_louvain_two_level_modularity_monotone(spark):
     assert q2 >= q1  # weighted level-2 moves only ever ascend
     # and the refinement genuinely coarsens or keeps the partition
     assert len(set(lab2.values())) <= len(set(lab1.values()))
+
+
+# --- the kernel execution policy (session.kernel) ---------------------------
+
+AQE, WIDTH = "spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions"
+
+NORTH_RULE = {
+    "pagerank": lambda e, v: pagerank(e, v, tol=1e-6),
+    "connected_components": lambda e, v: connected_components(e, v),
+    "label_propagation": lambda e, v: label_propagation(e, v, max_iter=5),
+    "triangle_counts": lambda e, v: triangle_counts(e, v),
+    "refresh_pagerank": lambda e, v: refresh_pagerank(e, v, tol=1e-6),
+}
+
+
+def _conf(spark):
+    return {k: spark.conf.get(k) for k in (AQE, WIDTH)}
+
+
+@pytest.mark.parametrize("cached", [False, True], ids=["uncached", "cached"])
+@pytest.mark.parametrize("name", sorted(NORTH_RULE))
+def test_kernel_policy(spark, name, cached):
+    """The caller's cache state and session conf are unchanged after the
+    call, and the result reads a checkpoint (no join left to run)."""
+    n, el = GRAPHS["random_200"]
+    edges = edges_df(spark, el)
+    if cached:
+        edges = edges.cache()
+        edges.count()
+    level, conf = edges.storageLevel, _conf(spark)
+    out = NORTH_RULE[name](edges, vertices_df(spark, n))
+    assert edges.storageLevel == level
+    assert _conf(spark) == conf
+    assert "Join" not in out._jdf.queryExecution().optimizedPlan().toString()
+    edges.unpersist()
+
+
+def _jobs(spark, group, action):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_triangle_jobs_do_not_depend_on_an_earlier_pagerank(spark):
+    assert spark.conf.get(AQE) == "true"
+    n, el = GRAPHS["random_200"]
+    edges = edges_df(spark, el).cache()
+    edges.count()
+    before = _jobs(spark, "tri-before", lambda: triangle_counts(edges).collect())
+    pagerank(edges, vertices_df(spark, n), tol=1e-6)
+    after = _jobs(spark, "tri-after", lambda: triangle_counts(edges).collect())
+    edges.unpersist()
+    assert before == after <= 8
+
+
+def test_kernel_scope_restores_conf_on_error_and_nesting(spark):
+    edges = edges_df(spark, [(0, 1), (1, 2), (2, 0)])
+    session = _conf(spark)
+    seen = {}
+
+    @kernel
+    def outer(e, fail=False):
+        set_kernel_width(spark, 3)
+        seen["inner"] = connected_components(e).count()
+        seen["after_inner"] = _conf(spark)
+        seen["session_width"] = session_width(spark)
+        if fail:
+            raise ValueError("boom")
+
+    outer(edges)
+    assert seen["inner"] == 3
+    assert seen["after_inner"] == {AQE: "false", WIDTH: "3"}
+    assert seen["session_width"] == int(session[WIDTH])
+    assert _conf(spark) == session
+    with pytest.raises(ValueError, match="boom"):
+        outer(edges, fail=True)
+    assert _conf(spark) == session
+    fractional = edges_df(spark, [(0, 1, 0.5)])
+    with pytest.raises(Exception, match="integral"):
+        label_propagation(fractional, weighted=True)
+    assert _conf(spark) == session
+
+
+def test_driver_young_generation_is_fixed(spark):
+    """The driver's young generation starts at its ceiling, a third of
+    the heap, so its peak RSS does not depend on how many collections a
+    job ran."""
+    jvm = spark.sparkContext._jvm
+    mx = jvm.java.lang.management.ManagementFactory
+    bean = jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    hs = mx.getPlatformMXBean(bean)
+    size = {
+        k: int(hs.getVMOption(k).getValue())
+        for k in ("NewSize", "MaxNewSize", "MaxHeapSize")
+    }
+    assert size["NewSize"] == size["MaxNewSize"]
+    assert abs(3 * size["MaxNewSize"] - size["MaxHeapSize"]) <= 3 * 2**20

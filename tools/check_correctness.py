@@ -47,10 +47,26 @@ ONLY = set(_args[1:])
 
 from citation_graph_spark.compare import (  # noqa: E402
     norm_val,
+    raw_val,
     table_hash,
     table_hash_raw,
 )
 from citation_graph_spark.tables import TABLE_NAMES  # noqa: E402
+
+
+def print_first_diff(rows, cols, orows, ocols, val) -> None:
+    """Print the first differing row of the two results, each row
+    stringified with ``val`` over name-sorted columns, rows sorted (the
+    order the hashes see)."""
+
+    def lines(rs, cs):
+        order = sorted(range(len(cs)), key=lambda i: cs[i])
+        return sorted("\x01".join(val(r[i]) for i in order) for r in rs)
+
+    for a, b in zip(lines(rows, cols), lines(orows, ocols)):
+        if a != b:
+            print(f"      first diff:\n      spark: {a!r}\n      duck : {b!r}")
+            return
 
 
 def main() -> int:
@@ -125,6 +141,7 @@ def main() -> int:
             hs, hd = table_hash(rows, cols), table_hash(orows, ocols)
             if hs != hd:
                 problems.append(f"valuehash spark={hs} duck={hd}")
+                print_first_diff(rows, cols, orows, ocols, norm_val)
         if not problems and STRICT:
             rs = table_hash_raw(rows, cols)
             rd = table_hash_raw(orows, ocols)
@@ -134,19 +151,7 @@ def main() -> int:
                     "(passes only under float normalization — "
                     "driver-fragile output typing)"
                 )
-                # show a sample mismatch for debugging
-                order_s = sorted(range(len(cols)), key=lambda i: cols[i])
-                order_d = sorted(range(len(ocols)), key=lambda i: ocols[i])
-                ls = sorted(
-                    "\x01".join(norm_val(r[i]) for i in order_s) for r in rows
-                )
-                ld = sorted(
-                    "\x01".join(norm_val(r[i]) for i in order_d) for r in orows
-                )
-                for a, b in zip(ls, ld):
-                    if a != b:
-                        print(f"      first diff:\n      spark: {a!r}\n      duck : {b!r}")
-                        break
+                print_first_diff(rows, cols, orows, ocols, raw_val)
         record(
             name,
             rows_match=len(rows) == len(orows),
