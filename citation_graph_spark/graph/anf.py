@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from citation_graph_spark.checkpointing import CheckpointManager
+from citation_graph_spark.checkpointing import checkpoints
 from citation_graph_spark.graph.degrees import auto_partitions
 from citation_graph_spark.metrics import MetricsLogger
 from citation_graph_spark.session import kernel, set_kernel_width
@@ -150,25 +150,13 @@ def hyperball(
     groupBy (vid, idx) max — vertex id is the only shuffle key, per
     round bytes are O(E * m) with m = 2^log2m registers.
 
-    ``checkpoint_dir`` makes the run resumable (north rule): every
-    ``checkpoint_interval`` rounds BOTH state tables — the sparse
-    registers and the estimates accumulated so far — are snapshotted
-    to parquet under paired manifests; ``resume=True`` reloads the
-    newest pair and replays only the remaining rounds. Registers are
-    integers, so the round-trip is exact and the resumed output is
-    bit-identical to an uninterrupted run."""
+    ``checkpoint_dir`` makes the run resumable (checkpointing.py): the
+    state is BOTH tables — the sparse registers and the estimates
+    accumulated so far — and a resume needs both at the same round.
+    Registers are integers, so the round-trip is exact and the resumed
+    output is bit-identical to an uninterrupted run."""
     spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "hyperball")
-    ck_regs = (
-        CheckpointManager(checkpoint_dir, "hyperball_regs")
-        if checkpoint_dir
-        else None
-    )
-    ck_est = (
-        CheckpointManager(checkpoint_dir, "hyperball_est")
-        if checkpoint_dir
-        else None
-    )
     m = 1 << log2m
     e = edges.select("src", "dst").distinct().persist()
     n_edges = e.count()
@@ -207,30 +195,14 @@ def hyperball(
 
     import time as _time
 
-    start_r = 0
-    out = None
-    if ck_regs and resume:
-        lr = ck_regs.load(spark)
-        le = ck_est.load(spark)
-        if (
-            lr is not None
-            and le is not None
-            and lr[1]["iteration"] == le[1]["iteration"]
-        ):
-            start_r = lr[1]["iteration"]
-            regs = (
-                lr[0]
-                .select("vid", "idx", "rho")
-                .repartition(num_partitions, "vid")
-                .localCheckpoint(eager=True)
-            )
-            out = (
-                le[0].select("vid", "r", "est").localCheckpoint(eager=True)
-            )
-            if start_r >= radius:
-                e.unpersist()
-                return out
-    if out is None:
+    ck_regs, ck_est = (
+        checkpoints(checkpoint_dir, name, n_edges, checkpoint_interval, resume)
+        for name in ("hyperball_regs", "hyperball_est")
+    )
+    regs, start_r, _ = ck_regs.restore(spark, num_partitions)
+    out, est_r, _ = ck_est.restore(spark, num_partitions, key=None)
+    if regs is None or out is None or est_r != start_r:
+        start_r = 0
         regs = (
             verts.select("vid", idx.alias("idx"), rho.alias("rho"))
             .repartition(num_partitions, "vid")
@@ -251,15 +223,11 @@ def hyperball(
             wall_s=round(_time.monotonic() - t0, 4),
             msgs=n_edges,
         )
-        if ck_regs and (
-            r % checkpoint_interval == 0 or r == radius
-        ):
-            meta = {"log2m": log2m, "radius": radius}
-            ck_regs.save(regs, r, meta=meta)
-            ck_est.save(out, r, meta=meta)
+        ck_regs.end_round(regs, r, radius)
+        est_path = ck_est.end_round(out, r, radius)
+        if est_path:
             # reading the just-written estimates back caps the
             # union lineage at checkpoint_interval rounds
-            le = ck_est.load(spark)
-            out = le[0].select("vid", "r", "est")
+            out = spark.read.parquet(est_path)
     e.unpersist()
     return out.select("vid", "r", "est")

@@ -123,7 +123,7 @@ def betweenness_sampled(
         F.floor(F.coalesce(F.col("bc"), F.lit(0.0)) * 1000000 + F.lit(0.5))
         .cast("long")
         .alias("bc_micro"),
-    )
+    ).localCheckpoint(eager=True)
     e.unpersist()
     return out
 
@@ -149,7 +149,7 @@ def edge_betweenness_sampled(
     e, verts, done = _brandes_state(
         edges, sources, max_iter, num_partitions, metrics_path
     )
-    out = edge_dependency_lineage(e, done)
+    out = edge_dependency_lineage(e, done).localCheckpoint(eager=True)
     e.unpersist()
     return out
 

@@ -36,7 +36,7 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from citation_graph_spark.checkpointing import CheckpointManager
+from citation_graph_spark.checkpointing import checkpoints
 from citation_graph_spark.graph.degrees import auto_partitions, undirect
 from citation_graph_spark.graph.mis import mis_round_lineage
 from citation_graph_spark.metrics import MetricsLogger
@@ -131,13 +131,11 @@ def greedy_coloring(
     many synchronous rounds — still-uncolored vertices report
     ``color = -1, color_round = 0`` (which the SQL oracle mirrors).
 
-    ``checkpoint_dir`` persists the colored set every
-    ``checkpoint_interval`` rounds (CheckpointManager manifest);
-    ``resume=True`` continues from the newest snapshot with the
-    IDENTICAL final coloring — the uncolored frontier is exactly
-    vertices-minus-colored and the schedule is a pure function of
-    (vid, round), and the state is int64, so the parquet round-trip is
-    exact by construction.
+    ``checkpoint_dir`` makes the run resumable (checkpointing.py) with
+    the IDENTICAL final coloring — the state is the colored set, the
+    uncolored frontier is exactly vertices-minus-colored, the schedule
+    is a pure function of (vid, round), and the state is int64, so the
+    parquet round-trip is exact by construction.
 
     ``local_finish_rows`` — incident-row count at or below which the
     remaining rounds replay as one exact driver pass (None → module
@@ -147,11 +145,6 @@ def greedy_coloring(
         local_finish_rows = _LOCAL_FINISH_ROWS
     spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "coloring")
-    ckpt = (
-        CheckpointManager(checkpoint_dir, "coloring")
-        if checkpoint_dir
-        else None
-    )
 
     und0 = undirect(edges).select("src", "dst").persist()
     n_sym = und0.count()
@@ -167,17 +160,12 @@ def greedy_coloring(
         .repartition(num_partitions, "vid")
         .localCheckpoint(eager=True)
     )
-    colored = spark.createDataFrame(
-        [], "vid long, color long, color_round long"
-    )
-    start_iter = 0
-    if ckpt and resume:
-        loaded = ckpt.load(spark)
-        if loaded is not None:
-            saved, manifest = loaded
-            start_iter = manifest["iteration"]
-            colored = saved.repartition(num_partitions, "vid")
-    colored = colored.localCheckpoint(eager=True)
+    ckpt = checkpoints(checkpoint_dir, "coloring", n_sym, checkpoint_interval, resume)
+    colored, start_iter, _ = ckpt.restore(spark, num_partitions)
+    if colored is None:
+        colored = spark.createDataFrame(
+            [], "vid long, color long, color_round long"
+        ).localCheckpoint(eager=True)
     active = verts.join(colored, "vid", "left_anti").repartition(
         num_partitions, "vid"
     ).localCheckpoint(eager=True)
@@ -264,13 +252,12 @@ def greedy_coloring(
             wall_s=round(time.monotonic() - t0, 4),
         )
         n_active = n_next
-        if ckpt and (
-            it % checkpoint_interval == 0 or n_active == 0
-        ):
-            ckpt.save(colored, it, {"n_active": n_active})
+        ckpt.end_round(colored, it, max_iter, done=n_active == 0)
 
-    return verts.join(colored, "vid", "left").select(
+    out = verts.join(colored, "vid", "left").select(
         "vid",
         F.coalesce("color", F.lit(-1)).cast("long").alias("color"),
         F.coalesce("color_round", F.lit(0)).cast("long").alias("color_round"),
-    )
+    ).localCheckpoint(eager=True)
+    e.unpersist()
+    return out

@@ -27,7 +27,7 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from citation_graph_spark.checkpointing import CheckpointManager
+from citation_graph_spark.checkpointing import checkpoints
 from citation_graph_spark.graph.degrees import auto_partitions, undirect
 from citation_graph_spark.metrics import MetricsLogger
 from citation_graph_spark.session import kernel, set_kernel_width
@@ -133,7 +133,7 @@ def connected_components(
     small-graph default, but at web scale a high-diameter graph would
     crawl. ``True``/``False`` force the choice. The auto route is
     suppressed when ``checkpoint_dir``/``resume`` are set: the star
-    variant carries no CheckpointManager, and the durable kill+resume
+    variant has no checkpoints, and the durable kill+resume
     contract always wins over the round-count optimization."""
     if local_finish_edges is None:
         local_finish_edges = _LOCAL_FINISH_UND_ROWS
@@ -165,7 +165,6 @@ def connected_components(
 
     spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "connected_components")
-    ckpt = CheckpointManager(checkpoint_dir, "components") if checkpoint_dir else None
 
     und0 = undirect(edges).persist()
     n_und = und0.count()
@@ -174,7 +173,7 @@ def connected_components(
     # instead of O(rounds); see _LOCAL_FINISH_UND_ROWS)
     if (
         n_und <= local_finish_edges
-        and ckpt is None
+        and checkpoint_dir is None
         and not resume
         and init_labels is None
     ):
@@ -185,13 +184,13 @@ def connected_components(
         und0.unpersist()
         return out
     # auto star-contraction only when no durable-checkpoint contract is
-    # in play: _star_components has no CheckpointManager, so routing a
+    # in play: _star_components has no checkpoints, so routing a
     # checkpoint_dir/resume caller there would silently drop the
     # kill+resume guarantee (and resume=True would restart from round 0)
     if (
         star_contraction is None
         and n_und > star_threshold
-        and ckpt is None
+        and checkpoint_dir is None
         and not resume
         and init_labels is None
     ):
@@ -210,14 +209,13 @@ def connected_components(
         vertices = und.select(F.col("src").alias("vid")).distinct()
     vertices = vertices.select("vid")
 
-    start_iter = 0
-    labels = None
-    if ckpt and resume:
-        loaded = ckpt.load(spark)
-        if loaded is not None:
-            labels, manifest = loaded
-            start_iter = manifest["iteration"]
-            labels = labels.repartition(num_partitions, "vid").localCheckpoint(eager=True)
+    ckpt = checkpoints(
+        checkpoint_dir, "components", n_und, checkpoint_interval, resume
+    )
+    labels, start_iter, meta = ckpt.restore(spark, num_partitions)
+    if meta.get("done"):
+        und.unpersist()
+        return labels.select("vid", F.col("label").alias("component"))
     if labels is None:
         if init_labels is not None:
             labels = (
@@ -259,13 +257,10 @@ def connected_components(
         changed = new_labels.filter(F.col("label") != F.col("_prev")).count()
         labels = new_labels.drop("_prev")
         metrics.log(it + 1, changed=changed, wall_s=round(time.monotonic() - t0, 4))
-        if ckpt and ((it + 1) % checkpoint_interval == 0):
-            ckpt.save(labels, it + 1, {"changed": changed})
+        ckpt.end_round(labels, it + 1, max_iter, done=changed == 0)
         if changed == 0:
             break
 
-    if ckpt:
-        ckpt.save(labels, it + 1, {"changed": changed, "converged": changed == 0})
     und.unpersist()
     return labels.select("vid", F.col("label").alias("component"))
 

@@ -48,7 +48,7 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from citation_graph_spark.checkpointing import CheckpointManager
+from citation_graph_spark.checkpointing import checkpoints
 from citation_graph_spark.graph.degrees import auto_partitions, undirect
 from citation_graph_spark.metrics import MetricsLogger
 from citation_graph_spark.session import kernel, set_kernel_width
@@ -86,19 +86,12 @@ def eigenvector_centrality(
     iteration rounds on the undirected simple graph of ``edges``;
     score_ppm ∈ [0, 10^6] with the max vertex pinned at 10^6.
 
-    ``checkpoint_dir`` persists ``(vid, x)`` every
-    ``checkpoint_interval`` rounds (CheckpointManager manifest);
-    ``resume=True`` continues from the newest snapshot with
-    bit-identical final scores — the state is int64, so the parquet
-    round-trip is exact by construction (stronger than the
+    ``checkpoint_dir`` makes the run resumable (checkpointing.py) with
+    bit-identical final scores — the ``(vid, x)`` state is int64, so
+    the parquet round-trip is exact by construction (stronger than the
     double-precision kernels' IEEE-round-trip argument)."""
     spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "eigenvector")
-    ckpt = (
-        CheckpointManager(checkpoint_dir, "eigenvector")
-        if checkpoint_dir
-        else None
-    )
     sym = undirect(edges.select("src", "dst"))
     verts = sym.select(F.col("src").alias("vid")).distinct()
     sym2 = sym.unionByName(
@@ -110,21 +103,10 @@ def eigenvector_centrality(
     if num_partitions is None:
         num_partitions = auto_partitions(spark, n_edges)
 
-    start_iter = 0
-    x = None
-    if ckpt and resume:
-        loaded = ckpt.load(spark)
-        if loaded is not None:
-            saved, manifest = loaded
-            start_iter = manifest["iteration"]
-            x = (
-                saved.select("vid", "x")
-                .repartition(num_partitions, "vid")
-                .localCheckpoint(eager=True)
-            )
-            if start_iter >= max_iter:
-                sym2.unpersist()
-                return x.select("vid", F.col("x").alias("score_ppm"))
+    ckpt = checkpoints(
+        checkpoint_dir, "eigenvector", n_edges, checkpoint_interval, resume
+    )
+    x, start_iter, _ = ckpt.restore(spark, num_partitions)
     if x is None:
         x = (
             verts.select(
@@ -158,9 +140,6 @@ def eigenvector_centrality(
             msgs=n_edges,
             max_y=int(m),
         )
-        if ckpt and (
-            it % checkpoint_interval == 0 or it == max_iter
-        ):
-            ckpt.save(x, it, meta={"max_iter": max_iter})
+        ckpt.end_round(x, it, max_iter)
     sym2.unpersist()
     return x.select("vid", F.col("x").alias("score_ppm"))

@@ -35,7 +35,7 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from citation_graph_spark.checkpointing import CheckpointManager
+from citation_graph_spark.checkpointing import checkpoints
 from citation_graph_spark.graph.degrees import auto_partitions
 from citation_graph_spark.metrics import MetricsLogger
 from citation_graph_spark.session import kernel, set_kernel_width
@@ -84,14 +84,11 @@ def katz_centrality(
     synchronous rounds from ``x0 = beta`` on the DISTINCT directed edge
     set (multiplicity is ignored: one citation link, one walk edge).
 
-    ``checkpoint_dir`` enables durable parquet snapshots of the state
-    every ``checkpoint_interval`` rounds (CheckpointManager manifest);
-    ``resume=True`` continues from the newest snapshot — bit-identical
-    final scores (doubles round-trip parquet exactly; the resumed run
-    replays the identical remaining schedule)."""
+    ``checkpoint_dir`` makes the run resumable (checkpointing.py) with
+    bit-identical final scores: doubles round-trip parquet exactly and
+    the resumed run replays the identical remaining schedule."""
     spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "katz")
-    ckpt = CheckpointManager(checkpoint_dir, "katz") if checkpoint_dir else None
 
     if vertices is None:
         vertices = (
@@ -112,21 +109,8 @@ def katz_centrality(
     e.count()
     e0.unpersist()
 
-    start_iter = 0
-    state = None
-    if ckpt and resume:
-        loaded = ckpt.load(spark)
-        if loaded is not None:
-            saved, manifest = loaded
-            start_iter = manifest["iteration"]
-            state = (
-                saved.select("vid", "x")
-                .repartition(num_partitions, "vid")
-                .localCheckpoint(eager=True)
-            )
-            if start_iter >= max_iter:
-                e.unpersist()
-                return state.select("vid", F.col("x").alias("score"))
+    ckpt = checkpoints(checkpoint_dir, "katz", n_edges, checkpoint_interval, resume)
+    state, start_iter, _ = ckpt.restore(spark, num_partitions)
     if state is None:
         state = (
             vertices.select("vid", F.lit(float(beta)).alias("x"))
@@ -145,11 +129,7 @@ def katz_centrality(
         metrics.log(
             it, wall_s=round(time.monotonic() - t0, 4), msgs=n_edges
         )
-        if ckpt and (it % checkpoint_interval == 0 or it == max_iter):
-            ckpt.save(
-                state, it,
-                meta={"alpha": alpha, "beta": beta, "max_iter": max_iter},
-            )
+        ckpt.end_round(state, it, max_iter)
 
     e.unpersist()
     return state.select("vid", F.col("x").alias("score"))

@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from citation_graph_spark.checkpointing import CheckpointManager
+from citation_graph_spark.checkpointing import checkpoints
 from citation_graph_spark.graph.degrees import auto_partitions, undirect
 from citation_graph_spark.metrics import MetricsLogger
 from citation_graph_spark.session import kernel, set_kernel_width
@@ -133,11 +133,9 @@ def louvain_local_moves(
     rounds from the singleton partition, over the undirected simple
     graph of ``edges`` (any direction/duplication is normalized away).
 
-    ``checkpoint_dir``: durable parquet snapshot of the (vid,
-    community) assignment every ``checkpoint_interval`` rounds under a
-    CheckpointManager manifest; ``resume=True`` continues from the
-    newest snapshot. Community ids are integers, so the round-trip is
-    exact and the resumed fixpoint is bit-identical.
+    ``checkpoint_dir`` makes the run resumable (checkpointing.py).
+    Community ids are integers, so the round-trip is exact and the
+    resumed fixpoint is bit-identical.
     """
     spark = edges.sparkSession
     e = (
@@ -163,28 +161,8 @@ def louvain_local_moves(
     deg.count()
 
     metrics = MetricsLogger(metrics_path, "louvain")
-    ckpt = (
-        CheckpointManager(checkpoint_dir, "louvain")
-        if checkpoint_dir
-        else None
-    )
-    start_round = 0
-    comm = None
-    if ckpt and resume:
-        loaded = ckpt.load(spark)
-        if loaded is not None:
-            saved, manifest = loaded
-            start_round = manifest["iteration"]
-            comm = (
-                saved.select("vid", "community")
-                .repartition(num_partitions, "vid")
-                .localCheckpoint(eager=True)
-            )
-            if start_round >= rounds:
-                e.unpersist()
-                sym.unpersist()
-                deg.unpersist()
-                return comm
+    ckpt = checkpoints(checkpoint_dir, "louvain", m, checkpoint_interval, resume)
+    comm, start_round, _ = ckpt.restore(spark, num_partitions)
     if comm is None:
         comm = deg.select("vid", F.col("vid").alias("community"))
     set_kernel_width(spark, num_partitions)
@@ -198,10 +176,7 @@ def louvain_local_moves(
         metrics.log(
             it, wall_s=round(time.monotonic() - t0, 4), msgs=2 * m
         )
-        if ckpt and (
-            it % checkpoint_interval == 0 or it == rounds
-        ):
-            ckpt.save(comm, it, meta={"rounds": rounds, "m": m})
+        ckpt.end_round(comm, it, rounds)
     e.unpersist()
     sym.unpersist()
     deg.unpersist()

@@ -47,7 +47,7 @@ import time
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from citation_graph_spark.checkpointing import CheckpointManager
+from citation_graph_spark.checkpointing import checkpoints
 from citation_graph_spark.graph.degrees import auto_partitions, undirect
 from citation_graph_spark.metrics import MetricsLogger
 from citation_graph_spark.session import kernel, set_kernel_width
@@ -145,12 +145,11 @@ def maximal_matching(
     ``max_iter`` cap the result is the state after exactly that many
     synchronous rounds (which the SQL oracle mirrors).
 
-    ``checkpoint_dir`` persists the matched-pair set every
-    ``checkpoint_interval`` rounds; ``resume=True`` continues from the
-    newest snapshot with the IDENTICAL final matching — the active
-    edge set is exactly canonical-edges-minus-matched-endpoints and
-    the schedule is a pure function of (edge, round); the int64 state
-    round-trips parquet exactly.
+    ``checkpoint_dir`` makes the run resumable (checkpointing.py) with
+    the IDENTICAL final matching — the state is the matched-pair set,
+    the active edge set is exactly canonical-edges-minus-matched-
+    endpoints and the schedule is a pure function of (edge, round); the
+    int64 state round-trips parquet exactly.
 
     ``local_finish_rows`` — active-edge count at or below which the
     remaining rounds replay as one exact driver pass (None → module
@@ -160,11 +159,6 @@ def maximal_matching(
         local_finish_rows = _LOCAL_FINISH_ROWS
     spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "matching")
-    ckpt = (
-        CheckpointManager(checkpoint_dir, "matching")
-        if checkpoint_dir
-        else None
-    )
 
     und0 = undirect(edges).select("src", "dst").persist()
     n_sym = und0.count()
@@ -187,15 +181,12 @@ def maximal_matching(
     )
     und0.unpersist()
 
-    matched = spark.createDataFrame([], "a long, b long, match_round long")
-    start_iter = 0
-    if ckpt and resume:
-        loaded = ckpt.load(spark)
-        if loaded is not None:
-            saved, manifest = loaded
-            start_iter = manifest["iteration"]
-            matched = saved.repartition(num_partitions, "a")
-    matched = matched.localCheckpoint(eager=True)
+    ckpt = checkpoints(checkpoint_dir, "matching", n_sym, checkpoint_interval, resume)
+    matched, start_iter, _ = ckpt.restore(spark, num_partitions, key="a")
+    if matched is None:
+        matched = spark.createDataFrame(
+            [], "a long, b long, match_round long"
+        ).localCheckpoint(eager=True)
     mv0 = (
         matched.select(F.col("a").alias("vid"))
         .unionByName(matched.select(F.col("b").alias("vid")))
@@ -263,10 +254,7 @@ def maximal_matching(
             wall_s=round(time.monotonic() - t0, 4),
         )
         n_active = n_next
-        if ckpt and (
-            it % checkpoint_interval == 0 or n_active == 0
-        ):
-            ckpt.save(matched, it, {"n_active": n_active})
+        ckpt.end_round(matched, it, max_iter, done=n_active == 0)
 
     mates = matched.select(
         F.col("a").alias("vid"), F.col("b").alias("mate"), "match_round"
@@ -283,4 +271,4 @@ def maximal_matching(
         .cast("long")
         .alias("matched"),
         F.coalesce("match_round", F.lit(0)).cast("long").alias("match_round"),
-    )
+    ).localCheckpoint(eager=True)

@@ -15,9 +15,9 @@ Physical-plan invariants this module maintains (SURVEY.md §4.3):
 - vertex state is always hash-partitioned on ``vid`` (inherited from
   the previous round's aggregation) → the rank-update join is
   exchange-free as well.
-- ``localCheckpoint(eager=True)`` per round truncates lineage; durable
-  parquet checkpoints every ``checkpoint_interval`` rounds make the run
-  resumable (CheckpointManager manifest).
+- ``localCheckpoint(eager=True)`` per round truncates lineage;
+  ``checkpoint_dir`` makes the run resumable (checkpointing.py); the
+  state is done when it converges.
 - map-side partial aggregation already collapses power-law in-degree
   hubs to ≤ one row per (partition, dst) before the shuffle — the same
   effect explicit salting buys for algebraic aggregates. For
@@ -39,7 +39,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from citation_graph_spark.checkpointing import CheckpointManager
+from citation_graph_spark.checkpointing import checkpoints
 from citation_graph_spark.graph.degrees import auto_partitions
 from citation_graph_spark.metrics import MetricsLogger
 from citation_graph_spark.session import kernel, set_kernel_width
@@ -82,7 +82,6 @@ def pagerank(
     spark = edges.sparkSession
 
     metrics = MetricsLogger(metrics_path, "pagerank")
-    ckpt = CheckpointManager(checkpoint_dir, "pagerank") if checkpoint_dir else None
 
     # ONE pass over the (possibly expensively derived) input edge table:
     # cache it raw, count it for partition sizing, then build the
@@ -124,21 +123,10 @@ def pagerank(
     if n == 0:
         return spark.createDataFrame([], "vid long, score double")
 
-    start_iter = 0
-    ranks = None
-    if ckpt and resume:
-        loaded = ckpt.load(spark)
-        if loaded is not None:
-            ranks, manifest = loaded
-            start_iter = manifest["iteration"]
-            ranks = ranks.repartition(num_partitions, "vid").localCheckpoint(eager=True)
-            if manifest.get("meta", {}).get("converged"):
-                # already at fixpoint — identical results, no extra rounds
-                edges_n.unpersist()
-                out_deg.unpersist()
-                if own_edges:
-                    edges_p.unpersist()
-                return ranks.select("vid", F.col("rank").alias("score"))
+    ckpt = checkpoints(
+        checkpoint_dir, "pagerank", edge_count, checkpoint_interval, resume
+    )
+    ranks, start_iter, meta = ckpt.restore(spark, num_partitions)
     if ranks is None:
         dangling_flags = vertices.join(
             out_deg.select("src"),
@@ -181,6 +169,10 @@ def pagerank(
     out_deg.unpersist()
     if own_edges:
         edges_p.unpersist()
+    if meta.get("done"):
+        # already at fixpoint — identical results, no extra rounds
+        edges_n.unpersist()
+        return ranks.select("vid", F.col("rank").alias("score"))
 
     teleport = (1.0 - alpha) / n
     total_wall = 0.0
@@ -255,13 +247,10 @@ def pagerank(
             vertices=n,
             edges_per_sec=round(edge_count / wall, 1) if wall > 0 else None,
         )
-        if ckpt and (it % checkpoint_interval == 0):
-            ckpt.save(ranks, it, {"l1": l1, "alpha": alpha, "tol": tol})
+        ckpt.end_round(ranks, it, max_iter, done=l1 < tol)
         if l1 < tol:
             break
 
-    if ckpt:
-        ckpt.save(ranks, it, {"l1": l1, "converged": l1 < tol})
     metrics.log(
         -1,
         total_wall_s=round(total_wall, 4),

@@ -52,9 +52,9 @@ is what lets the SQL oracle replay the exact state.
 Scale posture: per round, one equi-join of the state against the
 cached self-loop-augmented edge layout + one vertex-keyed groupBy (the
 round's only shuffle) + four scalar aggregates (n, S, min, max);
-per-round localCheckpoint bounds lineage, CheckpointManager persists
-``(vid, x)`` every k rounds for kill-resume with bit-identical output
-(int64 state, exact parquet round trip).
+per-round localCheckpoint bounds lineage, and ``checkpoint_dir`` makes
+the run resumable (checkpointing.py) with bit-identical output (int64
+``(vid, x, z)`` state, exact parquet round trip).
 """
 
 from __future__ import annotations
@@ -64,7 +64,7 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from citation_graph_spark.checkpointing import CheckpointManager
+from citation_graph_spark.checkpointing import checkpoints
 from citation_graph_spark.graph.degrees import auto_partitions, undirect
 from citation_graph_spark.metrics import MetricsLogger
 from citation_graph_spark.session import kernel, set_kernel_width
@@ -122,11 +122,6 @@ def fiedler_scores(
     Fiedler vector of anything."""
     spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "fiedler")
-    ckpt = (
-        CheckpointManager(checkpoint_dir, "fiedler")
-        if checkpoint_dir
-        else None
-    )
     sym = undirect(edges.select("src", "dst"))
     deg = sym.groupBy(F.col("src").alias("vid")).agg(
         F.count(F.lit(1)).alias("deg")
@@ -151,20 +146,10 @@ def fiedler_scores(
         .repartition(num_partitions, "dst")
         .persist()
     )
-    syms.count()
+    n_syms = syms.count()
 
-    start_iter = 0
-    x = None
-    if ckpt and resume:
-        loaded = ckpt.load(spark)
-        if loaded is not None:
-            saved, manifest = loaded
-            start_iter = manifest["iteration"]
-            x = (
-                saved.select("vid", "x", "z")
-                .repartition(num_partitions, "vid")
-                .localCheckpoint(eager=True)
-            )
+    ckpt = checkpoints(checkpoint_dir, "fiedler", n_syms, checkpoint_interval, resume)
+    x, start_iter, _ = ckpt.restore(spark, num_partitions)
     if x is None:
         # deterministic non-constant seed, guaranteed not the
         # all-ones direction; magnitude already within scale.
@@ -243,10 +228,7 @@ def fiedler_scores(
             wall_s=round(time.monotonic() - t0, 4),
             z_spread=zmax - zmin,
         )
-        if ckpt and (
-            it % checkpoint_interval == 0 or it == max_iter
-        ):
-            ckpt.save(x, it, meta={"max_iter": max_iter})
+        ckpt.end_round(x, it, max_iter)
     syms.unpersist()
     return x.select("vid", F.col("x").alias("score_q4"), "z")
 

@@ -7,8 +7,17 @@ import numpy as np
 import pytest
 
 from citation_graph_spark.graph import (
+    betweenness_sampled,
     connected_components,
+    edge_betweenness_sampled,
+    eigenvector_centrality,
+    fiedler_scores,
+    greedy_coloring,
+    hyperball,
+    katz_centrality,
     label_propagation,
+    louvain_local_moves,
+    maximal_matching,
     pagerank,
     triangle_counts,
 )
@@ -712,12 +721,23 @@ def test_louvain_two_level_modularity_monotone(spark):
 
 AQE, WIDTH = "spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions"
 
-NORTH_RULE = {
+KERNELS = {
     "pagerank": lambda e, v: pagerank(e, v, tol=1e-6),
     "connected_components": lambda e, v: connected_components(e, v),
     "label_propagation": lambda e, v: label_propagation(e, v, max_iter=5),
     "triangle_counts": lambda e, v: triangle_counts(e, v),
     "refresh_pagerank": lambda e, v: refresh_pagerank(e, v, tol=1e-6),
+    "katz_centrality": lambda e, v: katz_centrality(e, v, max_iter=3),
+    "eigenvector_centrality": lambda e, v: eigenvector_centrality(e, max_iter=3),
+    "louvain_local_moves": lambda e, v: louvain_local_moves(e, rounds=2),
+    "hyperball": lambda e, v: hyperball(e, radius=2),
+    "greedy_coloring": lambda e, v: greedy_coloring(e),
+    "maximal_matching": lambda e, v: maximal_matching(e),
+    "fiedler_scores": lambda e, v: fiedler_scores(e, max_iter=3),
+    "betweenness_sampled": lambda e, v: betweenness_sampled(e, v.filter("vid < 3")),
+    "edge_betweenness_sampled": (
+        lambda e, v: edge_betweenness_sampled(e, v.filter("vid < 3"))
+    ),
 }
 
 
@@ -726,7 +746,7 @@ def _conf(spark):
 
 
 @pytest.mark.parametrize("cached", [False, True], ids=["uncached", "cached"])
-@pytest.mark.parametrize("name", sorted(NORTH_RULE))
+@pytest.mark.parametrize("name", sorted(KERNELS))
 def test_kernel_policy(spark, name, cached):
     """The caller's cache state and session conf are unchanged after the
     call, and the result reads a checkpoint (no join left to run)."""
@@ -736,7 +756,7 @@ def test_kernel_policy(spark, name, cached):
         edges = edges.cache()
         edges.count()
     level, conf = edges.storageLevel, _conf(spark)
-    out = NORTH_RULE[name](edges, vertices_df(spark, n))
+    out = KERNELS[name](edges, vertices_df(spark, n))
     assert edges.storageLevel == level
     assert _conf(spark) == conf
     assert "Join" not in out._jdf.queryExecution().optimizedPlan().toString()

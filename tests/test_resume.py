@@ -1,9 +1,14 @@
 """Resumability (north rule): kill at iteration k, relaunch, identical
-final scores; converged checkpoints return without extra rounds."""
+final scores; converged checkpoints return without extra rounds; a
+crashed save, a shorter re-run, or a manifest of another graph or
+format never resumes into a wrong answer."""
 
 from __future__ import annotations
 
+import json
+
 import numpy as np
+import pytest
 
 from citation_graph_spark.graph import connected_components, pagerank
 from tests.conftest import edges_df, vertices_df
@@ -251,3 +256,94 @@ def test_matching_kill_resume_identical(spark, tmp_path):
         .collect()
     )
     assert [tuple(r) for r in full] == [tuple(r) for r in resumed]
+
+
+def _scores(df, col="score"):
+    return df.orderBy("vid").toPandas()[col].to_numpy()
+
+
+def _first_round(metrics_path):
+    with open(metrics_path) as f:
+        return json.loads(f.readline())["iteration"]
+
+
+def test_shorter_rerun_keeps_the_snapshot_its_manifest_names(spark, tmp_path):
+    """A shorter re-run into the same checkpoint_dir saves an iteration
+    below the snapshots already there; retention must keep the one its
+    manifest names, so the next resume starts from it."""
+    edges = edges_df(spark, random_graph(300, 1500, seed=3))
+    verts = vertices_df(spark, 300)
+    full = _scores(pagerank(edges, verts))
+    ck = str(tmp_path / "ck")
+    pagerank(edges, verts, max_iter=20, checkpoint_dir=ck, checkpoint_interval=10)
+    pagerank(edges, verts, max_iter=5, checkpoint_dir=ck, checkpoint_interval=5)
+    log = str(tmp_path / "resume.jsonl")
+    resumed = _scores(
+        pagerank(edges, verts, checkpoint_dir=ck, resume=True, metrics_path=log)
+    )
+    assert _first_round(log) == 6
+    assert np.allclose(full, resumed, atol=1e-12, rtol=0)
+
+
+def test_pagerank_refuses_a_checkpoint_of_another_graph(spark, tmp_path):
+    el = random_graph(300, 1500, seed=3)
+    a, b = edges_df(spark, el), edges_df(spark, el[:-50])
+    verts = vertices_df(spark, 300)
+    ck = str(tmp_path / "ck")
+    pagerank(a, verts, checkpoint_dir=ck)  # a converged manifest of graph a
+    cold = _scores(pagerank(b, verts))
+    resumed = _scores(pagerank(b, verts, checkpoint_dir=ck, resume=True))
+    assert np.allclose(cold, resumed, atol=1e-12, rtol=0)
+
+
+@pytest.mark.parametrize("fault", ["torn_snapshot", "stale_tmp_manifest", "old_format"])
+def test_katz_resume_after_a_fault(spark, tmp_path, fault):
+    """A save killed mid-write leaves a snapshot no manifest names, or a
+    temporary manifest never published: the resume continues from the
+    last published manifest. A manifest of an older format starts cold.
+    Either way the result equals the uninterrupted run."""
+    from citation_graph_spark.graph.katz import katz_centrality
+
+    edges = edges_df(spark, random_graph(300, 1500, seed=7))
+    verts = vertices_df(spark, 300)
+    full = _scores(katz_centrality(edges, verts, max_iter=6))
+    ck = tmp_path / "ck"
+    katz_centrality(
+        edges, verts, max_iter=3, checkpoint_dir=str(ck), checkpoint_interval=3
+    )
+    root = ck / "katz"
+    torn = root / "iter_000004_0badf00d"
+    if fault == "torn_snapshot":
+        torn.mkdir()
+        (torn / "part-00000.parquet").write_bytes(b"PAR1")
+    elif fault == "stale_tmp_manifest":
+        (root / "manifest.json.tmp").write_text('{"format": 2, "iteration": 5, "pa')
+    else:
+        manifest = json.loads((root / "manifest.json").read_text())
+        (root / "manifest.json").write_text(json.dumps({**manifest, "format": 1}))
+    log = str(tmp_path / "resume.jsonl")
+    resumed = _scores(
+        katz_centrality(
+            edges, verts, max_iter=6, checkpoint_dir=str(ck), resume=True,
+            metrics_path=log,
+        )
+    )
+    assert (full == resumed).all()
+    assert _first_round(log) == (1 if fault == "old_format" else 4)
+    assert not torn.exists()  # the resumed run's saves pruned it
+
+
+def test_components_converged_manifest_returns_at_once(spark, tmp_path):
+    edges = edges_df(spark, random_graph(300, 900, seed=5))
+    verts = vertices_df(spark, 300)
+    ck = str(tmp_path / "ck")
+    full = _scores(connected_components(edges, verts, checkpoint_dir=ck), "component")
+    log = tmp_path / "again.jsonl"
+    again = _scores(
+        connected_components(
+            edges, verts, checkpoint_dir=ck, resume=True, metrics_path=str(log)
+        ),
+        "component",
+    )
+    assert (again == full).all()
+    assert not log.exists()  # no round ran
