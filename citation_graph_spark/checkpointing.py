@@ -19,7 +19,8 @@ A resumable kernel knows only its state's columns and key, and when it
 is done. It gets its checkpoints from ``checkpoints(...)``:
 
     ckpt = checkpoints(checkpoint_dir, "pagerank", edge_count=n,
-                       interval=checkpoint_interval, resume=resume)
+                       interval=checkpoint_interval, resume=resume,
+                       params={"alpha": alpha, "tol": tol})
     state, start, meta = ckpt.restore(spark, width)
     ...
     for it in range(start + 1, max_iter + 1):
@@ -44,10 +45,15 @@ else lives in ``CheckpointManager``:
 - Manifest ``<root>/<kernel>/manifest.json``, published atomically
   through ``manifest.json.tmp``. Fields: ``format`` (``FORMAT``),
   ``iteration``, ``edge_count`` (the edge count the kernel had before
-  it resumed), ``path`` (the snapshot directory) and ``meta``. ``load``
-  refuses, with a logged reason, a manifest whose ``format`` or
-  ``edge_count`` differs from this run's or is missing, or whose
-  snapshot is gone; the kernel then starts cold.
+  it resumed), ``params`` (the kernel parameters its state depends on:
+  pagerank ``alpha`` and ``tol``, katz ``alpha`` and ``beta``,
+  hyperball ``log2m``), ``path`` (the snapshot directory) and
+  ``meta``. ``load`` refuses, with a logged reason, a manifest whose
+  ``format``, ``edge_count`` or ``params`` differ from this run's or
+  are missing, or whose snapshot is gone; the kernel then starts cold.
+  Pagerank records ``tol`` because its done flag depends on it: a
+  manifest converged at a looser tolerance is not done at a stricter
+  one.
 - Snapshots ``iter_<iteration>_<suffix>``: every save writes a new
   directory, so no save overwrites the snapshot the manifest names.
   Retention keeps the manifest's snapshot and the one it replaced and
@@ -70,7 +76,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-FORMAT = 2
+FORMAT = 3
 
 log = logging.getLogger(__name__)
 
@@ -97,10 +103,13 @@ def checkpoints(
     edge_count: int,
     interval: int,
     resume: bool,
+    params: dict | None = None,
 ) -> CheckpointManager | NoCheckpoints:
     if checkpoint_dir is None:
         return NO_CHECKPOINTS
-    return CheckpointManager(checkpoint_dir, kernel, edge_count, interval, resume)
+    return CheckpointManager(
+        checkpoint_dir, kernel, edge_count, interval, resume, params
+    )
 
 
 class CheckpointManager:
@@ -111,10 +120,13 @@ class CheckpointManager:
         edge_count: int,
         interval: int,
         resume: bool,
+        params: dict | None = None,
     ):
         self.root = os.path.join(root, kernel)
         os.makedirs(self.root, exist_ok=True)
         self.edge_count = edge_count
+        # as a manifest reads it back, so a loaded one compares equal
+        self.params = json.loads(json.dumps(params or {}))
         self.interval = interval
         self.resume = resume
 
@@ -149,6 +161,7 @@ class CheckpointManager:
             "format": FORMAT,
             "iteration": iteration,
             "edge_count": self.edge_count,
+            "params": self.params,
             "path": path,
             "meta": meta or {},
         }
@@ -178,6 +191,8 @@ class CheckpointManager:
             reason = (
                 f"edge count {m.get('edge_count')}, this graph has {self.edge_count}"
             )
+        elif m.get("params") != self.params:
+            reason = f"parameters {m.get('params')}, this run has {self.params}"
         elif not os.path.exists(m["path"]):
             reason = f"snapshot {m['path']} is missing"
         else:

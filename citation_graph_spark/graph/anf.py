@@ -35,9 +35,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from citation_graph_spark.checkpointing import checkpoints
-from citation_graph_spark.graph.degrees import auto_partitions
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import kernel, set_kernel_width
+from citation_graph_spark.session import kernel, size_kernel
 
 # HLL needs genuinely mixed bits: a linear map (v*A + B mod P) over
 # DENSE vertex ids biases the trailing-zero distribution ~2x (measured
@@ -73,16 +72,12 @@ def _register_cols(vid_col, log2m: int):
 def exact_balls(
     edges: DataFrame,
     radius: int,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Exact out-ball sizes ``(vid, r, ball)`` for r = 0..radius over
     the DIRECTED edge set. State is the full reached-pair set — the
     oracle-scale twin of :func:`hyperball`, not a 100-TB operator."""
-    spark = edges.sparkSession
     e = edges.select("src", "dst").distinct().persist()
-    n_edges = e.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_edges)
+    width = size_kernel(edges.sparkSession, e.count())
 
     verts = (
         e.select(F.col("src").alias("vid"))
@@ -91,7 +86,7 @@ def exact_balls(
     )
     ball = (
         verts.select(F.col("vid").alias("v"), F.col("vid").alias("u"))
-        .repartition(num_partitions, "v")
+        .repartition(width, "v")
         .localCheckpoint(eager=True)
     )
 
@@ -101,7 +96,6 @@ def exact_balls(
         ).withColumn("r", F.lit(r))
 
     out = counts(0)
-    set_kernel_width(spark, num_partitions)
     for r in range(1, radius + 1):
         grown = (
             ball.join(e, ball["u"] == e["src"])
@@ -110,7 +104,7 @@ def exact_balls(
         ball = (
             ball.unionByName(grown)
             .distinct()
-            .repartition(num_partitions, "v")
+            .repartition(width, "v")
             .localCheckpoint(eager=True)
         )
         out = out.unionByName(counts(r))
@@ -138,7 +132,6 @@ def hyperball(
     edges: DataFrame,
     radius: int,
     log2m: int = 6,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
     checkpoint_dir: str | None = None,
     checkpoint_interval: int = 2,
@@ -160,8 +153,7 @@ def hyperball(
     m = 1 << log2m
     e = edges.select("src", "dst").distinct().persist()
     n_edges = e.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_edges)
+    width = size_kernel(spark, n_edges)
 
     verts = (
         e.select(F.col("src").alias("vid"))
@@ -196,25 +188,27 @@ def hyperball(
     import time as _time
 
     ck_regs, ck_est = (
-        checkpoints(checkpoint_dir, name, n_edges, checkpoint_interval, resume)
+        checkpoints(
+            checkpoint_dir, name, n_edges, checkpoint_interval, resume,
+            params={"log2m": log2m},
+        )
         for name in ("hyperball_regs", "hyperball_est")
     )
-    regs, start_r, _ = ck_regs.restore(spark, num_partitions)
-    out, est_r, _ = ck_est.restore(spark, num_partitions, key=None)
+    regs, start_r, _ = ck_regs.restore(spark, width)
+    out, est_r, _ = ck_est.restore(spark, width, key=None)
     if regs is None or out is None or est_r != start_r:
         start_r = 0
         regs = (
             verts.select("vid", idx.alias("idx"), rho.alias("rho"))
-            .repartition(num_partitions, "vid")
+            .repartition(width, "vid")
             .localCheckpoint(eager=True)
         )
         out = estimates(0)
-    set_kernel_width(spark, num_partitions)
     for r in range(start_r + 1, radius + 1):
         t0 = _time.monotonic()
         regs = (
             hyperball_round_lineage(e, regs)
-            .repartition(num_partitions, "vid")
+            .repartition(width, "vid")
             .localCheckpoint(eager=True)
         )
         out = out.unionByName(estimates(r))

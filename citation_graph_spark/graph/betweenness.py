@@ -39,9 +39,9 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from citation_graph_spark.graph.degrees import auto_partitions, undirect
+from citation_graph_spark.graph.degrees import undirect
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import kernel, set_kernel_width
+from citation_graph_spark.session import kernel, kernel_edges
 
 
 def forward_round_lineage(
@@ -100,7 +100,6 @@ def betweenness_sampled(
     edges: DataFrame,
     sources: DataFrame,
     max_iter: int = 30,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
 ) -> DataFrame:
     """Returns ``(vid: long, bc_micro: long)`` for every vertex that
@@ -110,9 +109,7 @@ def betweenness_sampled(
     levels; with a cap the result is the dependency sum over the
     ≤max_iter-hop shortest-path DAG — the (still well-defined) state
     the SQL oracle mirrors."""
-    e, verts, done = _brandes_state(
-        edges, sources, max_iter, num_partitions, metrics_path
-    )
+    e, verts, done = _brandes_state(edges, sources, max_iter, metrics_path)
     bc = (
         done.filter(F.col("vid") != F.col("s"))
         .groupBy("vid")
@@ -133,7 +130,6 @@ def edge_betweenness_sampled(
     edges: DataFrame,
     sources: DataFrame,
     max_iter: int = 30,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
 ) -> DataFrame:
     """Returns ``(a: long, b: long, eb_micro: long)`` for every
@@ -146,9 +142,7 @@ def edge_betweenness_sampled(
     score — one extra edge join and groupBy, no extra rounds. Floored
     to micro-integers for exact cross-engine comparison (per-term
     formula identical on both sides; only summation order floats)."""
-    e, verts, done = _brandes_state(
-        edges, sources, max_iter, num_partitions, metrics_path
-    )
+    e, verts, done = _brandes_state(edges, sources, max_iter, metrics_path)
     out = edge_dependency_lineage(e, done).localCheckpoint(eager=True)
     e.unpersist()
     return out
@@ -210,28 +204,19 @@ def _brandes_state(
     edges: DataFrame,
     sources: DataFrame,
     max_iter: int,
-    num_partitions: int | None,
     metrics_path: str | None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Forward + backward Brandes passes; returns ``(e, verts, done)``
     where ``e`` is the cached undirected edge closure (caller
     unpersists), ``verts`` its vertex set, and ``done`` the full
     per-(pivot, vertex) state (s, vid, dist, sigma, delta)."""
-    spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "betweenness")
-
-    e0 = undirect(edges).select("src", "dst").persist()
-    n_edges = e0.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_edges)
-    e = e0.repartition(num_partitions, "src").persist()
-    e.count()
-    e0.unpersist()
+    e, _, width = kernel_edges(undirect(edges).select("src", "dst"), "src")
 
     verts = (
         e.select(F.col("src").alias("vid"))
         .distinct()
-        .repartition(num_partitions, "vid")
+        .repartition(width, "vid")
         .localCheckpoint(eager=True)
     )
 
@@ -246,17 +231,16 @@ def _brandes_state(
             F.lit(0).alias("dist"),
             F.lit(1).cast("long").alias("sigma"),
         )
-        .repartition(num_partitions, "s", "vid")
+        .repartition(width, "s", "vid")
         .localCheckpoint(eager=True)
     )
     frontier = reach
     lmax = 0
-    set_kernel_width(spark, num_partitions)
     for it in range(1, max_iter + 1):
         t0 = time.monotonic()
         new = (
             forward_round_lineage(e, frontier, reach, it)
-            .repartition(num_partitions, "s", "vid")
+            .repartition(width, "s", "vid")
             .localCheckpoint(eager=True)
         )
         n_new = new.count()
@@ -275,12 +259,11 @@ def _brandes_state(
         .withColumn("delta", F.lit(0.0))
         .localCheckpoint(eager=True)
     )
-    set_kernel_width(spark, num_partitions)
     for lvl in range(lmax - 1, -1, -1):
         t0 = time.monotonic()
         cur = reach.filter(F.col("dist") == lvl)
         lvl_rows = backward_round_lineage(e, done, cur, lvl).repartition(
-            num_partitions, "s", "vid"
+            width, "s", "vid"
         )
         done = done.unionByName(lvl_rows).localCheckpoint(eager=True)
         metrics.log(

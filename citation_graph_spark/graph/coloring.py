@@ -37,10 +37,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from citation_graph_spark.checkpointing import checkpoints
-from citation_graph_spark.graph.degrees import auto_partitions, undirect
+from citation_graph_spark.graph.degrees import undirect
 from citation_graph_spark.graph.mis import mis_round_lineage
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import kernel, set_kernel_width
+from citation_graph_spark.session import kernel, kernel_edges
 
 # mex of a sorted ascending distinct color array: first gap, else size
 _MEX_FOLD = (
@@ -117,12 +117,10 @@ def _finish_local_coloring(
 def greedy_coloring(
     edges: DataFrame,
     max_iter: int = 100,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
     checkpoint_dir: str | None = None,
     checkpoint_interval: int = 4,
     resume: bool = False,
-    local_finish_rows: int | None = None,
 ) -> DataFrame:
     """Returns ``(vid, color, color_round)`` over the edge-derived
     vertex set: a proper coloring (no edge joins equal colors) that is
@@ -135,54 +133,43 @@ def greedy_coloring(
     the IDENTICAL final coloring — the state is the colored set, the
     uncolored frontier is exactly vertices-minus-colored, the schedule
     is a pure function of (vid, round), and the state is int64, so the
-    parquet round-trip is exact by construction.
-
-    ``local_finish_rows`` — incident-row count at or below which the
-    remaining rounds replay as one exact driver pass (None → module
-    default ``_LOCAL_FINISH_ROWS``; 0 forces the distributed rounds,
-    used by their equality tests). Identical colors either way."""
-    if local_finish_rows is None:
-        local_finish_rows = _LOCAL_FINISH_ROWS
+    parquet round-trip is exact by construction. At or below
+    ``_LOCAL_FINISH_ROWS`` incident rows the remaining rounds replay as
+    one exact driver pass; identical colors either way."""
     spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "coloring")
-
-    und0 = undirect(edges).select("src", "dst").persist()
-    n_sym = und0.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_sym)
-    e = und0.repartition(num_partitions, "src").persist()
-    e.count()
-    und0.unpersist()
+    e, n_sym, width = kernel_edges(
+        undirect(edges).select("src", "dst"), "src"
+    )
 
     verts = (
         e.select(F.col("src").alias("vid"))
         .distinct()
-        .repartition(num_partitions, "vid")
+        .repartition(width, "vid")
         .localCheckpoint(eager=True)
     )
     ckpt = checkpoints(checkpoint_dir, "coloring", n_sym, checkpoint_interval, resume)
-    colored, start_iter, _ = ckpt.restore(spark, num_partitions)
+    colored, start_iter, _ = ckpt.restore(spark, width)
     if colored is None:
         colored = spark.createDataFrame(
             [], "vid long, color long, color_round long"
         ).localCheckpoint(eager=True)
     active = verts.join(colored, "vid", "left_anti").repartition(
-        num_partitions, "vid"
+        width, "vid"
     ).localCheckpoint(eager=True)
     n_active = active.count()
 
-    set_kernel_width(spark, num_partitions)
     for it in range(start_iter + 1, max_iter + 1):
         if n_active == 0:
             break
         t0 = time.monotonic()
-        if local_finish_rows:
+        if _LOCAL_FINISH_ROWS:
             inc = e.join(
                 active.select(F.col("vid").alias("src")),
                 "src",
                 "left_semi",
             )
-            if inc.count() <= local_finish_rows:
+            if inc.count() <= _LOCAL_FINISH_ROWS:
                 inc_rows = [
                     (r["src"], r["dst"]) for r in inc.collect()
                 ]
@@ -237,11 +224,11 @@ def greedy_coloring(
         )
         colored = colored.unionByName(won)
         colored = colored.repartition(
-            num_partitions, "vid"
+            width, "vid"
         ).localCheckpoint(eager=True)
         active = (
             active.join(winners, "vid", "left_anti")
-            .repartition(num_partitions, "vid")
+            .repartition(width, "vid")
             .localCheckpoint(eager=True)
         )
         n_next = active.count()

@@ -27,9 +27,9 @@ import time
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from citation_graph_spark.graph.degrees import auto_partitions, undirect
+from citation_graph_spark.graph.degrees import undirect
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import kernel, set_kernel_width
+from citation_graph_spark.session import kernel, kernel_edges
 
 
 @kernel
@@ -37,7 +37,6 @@ def label_propagation(
     edges: DataFrame,
     vertices: DataFrame | None = None,
     max_iter: int = 10,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
     weighted: bool = False,
 ) -> DataFrame:
@@ -48,7 +47,6 @@ def label_propagation(
     of 1 (weights cast to BIGINT — integer-exact sums keep the argmax
     deterministic cross-engine; same desc-total, asc-label tie-break).
     """
-    spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "label_propagation")
 
     if weighted:
@@ -77,26 +75,20 @@ def label_propagation(
             F.col("src").alias("dst"),
             w_int.alias("w"),
         )
-        und0 = fwd.unionByName(rev).persist()
+        und0 = fwd.unionByName(rev)
     else:
-        und0 = undirect(edges).persist()
-    n_und = und0.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_und)
-    und = und0.repartition(num_partitions, "src").persist()
-    und.count()
-    und0.unpersist()
+        und0 = undirect(edges)
+    und, _, width = kernel_edges(und0, "src")
     if vertices is None:
         vertices = und.select(F.col("src").alias("vid")).distinct()
     vertices = vertices.select("vid")
 
     labels = (
         vertices.select("vid", F.col("vid").alias("label"))
-        .repartition(num_partitions, "vid")
+        .repartition(width, "vid")
         .localCheckpoint(eager=True)
     )
 
-    set_kernel_width(spark, num_partitions)
     for it in range(max_iter):
         t0 = time.monotonic()
         msg_cols = [F.col("dst"), F.col("label").alias("nbr_label")] + (

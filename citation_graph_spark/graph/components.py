@@ -28,9 +28,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from citation_graph_spark.checkpointing import checkpoints
-from citation_graph_spark.graph.degrees import auto_partitions, undirect
+from citation_graph_spark.graph.degrees import undirect
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import kernel, set_kernel_width
+from citation_graph_spark.session import kernel, kernel_edges, size_kernel
 
 
 # Below this many collected edge rows the component computation runs as
@@ -45,6 +45,10 @@ from citation_graph_spark.session import kernel, set_kernel_width
 # both kernels (min-label, star) route through the same helper so the
 # labels stay bit-identical to the distributed fixpoint.
 _LOCAL_FINISH_UND_ROWS = 500_000
+
+# Undirected-row count above which ``star_contraction=None`` picks the
+# O(log² n)-round star variant over min-label's O(diameter) rounds.
+_STAR_THRESHOLD = 10_000_000
 
 
 def _local_components(und: DataFrame, vertices: DataFrame) -> DataFrame:
@@ -97,25 +101,19 @@ def connected_components(
     edges: DataFrame,
     vertices: DataFrame | None = None,
     max_iter: int = 100,
-    num_partitions: int | None = None,
     checkpoint_dir: str | None = None,
     checkpoint_interval: int = 5,
     resume: bool = False,
     metrics_path: str | None = None,
     star_contraction: bool | None = None,
-    star_threshold: int = 10_000_000,
     init_labels: DataFrame | None = None,
-    local_finish_edges: int | None = None,
 ) -> DataFrame:
     """Returns ``(vid: long, component: long)``; component = min vid in
     the component (deterministic, order-insensitive reducer — min —
-    per SURVEY.md §7.2(c)).
-
-    ``local_finish_edges`` — undirected-row count at or below which the
-    computation runs as one vectorized driver union-find instead of
-    distributed rounds (None → module default ``_LOCAL_FINISH_UND_ROWS``;
-    0 forces the distributed kernels, used by their equality tests).
-    Identical labels either way.
+    per SURVEY.md §7.2(c)). At or below ``_LOCAL_FINISH_UND_ROWS``
+    undirected rows the labels come from one vectorized driver
+    union-find instead of distributed rounds; identical labels either
+    way.
 
     ``init_labels`` — warm start for APPEND-ONLY graph growth (the
     incremental-ingest model): a ``(vid, label)`` DataFrame from a
@@ -129,14 +127,12 @@ def connected_components(
 
     ``star_contraction=None`` (default) auto-enables the O(log² n)-round
     large/small-star variant when the undirected edge count exceeds
-    ``star_threshold`` — min-label's O(diameter) rounds are the safe
+    ``_STAR_THRESHOLD`` — min-label's O(diameter) rounds are the safe
     small-graph default, but at web scale a high-diameter graph would
     crawl. ``True``/``False`` force the choice. The auto route is
     suppressed when ``checkpoint_dir``/``resume`` are set: the star
     variant has no checkpoints, and the durable kill+resume
     contract always wins over the round-count optimization."""
-    if local_finish_edges is None:
-        local_finish_edges = _LOCAL_FINISH_UND_ROWS
     if star_contraction:
         # _star_components supports none of the warm-start / durable-
         # checkpoint contract; routing those callers there silently
@@ -159,9 +155,7 @@ def connected_components(
                 "warm-start support; use star_contraction=None (auto) "
                 "or False"
             )
-        return _star_components(
-            edges, vertices, max_iter, metrics_path, local_finish_edges
-        )
+        return _star_components(edges, vertices, max_iter, metrics_path)
 
     spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "connected_components")
@@ -172,7 +166,7 @@ def connected_components(
     # contract → vectorized local union-find (identical labels, one job
     # instead of O(rounds); see _LOCAL_FINISH_UND_ROWS)
     if (
-        n_und <= local_finish_edges
+        n_und <= _LOCAL_FINISH_UND_ROWS
         and checkpoint_dir is None
         and not resume
         and init_labels is None
@@ -189,20 +183,14 @@ def connected_components(
     # kill+resume guarantee (and resume=True would restart from round 0)
     if (
         star_contraction is None
-        and n_und > star_threshold
+        and n_und > _STAR_THRESHOLD
         and checkpoint_dir is None
         and not resume
         and init_labels is None
     ):
         und0.unpersist()
-        return _star_components(
-            edges, vertices, max_iter, metrics_path, local_finish_edges
-        )
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_und)
-    set_kernel_width(spark, num_partitions)
-    und = und0.repartition(num_partitions, "src").persist()
-    und.count()
+        return _star_components(edges, vertices, max_iter, metrics_path)
+    und, _, width = kernel_edges(und0, "src", n_und)
     und0.unpersist()
 
     if vertices is None:
@@ -212,7 +200,7 @@ def connected_components(
     ckpt = checkpoints(
         checkpoint_dir, "components", n_und, checkpoint_interval, resume
     )
-    labels, start_iter, meta = ckpt.restore(spark, num_partitions)
+    labels, start_iter, meta = ckpt.restore(spark, width)
     if meta.get("done"):
         und.unpersist()
         return labels.select("vid", F.col("label").alias("component"))
@@ -225,13 +213,13 @@ def connected_components(
                     "left",
                 )
                 .select("vid", F.coalesce("_seed", F.col("vid")).alias("label"))
-                .repartition(num_partitions, "vid")
+                .repartition(width, "vid")
                 .localCheckpoint(eager=True)
             )
         else:
             labels = (
                 vertices.select("vid", F.col("vid").alias("label"))
-                .repartition(num_partitions, "vid")
+                .repartition(width, "vid")
                 .localCheckpoint(eager=True)
             )
 
@@ -270,7 +258,6 @@ def _star_components(
     vertices: DataFrame | None,
     max_iter: int,
     metrics_path: str | None,
-    local_finish_edges: int | None = None,
 ) -> DataFrame:
     """Alternating large-star/small-star contraction (logarithmic rounds).
 
@@ -293,17 +280,14 @@ def _star_components(
         F.col("src").alias("u"), F.col("dst").alias("v")
     ).localCheckpoint(eager=True)
     n_e = e.count()
-    if local_finish_edges is None:
-        local_finish_edges = _LOCAL_FINISH_UND_ROWS
     # driver-trivial graph → vectorized local union-find (identical
     # min-vid labels, one job instead of O(log² n) self-join rounds)
-    if 2 * n_e <= local_finish_edges:
+    if 2 * n_e <= _LOCAL_FINISH_UND_ROWS:
         return _local_components(
             e.select(F.col("u").alias("src"), F.col("v").alias("dst")),
             vertices,
         ).localCheckpoint(eager=True)
-    num_partitions = auto_partitions(spark, n_e)
-    set_kernel_width(spark, num_partitions)
+    size_kernel(spark, n_e)
 
     # Each round SELF-JOINS the evolving edge list twice (nbrs with its
     # own groupBy-min), which SQUARES Catalyst's sizeInBytes estimate —

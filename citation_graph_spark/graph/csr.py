@@ -34,7 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from citation_graph_spark.graph.degrees import auto_partitions
+from citation_graph_spark.session import kernel, kernel_edges
 
 
 def csr_contribution_sums(edges_n: DataFrame, ranks: DataFrame) -> DataFrame:
@@ -78,13 +78,13 @@ def csr_contribution_sums(edges_n: DataFrame, ranks: DataFrame) -> DataFrame:
     return partials.groupBy("dst").agg(F.sum("s").alias("s"))
 
 
+@kernel
 def pagerank_csr(
     edges: DataFrame,
     vertices: DataFrame | None = None,
     alpha: float = 0.85,
     tol: float = 1e-6,
     max_iter: int = 200,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """PageRank with the CSR-block contribution step. Semantics are
     identical to graph.pagerank (same dangling handling, same
@@ -100,17 +100,12 @@ def pagerank_csr(
     vertices = vertices.select("vid")
 
     out_deg = edges.groupBy("src").agg(F.sum("weight").alias("_wout"))
-    edges_n0 = (
-        edges.join(out_deg, "src")
-        .select("src", "dst", (F.col("weight") / F.col("_wout")).alias("wnorm"))
-        .persist()
+    edges_n, _, width = kernel_edges(
+        edges.join(out_deg, "src").select(
+            "src", "dst", (F.col("weight") / F.col("_wout")).alias("wnorm")
+        ),
+        "src",
     )
-    edge_count = edges_n0.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, edge_count)
-    edges_n = edges_n0.repartition(num_partitions, "src").persist()
-    edges_n.count()
-    edges_n0.unpersist()
 
     n = vertices.count()
     if n == 0:
@@ -127,7 +122,7 @@ def pagerank_csr(
             F.lit(1.0 / n).alias("rank"),
             F.coalesce("is_dangling", F.lit(False)).alias("is_dangling"),
         )
-        .repartition(num_partitions, "vid")
+        .repartition(width, "vid")
         .localCheckpoint(eager=True)
     )
 

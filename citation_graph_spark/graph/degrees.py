@@ -8,27 +8,8 @@ sibling group-counts (loader.py:359-444,529-632). All are one shuffle:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from citation_graph_spark.session import session_width
-
-
-def auto_partitions(
-    spark: SparkSession,
-    n_rows: int,
-    rows_per_partition: int = 50_000,
-    floor: int = 4,
-) -> int:
-    """Data-proportional partition count for iterative kernels.
-
-    A fixed ``spark.sql.shuffle.partitions`` is wrong at both ends:
-    a 20k-edge fixture graph over 32 partitions pays 32 task launches
-    per round for microseconds of work each, while a 10^11-edge graph
-    needs far more than the session default. Cap at the session setting
-    (the cluster's parallelism; not a running kernel's width), floor at a small constant, target
-    ``rows_per_partition`` messages per task."""
-    return max(floor, min(session_width(spark), n_rows // rows_per_partition + 1))
 
 
 def out_degrees(edges: DataFrame, weighted: bool = True) -> DataFrame:

@@ -31,9 +31,9 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from citation_graph_spark.graph.degrees import auto_partitions, undirect
+from citation_graph_spark.graph.degrees import undirect
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import kernel, set_kernel_width
+from citation_graph_spark.session import kernel, kernel_edges
 
 # eps = 1/10: keep v iff EPS_NUM * deg(v) * V > EPS_DEN * E_sym,
 # i.e. deg(v) > 2(1+eps) * |E|/|V|  with  2(1+eps) = 22/10 = EPS_DEN/EPS_NUM
@@ -59,7 +59,6 @@ def peel_round_lineage(
 def densest_subgraph_rounds(
     edges: DataFrame,
     max_iter: int = 100,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
 ) -> DataFrame:
     """Run the peel to exhaustion (or ``max_iter``) and return one row
@@ -69,7 +68,7 @@ def densest_subgraph_rounds(
     maximum density — the 2(1+eps)-approximate densest subgraph is the
     survivor set entering that round (see
     :func:`densest_subgraph_vertices`)."""
-    rows, _ = _peel(edges, max_iter, num_partitions, metrics_path, None)
+    rows, _ = _peel(edges, max_iter, metrics_path, None)
     spark = edges.sparkSession
     best_density = max(r[3] for r in rows)
     best_round = min(r[0] for r in rows if r[3] == best_density)
@@ -85,14 +84,11 @@ def densest_subgraph_rounds(
 def densest_subgraph_vertices(
     edges: DataFrame,
     max_iter: int = 100,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
 ) -> DataFrame:
     """Returns ``(vid: long)`` — the survivor set at the best-density
     round (the 2(1+eps)-approximate densest subgraph)."""
-    rows, snapshots = _peel(
-        edges, max_iter, num_partitions, metrics_path, keep_snapshots=True
-    )
+    rows, snapshots = _peel(edges, max_iter, metrics_path, keep_snapshots=True)
     best_density = max(r[3] for r in rows)
     best_round = min(r[0] for r in rows if r[3] == best_density)
     return snapshots[best_round]
@@ -101,25 +97,15 @@ def densest_subgraph_vertices(
 def _peel(
     edges: DataFrame,
     max_iter: int,
-    num_partitions: int | None,
     metrics_path: str | None,
     keep_snapshots: bool | None,
 ):
-    spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "densest_subgraph")
-
-    und0 = undirect(edges).select("src", "dst").persist()
-    n_sym = und0.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_sym)
-    alive = (
-        und0.repartition(num_partitions, "src").localCheckpoint(eager=True)
-    )
-    und0.unpersist()
+    e, _, width = kernel_edges(undirect(edges).select("src", "dst"), "src")
+    alive = e
 
     rows: list[tuple[int, int, int, int]] = []
     snapshots: dict[int, DataFrame] = {}
-    set_kernel_width(spark, num_partitions)
     for it in range(1, max_iter + 1):
         t0 = time.monotonic()
         # the round's one aggregation: surviving degree + V in one pass
@@ -136,7 +122,7 @@ def _peel(
         # keep v iff 10*deg*V > 11*E_sym — pure int64, oracle-identical
         alive = (
             peel_round_lineage(alive, deg, n_v, n_sym)
-            .repartition(num_partitions, "src")
+            .repartition(width, "src")
             .localCheckpoint(eager=True)
         )
         n_next = alive.count()
@@ -149,4 +135,5 @@ def _peel(
         )
         if n_next == 0:
             break
+    e.unpersist()
     return rows, snapshots

@@ -49,9 +49,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from citation_graph_spark.checkpointing import checkpoints
-from citation_graph_spark.graph.degrees import auto_partitions, undirect
+from citation_graph_spark.graph.degrees import undirect
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import kernel, set_kernel_width
+from citation_graph_spark.session import kernel, size_kernel
 
 EV_SCALE = 1000000
 
@@ -76,7 +76,6 @@ def eigenvector_round_lineage(sym2: DataFrame, x: DataFrame) -> DataFrame:
 def eigenvector_centrality(
     edges: DataFrame,
     max_iter: int = 10,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
     checkpoint_dir: str | None = None,
     checkpoint_interval: int = 4,
@@ -100,23 +99,21 @@ def eigenvector_centrality(
         )
     ).persist()
     n_edges = sym2.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_edges)
+    width = size_kernel(spark, n_edges)
 
     ckpt = checkpoints(
         checkpoint_dir, "eigenvector", n_edges, checkpoint_interval, resume
     )
-    x, start_iter, _ = ckpt.restore(spark, num_partitions)
+    x, start_iter, _ = ckpt.restore(spark, width)
     if x is None:
         x = (
             verts.select(
                 "vid", F.lit(EV_SCALE).cast("long").alias("x")
             )
-            .repartition(num_partitions, "vid")
+            .repartition(width, "vid")
             .localCheckpoint(eager=True)
         )
 
-    set_kernel_width(spark, num_partitions)
     for it in range(start_iter + 1, max_iter + 1):
         t0 = time.monotonic()
         y = eigenvector_round_lineage(sym2, x)
@@ -131,7 +128,7 @@ def eigenvector_centrality(
                 "vid",
                 F.expr(f"div(y * {EV_SCALE}, {m})").alias("x"),
             )
-            .repartition(num_partitions, "vid")
+            .repartition(width, "vid")
             .localCheckpoint(eager=True)
         )
         metrics.log(

@@ -35,9 +35,8 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from citation_graph_spark.graph.degrees import auto_partitions
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import kernel, set_kernel_width
+from citation_graph_spark.session import kernel, kernel_edges
 
 
 @kernel
@@ -45,7 +44,6 @@ def hits(
     edges: DataFrame,
     vertices: DataFrame | None = None,
     max_iter: int = 15,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
 ) -> DataFrame:
     """Returns ``(vid: long, authority: double, hub: double)``;
@@ -75,13 +73,7 @@ def hits(
     rev = edges.select(
         F.col("dst").alias("mfrom"), F.col("src").alias("mto"), F.lit(False).alias("is_fwd")
     )
-    e0 = fwd.unionByName(rev).persist()
-    n_msgs = e0.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_msgs)
-    e = e0.repartition(num_partitions, "mfrom").persist()
-    e.count()
-    e0.unpersist()
+    e, n_msgs, width = kernel_edges(fwd.unionByName(rev), "mfrom")
 
     state = (
         vertices.select(
@@ -89,11 +81,10 @@ def hits(
             F.lit(1.0 / n).alias("a"),
             F.lit(1.0 / n).alias("h"),
         )
-        .repartition(num_partitions, "vid")
+        .repartition(width, "vid")
         .localCheckpoint(eager=True)
     )
 
-    set_kernel_width(spark, num_partitions)
     for it in range(1, max_iter + 1):
         t0 = time.monotonic()
         msgs = e.join(state, e["mfrom"] == state["vid"]).select(
@@ -115,7 +106,7 @@ def hits(
                 F.coalesce("a_raw", F.lit(0.0)).alias("a_raw"),
                 F.coalesce("h_raw", F.lit(0.0)).alias("h_raw"),
             )
-            .repartition(num_partitions, "vid")
+            .repartition(width, "vid")
             .persist()
         )
         tot = raw.agg(F.sum("a_raw"), F.sum("h_raw")).collect()[0]

@@ -24,18 +24,14 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def assign_dense_ids(
-    df: DataFrame, key_cols: list[str], num_partitions: int | None = None
-) -> DataFrame:
+def assign_dense_ids(df: DataFrame, key_cols: list[str]) -> DataFrame:
     """Return ``df`` with a dense ``vid: long`` column, 0..N-1 in
-    lexicographic ``key_cols`` order. ``key_cols`` must be unique per row."""
+    lexicographic ``key_cols`` order. ``key_cols`` must be unique per row.
+    It range-partitions at the current ``spark.sql.shuffle.partitions``."""
     spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    keyed = df.repartitionByRange(num_partitions, *key_cols).sortWithinPartitions(
-        *key_cols
-    )
+    keyed = df.repartitionByRange(width, *key_cols).sortWithinPartitions(*key_cols)
     with_part = keyed.withColumn("_pid", F.spark_partition_id())
     local = with_part.withColumn(
         "_lrank",
@@ -61,7 +57,7 @@ def assign_dense_ids(
     return out
 
 
-def build_vertices(docs: DataFrame, num_partitions: int | None = None) -> DataFrame:
+def build_vertices(docs: DataFrame) -> DataFrame:
     """documents → vertices(vid, repo, path, lang, content_sha256).
 
     The sha256 column carries the per-row invariant the way ``uid``
@@ -73,7 +69,7 @@ def build_vertices(docs: DataFrame, num_partitions: int | None = None) -> DataFr
     base = docs.select(
         "repo", "path", "lang", F.sha2("content", 256).alias("content_sha256")
     ).persist()
-    out = assign_dense_ids(base, ["repo", "path"], num_partitions).select(
+    out = assign_dense_ids(base, ["repo", "path"]).select(
         "vid", "repo", "path", "lang", "content_sha256"
     )
     # assign_dense_ids localCheckpoints its sorted intermediate, so the

@@ -36,9 +36,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from citation_graph_spark.checkpointing import checkpoints
-from citation_graph_spark.graph.degrees import auto_partitions
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import kernel, set_kernel_width
+from citation_graph_spark.session import kernel, kernel_edges
 
 
 def round_lineage(
@@ -74,7 +73,6 @@ def katz_centrality(
     alpha: float = 0.001,
     beta: float = 1.0,
     max_iter: int = 8,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
     checkpoint_dir: str | None = None,
     checkpoint_interval: int = 4,
@@ -101,29 +99,27 @@ def katz_centrality(
     if n == 0:
         return spark.createDataFrame([], "vid long, score double")
 
-    e0 = edges.select("src", "dst").distinct().persist()
-    n_edges = e0.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_edges)
-    e = e0.repartition(num_partitions, "src").persist()
-    e.count()
-    e0.unpersist()
+    e, n_edges, width = kernel_edges(
+        edges.select("src", "dst").distinct(), "src"
+    )
 
-    ckpt = checkpoints(checkpoint_dir, "katz", n_edges, checkpoint_interval, resume)
-    state, start_iter, _ = ckpt.restore(spark, num_partitions)
+    ckpt = checkpoints(
+        checkpoint_dir, "katz", n_edges, checkpoint_interval, resume,
+        params={"alpha": alpha, "beta": beta},
+    )
+    state, start_iter, _ = ckpt.restore(spark, width)
     if state is None:
         state = (
             vertices.select("vid", F.lit(float(beta)).alias("x"))
-            .repartition(num_partitions, "vid")
+            .repartition(width, "vid")
             .localCheckpoint(eager=True)
         )
 
-    set_kernel_width(spark, num_partitions)
     for it in range(start_iter + 1, max_iter + 1):
         t0 = time.monotonic()
         state = (
             round_lineage(e, state, alpha, beta)
-            .repartition(num_partitions, "vid")
+            .repartition(width, "vid")
             .localCheckpoint(eager=True)
         )
         metrics.log(

@@ -30,9 +30,9 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from citation_graph_spark.graph.degrees import auto_partitions, undirect
+from citation_graph_spark.graph.degrees import undirect
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import kernel, set_kernel_width
+from citation_graph_spark.session import kernel, kernel_edges
 
 
 @kernel
@@ -40,7 +40,6 @@ def k_core(
     edges: DataFrame,
     k: int,
     max_iter: int = 100,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
 ) -> DataFrame:
     """Returns ``(vid: long)`` — the vertices of the k-core (undirected
@@ -48,26 +47,17 @@ def k_core(
     remove-all-below-k rounds. ``max_iter`` caps the rounds; with a cap
     the result is the (still well-defined) state after exactly that
     many synchronous peels, which the SQL oracle mirrors."""
-    spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "k_core")
-
-    und0 = undirect(edges).select("src", "dst").persist()
-    n_und = und0.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_und)
-    e = und0.repartition(num_partitions, "src").persist()
-    e.count()
-    und0.unpersist()
+    e, _, width = kernel_edges(undirect(edges).select("src", "dst"), "src")
 
     alive = (
         e.select(F.col("src").alias("vid"))
         .distinct()
-        .repartition(num_partitions, "vid")
+        .repartition(width, "vid")
         .localCheckpoint(eager=True)
     )
     n_alive = alive.count()
 
-    set_kernel_width(spark, num_partitions)
     for it in range(1, max_iter + 1):
         t0 = time.monotonic()
         # edges whose BOTH endpoints survive, then surviving degree
@@ -79,7 +69,7 @@ def k_core(
             .agg(F.count(F.lit(1)).alias("deg"))
             .filter(F.col("deg") >= k)
             .select(F.col("src").alias("vid"))
-            .repartition(num_partitions, "vid")
+            .repartition(width, "vid")
             .localCheckpoint(eager=True)
         )
         n_new = survivors.count()

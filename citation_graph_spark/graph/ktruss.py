@@ -37,10 +37,9 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from citation_graph_spark.graph.degrees import auto_partitions
 from citation_graph_spark.graph.triangles import oriented_edges
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import kernel, set_kernel_width
+from citation_graph_spark.session import kernel, kernel_edges
 
 
 def _support_from_oriented(o: DataFrame) -> DataFrame:
@@ -92,7 +91,6 @@ def k_truss(
     edges: DataFrame,
     k: int,
     max_iter: int = 50,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
 ) -> DataFrame:
     """Returns ``(a: long, b: long, support: long)`` with a < b — the
@@ -103,7 +101,6 @@ def k_truss(
     that many synchronous peels, which the SQL oracle mirrors."""
     if k < 3:
         raise ValueError(f"k-truss needs k >= 3, got {k}")
-    spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "k_truss")
 
     canon = (
@@ -113,22 +110,17 @@ def k_truss(
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .persist()
     )
-    n_edges = canon.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_edges)
-    alive = canon.repartition(num_partitions, "a").localCheckpoint(eager=True)
-    canon.unpersist()
+    e, _, width = kernel_edges(canon, "a")
+    alive = e
     n_alive = alive.count()
 
-    set_kernel_width(spark, num_partitions)
     for it in range(1, max_iter + 1):
         t0 = time.monotonic()
         survivors = (
-            _edge_support(alive, num_partitions)
+            _edge_support(alive, width)
             .filter(F.col("support") >= k - 2)
-            .repartition(num_partitions, "a")
+            .repartition(width, "a")
             .localCheckpoint(eager=True)
         )
         n_new = survivors.count()
@@ -143,26 +135,29 @@ def k_truss(
         if converged or n_alive == 0:
             # converged: this round's support is the fixpoint
             # support — reuse it instead of one more enumeration
+            e.unpersist()
             return survivors.select("a", "b", "support")
 
     # round cap hit: report the capped state with its support
-    return (
+    out = (
         alive.join(
-            _edge_support(alive, num_partitions), ["a", "b"], "left"
-        ).select(
-            "a", "b", F.coalesce("support", F.lit(0)).alias("support")
+            _edge_support(alive, width), ["a", "b"], "left"
         )
+        .select("a", "b", F.coalesce("support", F.lit(0)).alias("support"))
+        .localCheckpoint(eager=True)
     )
+    e.unpersist()
+    return out
 
 
-def _edge_support(canon: DataFrame, num_partitions: int) -> DataFrame:
+def _edge_support(canon: DataFrame, width: int) -> DataFrame:
     """Orient, MATERIALIZE the orientation (it is read four times by
     the wedge/closure joins), then count per-edge support."""
     o = (
         oriented_edges(
             canon.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         )
-        .repartition(num_partitions, "u")
+        .repartition(width, "u")
         .localCheckpoint(eager=True)
     )
     return _support_from_oriented(o)

@@ -44,9 +44,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from citation_graph_spark.checkpointing import checkpoints
-from citation_graph_spark.graph.degrees import auto_partitions, undirect
+from citation_graph_spark.graph.degrees import undirect
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import kernel, set_kernel_width
+from citation_graph_spark.session import kernel, size_kernel
 
 
 def louvain_round_lineage(
@@ -123,7 +123,6 @@ def louvain_round_lineage(
 def louvain_local_moves(
     edges: DataFrame,
     rounds: int = 2,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
     checkpoint_dir: str | None = None,
     checkpoint_interval: int = 2,
@@ -149,28 +148,26 @@ def louvain_local_moves(
         .persist()
     )
     m = e.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, m)
+    width = size_kernel(spark, m)
     sym = undirect(e).persist()
     deg = (
         sym.groupBy(F.col("src").alias("vid"))
         .agg(F.count(F.lit(1)).alias("d"))
-        .repartition(num_partitions, "vid")
+        .repartition(width, "vid")
         .persist()
     )
     deg.count()
 
     metrics = MetricsLogger(metrics_path, "louvain")
     ckpt = checkpoints(checkpoint_dir, "louvain", m, checkpoint_interval, resume)
-    comm, start_round, _ = ckpt.restore(spark, num_partitions)
+    comm, start_round, _ = ckpt.restore(spark, width)
     if comm is None:
         comm = deg.select("vid", F.col("vid").alias("community"))
-    set_kernel_width(spark, num_partitions)
     for it in range(start_round + 1, rounds + 1):
         t0 = time.monotonic()
         comm = (
             louvain_round_lineage(sym, deg, comm, m)
-            .repartition(num_partitions, "vid")
+            .repartition(width, "vid")
             .localCheckpoint(eager=True)
         )
         metrics.log(
@@ -188,7 +185,6 @@ def louvain_local_moves_weighted(
     wedges: DataFrame,
     self_weights: DataFrame | None = None,
     rounds: int = 2,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
 ) -> DataFrame:
     """Weighted local moves — the LEVEL-2 (and deeper) step of the
@@ -209,9 +205,7 @@ def louvain_local_moves_weighted(
         .filter(F.col("src") != F.col("dst"))
         .persist()
     )
-    n_e = e.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_e)
+    width = size_kernel(spark, e.count())
     sym = e.unionByName(
         e.select(
             F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
@@ -235,19 +229,18 @@ def louvain_local_moves_weighted(
                 F.coalesce("dw", F.lit(0)) + F.coalesce("sw", F.lit(0))
             ).alias("d"),
         )
-        .repartition(num_partitions, "vid")
+        .repartition(width, "vid")
         .persist()
     )
     total_vol = deg.agg(F.sum("d")).first()[0] or 0
     assert total_vol % 2 == 0, "self_weights must use the 2x convention"
     metrics = MetricsLogger(metrics_path, "louvain_weighted")
     comm = deg.select("vid", F.col("vid").alias("community"))
-    set_kernel_width(spark, num_partitions)
     for it in range(1, rounds + 1):
         t0 = time.monotonic()
         comm = (
             louvain_round_lineage(sym, deg, comm, total_vol // 2)
-            .repartition(num_partitions, "vid")
+            .repartition(width, "vid")
             .localCheckpoint(eager=True)
         )
         metrics.log(

@@ -48,9 +48,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from citation_graph_spark.checkpointing import checkpoints
-from citation_graph_spark.graph.degrees import auto_partitions, undirect
+from citation_graph_spark.graph.degrees import undirect
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import kernel, set_kernel_width
+from citation_graph_spark.session import kernel, size_kernel
 
 _P = 2147483647
 _EID_S = 2147483648  # 2^31: eid = a * 2^31 + b, injective for vid < 2^31
@@ -131,12 +131,10 @@ def matching_round_lineage(act: DataFrame, it: int) -> DataFrame:
 def maximal_matching(
     edges: DataFrame,
     max_iter: int = 100,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
     checkpoint_dir: str | None = None,
     checkpoint_interval: int = 4,
     resume: bool = False,
-    local_finish_rows: int | None = None,
 ) -> DataFrame:
     """Returns ``(vid, mate, matched, match_round)`` over the
     edge-derived vertex set: ``mate`` the partner vid (-1 when
@@ -149,40 +147,34 @@ def maximal_matching(
     the IDENTICAL final matching — the state is the matched-pair set,
     the active edge set is exactly canonical-edges-minus-matched-
     endpoints and the schedule is a pure function of (edge, round); the
-    int64 state round-trips parquet exactly.
-
-    ``local_finish_rows`` — active-edge count at or below which the
-    remaining rounds replay as one exact driver pass (None → module
-    default ``_LOCAL_FINISH_ROWS``; 0 forces the distributed rounds,
-    used by their equality tests). Identical matching either way."""
-    if local_finish_rows is None:
-        local_finish_rows = _LOCAL_FINISH_ROWS
+    int64 state round-trips parquet exactly. At or below
+    ``_LOCAL_FINISH_ROWS`` active edges the remaining rounds replay as
+    one exact driver pass; identical matching either way."""
     spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "matching")
 
     und0 = undirect(edges).select("src", "dst").persist()
     n_sym = und0.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_sym)
+    width = size_kernel(spark, n_sym)
 
     m = ((F.col("a") % _P) * F.lit(1000003) + F.col("b") % _P) % _P
     act = (
         und0.filter(F.col("src") < F.col("dst"))
         .select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .withColumn("m", m)
-        .repartition(num_partitions, "a")
+        .repartition(width, "a")
         .localCheckpoint(eager=True)
     )
     verts = (
         und0.select(F.col("src").alias("vid"))
         .distinct()
-        .repartition(num_partitions, "vid")
+        .repartition(width, "vid")
         .localCheckpoint(eager=True)
     )
     und0.unpersist()
 
     ckpt = checkpoints(checkpoint_dir, "matching", n_sym, checkpoint_interval, resume)
-    matched, start_iter, _ = ckpt.restore(spark, num_partitions, key="a")
+    matched, start_iter, _ = ckpt.restore(spark, width, key="a")
     if matched is None:
         matched = spark.createDataFrame(
             [], "a long, b long, match_round long"
@@ -196,17 +188,16 @@ def maximal_matching(
         act.join(mv0.withColumnRenamed("vid", "a"), "a", "left_anti")
         .join(mv0.withColumnRenamed("vid", "b"), "b", "left_anti")
         .select("a", "b", "m")
-        .repartition(num_partitions, "a")
+        .repartition(width, "a")
         .localCheckpoint(eager=True)
     )
     n_active = act.count()
 
-    set_kernel_width(spark, num_partitions)
     for it in range(start_iter + 1, max_iter + 1):
         if n_active == 0:
             break
         t0 = time.monotonic()
-        if local_finish_rows and n_active <= local_finish_rows:
+        if _LOCAL_FINISH_ROWS and n_active <= _LOCAL_FINISH_ROWS:
             act_rows = [
                 (r["a"], r["b"], r["m"]) for r in act.collect()
             ]
@@ -242,7 +233,7 @@ def maximal_matching(
             act.join(mv.withColumnRenamed("vid", "a"), "a", "left_anti")
             .join(mv.withColumnRenamed("vid", "b"), "b", "left_anti")
             .select("a", "b", "m")
-            .repartition(num_partitions, "a")
+            .repartition(width, "a")
             .localCheckpoint(eager=True)
         )
         n_next = act.count()

@@ -35,9 +35,9 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from citation_graph_spark.graph.degrees import auto_partitions, undirect
+from citation_graph_spark.graph.degrees import undirect
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import kernel, set_kernel_width
+from citation_graph_spark.session import kernel, kernel_edges
 
 _P = 2147483647
 _M = 8388608  # 2^23
@@ -72,7 +72,6 @@ def mis_round_lineage(e: DataFrame, active: DataFrame, it: int) -> DataFrame:
 def maximal_independent_set(
     edges: DataFrame,
     max_iter: int = 100,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
 ) -> DataFrame:
     """Returns ``(vid, in_mis, mis_round)`` over the edge-derived
@@ -81,28 +80,19 @@ def maximal_independent_set(
     maximality hold at the fixpoint; with a ``max_iter`` cap the
     result is the state after exactly that many synchronous rounds
     (which the SQL oracle mirrors)."""
-    spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "mis")
-
-    und0 = undirect(edges).select("src", "dst").persist()
-    n_sym = und0.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_sym)
-    e = und0.repartition(num_partitions, "src").persist()
-    e.count()
-    und0.unpersist()
+    e, _, width = kernel_edges(undirect(edges).select("src", "dst"), "src")
 
     verts = (
         e.select(F.col("src").alias("vid"))
         .distinct()
-        .repartition(num_partitions, "vid")
+        .repartition(width, "vid")
         .localCheckpoint(eager=True)
     )
     active = verts
     n_active = active.count()
     mis = None
 
-    set_kernel_width(spark, num_partitions)
     for it in range(1, max_iter + 1):
         t0 = time.monotonic()
         e_act = e.join(
@@ -125,7 +115,7 @@ def maximal_independent_set(
         active = (
             active.join(winners, "vid", "left_anti")
             .join(removed_nb, "vid", "left_anti")
-            .repartition(num_partitions, "vid")
+            .repartition(width, "vid")
             .localCheckpoint(eager=True)
         )
         n_next = active.count()
@@ -140,12 +130,13 @@ def maximal_independent_set(
         if n_active == 0:
             break
 
-    e.unpersist()
-    return verts.join(mis, "vid", "left").select(
+    out = verts.join(mis, "vid", "left").select(
         "vid",
         F.when(F.col("mis_round").isNotNull(), 1)
         .otherwise(0)
         .cast("long")
         .alias("in_mis"),
         F.coalesce("mis_round", F.lit(0)).cast("long").alias("mis_round"),
-    )
+    ).localCheckpoint(eager=True)
+    e.unpersist()
+    return out

@@ -30,8 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from citation_graph_spark.graph.degrees import auto_partitions
-from citation_graph_spark.session import kernel, set_kernel_width
+from citation_graph_spark.session import kernel, size_kernel
 
 
 @kernel
@@ -39,7 +38,6 @@ def boruvka_msf(
     edges: DataFrame,
     vertices: DataFrame | None = None,
     max_rounds: int = 40,
-    local_finish_comps: int | None = None,
 ) -> DataFrame:
     """Minimum spanning forest of an undirected weighted graph.
 
@@ -47,17 +45,11 @@ def boruvka_msf(
     as undirected (one row per unordered pair is enough — symmetry is
     handled internally).  ``vertices``: optional (vid) frame; isolated
     vertices simply contribute no forest edges.  Returns the forest as
-    (src, dst, w) — per connected component, |C|-1 edges.
-
-    ``local_finish_comps`` — live-component count at or below which the
-    loop stops and the remaining forest is computed by one driver
-    Kruskal over the collected min-edge-per-pair quotient (None →
-    module default ``_LOCAL_FINISH_COMPS``; 0 forces the distributed
-    loop to run out, used by its equality tests).  Identical forest
+    (src, dst, w) — per connected component, |C|-1 edges.  At or below
+    ``_LOCAL_FINISH_COMPS`` live components the loop stops and one
+    driver Kruskal computes the remaining forest; identical forest
     either way.
     """
-    if local_finish_comps is None:
-        local_finish_comps = _LOCAL_FINISH_COMPS
     spark = edges.sparkSession
     e = normalize_edges(edges).localCheckpoint(eager=True)
     if vertices is None:
@@ -71,22 +63,22 @@ def boruvka_msf(
     )
 
     n_edges = e.count()
-    if local_finish_comps > 0 and n_edges <= _LOCAL_FINISH_EDGE_ROWS:
+    if _LOCAL_FINISH_COMPS > 0 and n_edges <= _LOCAL_FINISH_EDGE_ROWS:
         # round-zero filtering endgame: the whole graph fits the
         # driver, so the identity-labels quotient IS the normalized
         # edge set — one collect, one Kruskal, zero loop rounds
-        # (local_finish_comps=0 still forces the distributed loop for
-        # the equality tests)
+        # (_LOCAL_FINISH_COMPS = 0 forces the distributed loop, as the
+        # equality tests do)
         return _local_kruskal_tail(e, labels)
 
     forest_parts: list[DataFrame] = []
-    set_kernel_width(spark, auto_partitions(spark, n_edges))
+    size_kernel(spark, n_edges)
     for _ in range(max_rounds):
         sel = nomination_lineage(e, labels).localCheckpoint(eager=True)
         n_live = sel.count()
         if n_live == 0:  # no cross-component edge left anywhere
             break
-        if n_live <= local_finish_comps:
+        if n_live <= _LOCAL_FINISH_COMPS:
             # Kruskal endgame (filtering, Lattanzi et al. SPAA'11):
             # ≤1024 live components bound the min-edge-per-pair
             # quotient to ≤524k rows — reduce distributedly, collect,

@@ -40,9 +40,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from citation_graph_spark.checkpointing import checkpoints
-from citation_graph_spark.graph.degrees import auto_partitions
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import kernel, set_kernel_width
+from citation_graph_spark.session import kernel, size_kernel
 
 
 @kernel
@@ -65,6 +64,10 @@ def pagerank(
     ``vertices`` (a DataFrame with a ``vid`` column) defines the vertex
     universe — isolated vertices still receive teleport + dangling mass.
     If omitted it is derived from edge endpoints.
+
+    ``num_partitions`` pins the kernel's shuffle width, for scaling jobs
+    that hold it fixed across graph sizes; by default the edge count
+    sizes it (``session.size_kernel``).
 
     ``init_ranks`` — warm start: a ``(vid, score)`` DataFrame (e.g. the
     converged ranks of a previous, smaller snapshot of the graph) used
@@ -95,9 +98,7 @@ def pagerank(
     own_edges = edges.storageLevel == StorageLevel.NONE
     edges_p = edges.persist() if own_edges else edges
     edge_count = edges_p.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, edge_count)
-    set_kernel_width(spark, num_partitions)
+    width = size_kernel(spark, edge_count, num_partitions)
 
     if vertices is None:
         vertices = (
@@ -110,7 +111,7 @@ def pagerank(
     out_deg = edges_p.groupBy("src").agg(F.sum("weight").alias("_wout")).persist()
     # pin the co-partitioning every round reuses (SURVEY §4.3)
     edges_n = (
-        edges_p.repartition(num_partitions, "src")
+        edges_p.repartition(width, "src")
         .join(out_deg, "src")
         .select("src", "dst", (F.col("weight") / F.col("_wout")).alias("wnorm"))
         .persist()
@@ -124,9 +125,10 @@ def pagerank(
         return spark.createDataFrame([], "vid long, score double")
 
     ckpt = checkpoints(
-        checkpoint_dir, "pagerank", edge_count, checkpoint_interval, resume
+        checkpoint_dir, "pagerank", edge_count, checkpoint_interval, resume,
+        params={"alpha": alpha, "tol": tol},
     )
-    ranks, start_iter, meta = ckpt.restore(spark, num_partitions)
+    ranks, start_iter, meta = ckpt.restore(spark, width)
     if ranks is None:
         dangling_flags = vertices.join(
             out_deg.select("src"),
@@ -151,7 +153,7 @@ def pagerank(
             total = seeded.agg(F.sum("rank")).collect()[0][0]
             ranks = (
                 seeded.withColumn("rank", F.col("rank") / F.lit(float(total)))
-                .repartition(num_partitions, "vid")
+                .repartition(width, "vid")
                 .localCheckpoint(eager=True)
             )
         else:
@@ -161,7 +163,7 @@ def pagerank(
                     F.lit(1.0 / n).alias("rank"),
                     F.coalesce("is_dangling", F.lit(False)).alias("is_dangling"),
                 )
-                .repartition(num_partitions, "vid")
+                .repartition(width, "vid")
                 .localCheckpoint(eager=True)
             )
 

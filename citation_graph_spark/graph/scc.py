@@ -34,7 +34,7 @@ inner fixpoints are O(diameter) one-shuffle rounds, the same cost
 shape as min-label connected components; the same star-contraction /
 checkpoint treatments apply.
 
-Endgame: below ``local_finish_rows`` live edge rows the remaining
+Endgame: below ``_LOCAL_FINISH_EDGE_ROWS`` live edge rows the remaining
 graph is collected and finished with a VECTORIZED numpy replica of
 the identical coloring iteration (np.maximum.at / logical_or.at — no
 Python per-edge loop), the same "filtering" endgame as
@@ -50,9 +50,8 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from citation_graph_spark.graph.degrees import auto_partitions
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import kernel, set_kernel_width
+from citation_graph_spark.session import kernel, size_kernel
 
 _LOCAL_FINISH_EDGE_ROWS = 50_000
 
@@ -100,9 +99,7 @@ def _local_scc_arrays(src, dst, vids):
 def strongly_connected_components(
     edges: DataFrame,
     vertices: DataFrame | None = None,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
-    local_finish_rows: int = _LOCAL_FINISH_EDGE_ROWS,
     max_outer: int = 64,
     max_inner: int = 10_000,
 ) -> DataFrame:
@@ -122,20 +119,18 @@ def strongly_connected_components(
     e = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
     e = e.distinct().localCheckpoint(eager=True)
     n_edges = e.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, max(n_edges, 1))
+    width = size_kernel(spark, n_edges)
 
-    if n_edges <= local_finish_rows:
-        return _finish_local(e, vertices)
+    if n_edges <= _LOCAL_FINISH_EDGE_ROWS:
+        return _finish_local(e, vertices).localCheckpoint(eager=True)
 
-    set_kernel_width(spark, num_partitions)
     done = None  # accumulated (vid, scc) for removed vertices
     live = vertices.localCheckpoint(eager=True)
     for outer in range(1, max_outer + 1):
         n_live_e = e.count()
         if n_live_e == 0:
             break
-        if n_live_e <= local_finish_rows:
+        if n_live_e <= _LOCAL_FINISH_EDGE_ROWS:
             # filtering endgame: identical algorithm, numpy
             local = _finish_local(e, live)
             done = local if done is None else done.unionByName(local)
@@ -146,7 +141,7 @@ def strongly_connected_components(
         # ---- 1) forward max-color propagation to fixpoint
         colors = live.select(
             "vid", F.col("vid").alias("color")
-        ).repartition(num_partitions, "vid").localCheckpoint(eager=True)
+        ).repartition(width, "vid").localCheckpoint(eager=True)
         for _ in range(max_inner):
             upd = (
                 e.join(colors, e["src"] == colors["vid"])
@@ -162,7 +157,7 @@ def strongly_connected_components(
                         "color", F.coalesce("cin", F.lit(-1))
                     ).alias("ncolor"),
                 )
-                .repartition(num_partitions, "vid")
+                .repartition(width, "vid")
                 .localCheckpoint(eager=True)
             )
             changed = (
@@ -188,7 +183,7 @@ def strongly_connected_components(
             .join(cdst, "dst")
             .filter(F.col("c_src") == F.col("c_dst"))
             .select("src", "dst")
-            .repartition(num_partitions, "dst")
+            .repartition(width, "dst")
             .localCheckpoint(eager=True)
         )
         flagged = (
@@ -249,6 +244,7 @@ def strongly_connected_components(
     return (
         vertices.join(done, "vid", "left")
         .select("vid", F.coalesce("scc", F.col("vid")).alias("scc"))
+        .localCheckpoint(eager=True)
     )
 
 

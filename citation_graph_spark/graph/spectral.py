@@ -65,9 +65,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from citation_graph_spark.checkpointing import checkpoints
-from citation_graph_spark.graph.degrees import auto_partitions, undirect
+from citation_graph_spark.graph.degrees import undirect
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import kernel, set_kernel_width
+from citation_graph_spark.session import kernel, kernel_edges, size_kernel
 
 FIEDLER_SCALE = 10000
 
@@ -105,7 +105,6 @@ def fiedler_round_lineage(syms: DataFrame, x: DataFrame) -> DataFrame:
 def fiedler_scores(
     edges: DataFrame,
     max_iter: int = 40,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
     checkpoint_dir: str | None = None,
     checkpoint_interval: int = 8,
@@ -131,8 +130,7 @@ def fiedler_scores(
     ).first()
     sigma = int(stats["dmax"]) + 1
     n = int(stats["n"])
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, sym.count())
+    width = size_kernel(spark, sym.count())
     # self-loop rows carry σ − deg(v); neighbor rows carry 1
     syms = (
         sym.select("src", "dst", F.lit(1).cast("long").alias("w"))
@@ -143,13 +141,13 @@ def fiedler_scores(
                 (F.lit(sigma) - F.col("deg")).cast("long").alias("w"),
             )
         )
-        .repartition(num_partitions, "dst")
+        .repartition(width, "dst")
         .persist()
     )
     n_syms = syms.count()
 
     ckpt = checkpoints(checkpoint_dir, "fiedler", n_syms, checkpoint_interval, resume)
-    x, start_iter, _ = ckpt.restore(spark, num_partitions)
+    x, start_iter, _ = ckpt.restore(spark, width)
     if x is None:
         # deterministic non-constant seed, guaranteed not the
         # all-ones direction; magnitude already within scale.
@@ -165,11 +163,10 @@ def fiedler_scores(
                 .cast("long")
                 .alias("z"),
             )
-            .repartition(num_partitions, "vid")
+            .repartition(width, "vid")
             .localCheckpoint(eager=True)
         )
 
-    set_kernel_width(spark, num_partitions)
     for it in range(start_iter + 1, max_iter + 1):
         t0 = time.monotonic()
         y = fiedler_round_lineage(syms, x)
@@ -194,7 +191,7 @@ def fiedler_scores(
                     F.lit(0).cast("long").alias("x"),
                     zcol.alias("z"),
                 )
-                .repartition(num_partitions, "vid")
+                .repartition(width, "vid")
                 .localCheckpoint(eager=True)
             )
         else:
@@ -220,7 +217,7 @@ def fiedler_scores(
                     .alias("x"),
                     zcol.alias("z"),
                 )
-                .repartition(num_partitions, "vid")
+                .repartition(width, "vid")
                 .localCheckpoint(eager=True)
             )
         metrics.log(
@@ -236,7 +233,6 @@ def fiedler_scores(
 def spectral_bisect(
     edges: DataFrame,
     max_iter: int = 40,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
 ) -> DataFrame:
     """Fiedler-sign bisection of the LARGEST connected component
@@ -270,12 +266,7 @@ def spectral_bisect(
         .filter(F.col("src") < F.col("dst"))
         .localCheckpoint(eager=True)
     )
-    scores = fiedler_scores(
-        comp_edges,
-        max_iter=max_iter,
-        num_partitions=num_partitions,
-        metrics_path=metrics_path,
-    )
+    scores = fiedler_scores(comp_edges, max_iter=max_iter, metrics_path=metrics_path)
     return scores.select(
         "vid",
         "score_q4",
@@ -288,7 +279,6 @@ def refine_bisection(
     edges: DataFrame,
     sides: DataFrame,
     rounds: int = 5,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Deterministic parallel cut refinement (the Fiduccia–Mattheyses
     move step, synchronized): per round, every vertex computes its
@@ -307,22 +297,16 @@ def refine_bisection(
     order in one int64 (vid < 2^33 — part keys and corpus ids are far
     below; an id past that would widen the encoding, not the shape).
     """
-    spark = edges.sparkSession
-    sym = undirect(edges.select("src", "dst"))
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, sym.count())
-    sym = sym.repartition(num_partitions, "dst").persist()
-    sym.count()
+    sym, _, width = kernel_edges(undirect(edges.select("src", "dst")), "dst")
     state = (
         sides.select("vid", F.col("side").cast("int").alias("side"))
-        .repartition(num_partitions, "vid")
+        .repartition(width, "vid")
         .localCheckpoint(eager=True)
     )
     p_self = (
         F.col("gain").cast("long") * F.lit(2**33)
         + (F.lit(2**33) - F.col("vid"))
     )
-    set_kernel_width(spark, num_partitions)
     for _ in range(rounds):
         # phase A: per-vertex same/other-side neighbor counts
         nbr = (
@@ -387,7 +371,7 @@ def refine_bisection(
                 .cast("int")
                 .alias("side"),
             )
-            .repartition(num_partitions, "vid")
+            .repartition(width, "vid")
             .localCheckpoint(eager=True)
         )
     sym.unpersist()

@@ -32,9 +32,9 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from citation_graph_spark.graph.degrees import auto_partitions, undirect
+from citation_graph_spark.graph.degrees import undirect
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import kernel, set_kernel_width
+from citation_graph_spark.session import kernel, kernel_edges
 
 
 @kernel
@@ -43,7 +43,6 @@ def bfs_distances(
     seeds: DataFrame,
     max_iter: int = 30,
     directed: bool = False,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
 ) -> DataFrame:
     """Multi-source BFS: ``(vid: long, dist: int)`` for every vertex
@@ -55,30 +54,22 @@ def bfs_distances(
     joins only the NEW frontier against the cached edges and anti-joins
     already-settled vertices away.
     """
-    spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "bfs")
 
     e0 = edges.select("src", "dst") if directed else undirect(edges).select(
         "src", "dst"
     )
-    e0 = e0.persist()
-    n_edges = e0.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_edges)
-    e = e0.repartition(num_partitions, "src").persist()
-    e.count()
-    e0.unpersist()
+    e, _, width = kernel_edges(e0, "src")
 
     dist = (
         seeds.select("vid")
         .distinct()
         .withColumn("dist", F.lit(0))
-        .repartition(num_partitions, "vid")
+        .repartition(width, "vid")
         .localCheckpoint(eager=True)
     )
     frontier = dist.select("vid")
 
-    set_kernel_width(spark, num_partitions)
     for it in range(1, max_iter + 1):
         t0 = time.monotonic()
         reached = (
@@ -89,7 +80,7 @@ def bfs_distances(
         new = (
             reached.join(dist.select("vid"), "vid", "left_anti")
             .withColumn("dist", F.lit(it))
-            .repartition(num_partitions, "vid")
+            .repartition(width, "vid")
             .localCheckpoint(eager=True)
         )
         n_new = new.count()
@@ -111,7 +102,6 @@ def bfs_per_source(
     seeds: DataFrame,
     max_iter: int = 30,
     directed: bool = False,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Per-source BFS: ``(seed: long, vid: long, dist: int)`` — the
     full distance table from EACH seed separately (the multi-source
@@ -125,17 +115,10 @@ def bfs_per_source(
     on web-scale graphs: exact per-source distances for a K-seed
     sample instead of O(n) BFS runs (cf. the harmonic-centrality query
     built on it)."""
-    spark = edges.sparkSession
     e0 = edges.select("src", "dst") if directed else undirect(edges).select(
         "src", "dst"
     )
-    e0 = e0.persist()
-    n_edges = e0.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_edges)
-    e = e0.repartition(num_partitions, "src").persist()
-    e.count()
-    e0.unpersist()
+    e, _, width = kernel_edges(e0, "src")
 
     dist = (
         seeds.select("vid")
@@ -145,12 +128,11 @@ def bfs_per_source(
             F.col("vid"),
             F.lit(0).alias("dist"),
         )
-        .repartition(num_partitions, "vid")
+        .repartition(width, "vid")
         .localCheckpoint(eager=True)
     )
     frontier = dist.select("seed", "vid")
 
-    set_kernel_width(spark, num_partitions)
     for it in range(1, max_iter + 1):
         reached = (
             e.join(frontier, e["src"] == frontier["vid"])
@@ -160,7 +142,7 @@ def bfs_per_source(
         new = (
             reached.join(dist.select("seed", "vid"), ["seed", "vid"], "left_anti")
             .withColumn("dist", F.lit(it))
-            .repartition(num_partitions, "vid")
+            .repartition(width, "vid")
             .localCheckpoint(eager=True)
         )
         if new.count() == 0:
@@ -178,7 +160,6 @@ def sssp(
     seeds: DataFrame,
     max_iter: int = 30,
     directed: bool = False,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
 ) -> DataFrame:
     """Multi-source weighted shortest paths (non-negative integer edge
@@ -195,7 +176,6 @@ def sssp(
     new in round r) while doing frontier-proportional work — the same
     property that makes BFS above scale.
     """
-    spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "sssp")
 
     e0 = edges.select("src", "dst", F.col("weight").cast("long").alias("w"))
@@ -207,24 +187,17 @@ def sssp(
                 F.col("weight").cast("long").alias("w"),
             )
         )
-    e0 = e0.persist()
-    n_edges = e0.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_edges)
-    e = e0.repartition(num_partitions, "src").persist()
-    e.count()
-    e0.unpersist()
+    e, _, width = kernel_edges(e0, "src")
 
     dist = (
         seeds.select("vid")
         .distinct()
         .withColumn("dist", F.lit(0).cast("long"))
-        .repartition(num_partitions, "vid")
+        .repartition(width, "vid")
         .localCheckpoint(eager=True)
     )
     frontier = dist
 
-    set_kernel_width(spark, num_partitions)
     for it in range(1, max_iter + 1):
         t0 = time.monotonic()
         cand = (
@@ -252,7 +225,7 @@ def sssp(
                 | (F.col("new_dist") < F.col("old_dist"))
             )
             .select("vid", F.col("new_dist").alias("dist"))
-            .repartition(num_partitions, "vid")
+            .repartition(width, "vid")
             .localCheckpoint(eager=True)
         )
         n_improved = improved.count()
@@ -263,7 +236,7 @@ def sssp(
             break
         dist = (
             merged.select("vid", F.col("new_dist").alias("dist"))
-            .repartition(num_partitions, "vid")
+            .repartition(width, "vid")
             .localCheckpoint(eager=True)
         )
         frontier = improved
@@ -278,7 +251,6 @@ def personalized_pagerank(
     seeds: DataFrame,
     alpha: float = 0.85,
     max_iter: int = 20,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
 ) -> DataFrame:
     """Personalized PageRank: teleport (and dangling) mass returns to
@@ -300,17 +272,12 @@ def personalized_pagerank(
         return spark.createDataFrame([], "vid long, score double")
 
     out_deg = edges.groupBy("src").agg(F.sum("weight").alias("_wout"))
-    e0 = (
-        edges.join(out_deg, "src")
-        .select("src", "dst", (F.col("weight") / F.col("_wout")).alias("wnorm"))
-        .persist()
+    e, n_edges, width = kernel_edges(
+        edges.join(out_deg, "src").select(
+            "src", "dst", (F.col("weight") / F.col("_wout")).alias("wnorm")
+        ),
+        "src",
     )
-    n_edges = e0.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_edges)
-    e = e0.repartition(num_partitions, "src").persist()
-    e.count()
-    e0.unpersist()
 
     vertices = (
         edges.select(F.col("src").alias("vid"))
@@ -339,12 +306,11 @@ def personalized_pagerank(
             F.coalesce("is_dangling", F.lit(False)).alias("is_dangling"),
         )
         .withColumn("rank", F.col("s"))
-        .repartition(num_partitions, "vid")
+        .repartition(width, "vid")
         .localCheckpoint(eager=True)
     )
     has_dangling = ranks.filter(F.col("is_dangling")).limit(1).count() > 0
 
-    set_kernel_width(spark, num_partitions)
     for it in range(1, max_iter + 1):
         t0 = time.monotonic()
         d_mass = 0.0
@@ -394,7 +360,6 @@ def widest_paths(
     seeds: DataFrame,
     max_iter: int = 30,
     directed: bool = False,
-    num_partitions: int | None = None,
     metrics_path: str | None = None,
 ) -> DataFrame:
     """Multi-source widest (bottleneck / maximum-capacity) paths over
@@ -412,7 +377,6 @@ def widest_paths(
     the frontier argument carries over verbatim): each round relaxes
     only the out-edges of vertices whose width improved last round.
     """
-    spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "widest")
 
     e0 = edges.select("src", "dst", F.col("weight").cast("long").alias("w"))
@@ -424,24 +388,17 @@ def widest_paths(
                 F.col("weight").cast("long").alias("w"),
             )
         )
-    e0 = e0.persist()
-    n_edges = e0.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_edges)
-    e = e0.repartition(num_partitions, "src").persist()
-    e.count()
-    e0.unpersist()
+    e, _, width = kernel_edges(e0, "src")
 
     cap = (
         seeds.select("vid")
         .distinct()
         .withColumn("width", F.lit(_WIDEST_INF).cast("long"))
-        .repartition(num_partitions, "vid")
+        .repartition(width, "vid")
         .localCheckpoint(eager=True)
     )
     frontier = cap
 
-    set_kernel_width(spark, num_partitions)
     for it in range(1, max_iter + 1):
         t0 = time.monotonic()
         cand = (
@@ -465,7 +422,7 @@ def widest_paths(
                 | (F.col("new_w") > F.col("old_w"))
             )
             .select("vid", F.col("new_w").alias("width"))
-            .repartition(num_partitions, "vid")
+            .repartition(width, "vid")
             .localCheckpoint(eager=True)
         )
         n_improved = improved.count()
@@ -476,7 +433,7 @@ def widest_paths(
             break
         cap = (
             merged.select("vid", F.col("new_w").alias("width"))
-            .repartition(num_partitions, "vid")
+            .repartition(width, "vid")
             .localCheckpoint(eager=True)
         )
         frontier = improved

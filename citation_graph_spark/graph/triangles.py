@@ -22,8 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from citation_graph_spark.graph.degrees import auto_partitions
-from citation_graph_spark.session import kernel, set_kernel_width
+from citation_graph_spark.session import kernel, size_kernel
 
 
 def _canonical_edges(edges: DataFrame) -> DataFrame:
@@ -66,9 +65,8 @@ def triangle_counts(
 ) -> DataFrame:
     """Returns ``(vid: long, n_triangles: long)`` — number of triangles
     each vertex participates in; Σ = 3 × global triangle count."""
-    spark = edges.sparkSession
     o = oriented_edges(edges).persist()
-    set_kernel_width(spark, auto_partitions(spark, o.count()))
+    size_kernel(edges.sparkSession, o.count())
 
     e1 = o.select(F.col("u").alias("w0"), F.col("v").alias("w1"))
     e2 = o.select(F.col("u").alias("w0"), F.col("v").alias("w2"))
@@ -119,9 +117,8 @@ def four_clique_counts(
 
     Returns ``(vid, n_four_cliques)``; Σ = 4 × global 4-clique count.
     """
-    spark = edges.sparkSession
     o = oriented_edges(edges).persist()
-    set_kernel_width(spark, auto_partitions(spark, o.count()))
+    size_kernel(edges.sparkSession, o.count())
     counts = four_clique_lineage(o, vertices).localCheckpoint(eager=True)
     o.unpersist()
     return counts

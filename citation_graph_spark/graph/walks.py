@@ -25,8 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from citation_graph_spark.graph.degrees import auto_partitions
-from citation_graph_spark.session import kernel, set_kernel_width
+from citation_graph_spark.session import kernel, kernel_edges
 
 # shared with the SQL oracle and the python replay (tests): int64-safe
 # for dense vids up to ~2^40
@@ -69,19 +68,11 @@ def deterministic_walks(
     edges: DataFrame,
     seeds: DataFrame,
     steps: int,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """One walk per seed vertex: ``(wid, step, vid)`` rows for
     step = 0..steps (fewer if the walk hits a sink). ``wid`` is the
     seed's vid; ``seeds`` is a DataFrame with a ``vid`` column."""
-    spark = edges.sparkSession
-    e0 = edges.select("src", "dst").distinct().persist()
-    n_edges = e0.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_edges)
-    e = e0.repartition(num_partitions, "src").persist()
-    e.count()
-    e0.unpersist()
+    e, _, _ = kernel_edges(edges.select("src", "dst").distinct(), "src")
 
     frontier = (
         seeds.select("vid")
@@ -95,7 +86,6 @@ def deterministic_walks(
     )
     out = frontier
 
-    set_kernel_width(spark, num_partitions)
     for t in range(1, steps + 1):
         frontier = walk_round_lineage(e, frontier, t).localCheckpoint(
             eager=True
@@ -112,7 +102,6 @@ def neighbor_sample(
     edges: DataFrame,
     seeds: DataFrame,
     fanouts: list[int],
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """GraphSAGE-style deterministic multi-hop neighbor sampling —
     the minibatch-subgraph prep primitive of GNN training pipelines
@@ -135,21 +124,13 @@ def neighbor_sample(
     most Π fanouts rows per seed."""
     if not fanouts:
         raise ValueError("fanouts must name at least one hop")
-    spark = edges.sparkSession
-    e0 = edges.select("src", "dst").distinct().persist()
-    n_edges = e0.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_edges)
-    e = e0.repartition(num_partitions, "src").persist()
-    e.count()
-    e0.unpersist()
+    e, _, _ = kernel_edges(edges.select("src", "dst").distinct(), "src")
 
     frontier = seeds.select(
         F.col("vid").alias("seed"), F.col("vid").alias("v")
     ).distinct()
     out = None
     w = Window.partitionBy("src").orderBy("h_pri", "dst")
-    set_kernel_width(spark, num_partitions)
     for hop, fanout in enumerate(fanouts, start=1):
         samp = (
             e.withColumn(

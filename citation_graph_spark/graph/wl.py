@@ -34,8 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from citation_graph_spark.graph.degrees import auto_partitions, undirect
-from citation_graph_spark.session import kernel, set_kernel_width
+from citation_graph_spark.graph.degrees import undirect
+from citation_graph_spark.session import kernel, size_kernel
 
 WL_P = 2147483647
 WL_C1 = 1000003
@@ -73,27 +73,22 @@ def wl_round_lineage(sym: DataFrame, colors: DataFrame) -> DataFrame:
 def wl_refinement(
     edges: DataFrame,
     rounds: int = 3,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """``(vid, color)`` after ``rounds`` WL refinement rounds on the
     undirected simple graph of ``edges``, starting from degree colors.
     """
-    spark = edges.sparkSession
     sym = undirect(edges.select("src", "dst")).persist()
-    n_edges = sym.count()
-    if num_partitions is None:
-        num_partitions = auto_partitions(spark, n_edges)
+    width = size_kernel(edges.sparkSession, sym.count())
     colors = (
         sym.groupBy(F.col("src").alias("vid"))
         .agg(F.count(F.lit(1)).cast("long").alias("color"))
-        .repartition(num_partitions, "vid")
+        .repartition(width, "vid")
         .localCheckpoint(eager=True)
     )
-    set_kernel_width(spark, num_partitions)
     for _ in range(rounds):
         colors = (
             wl_round_lineage(sym, colors)
-            .repartition(num_partitions, "vid")
+            .repartition(width, "vid")
             .localCheckpoint(eager=True)
         )
     sym.unpersist()

@@ -22,11 +22,19 @@ Every graph kernel runs under ``@kernel``, which owns the kernel policy:
   partitioning is pinned by the kernel). Measured: 13% per-round win on
   the 346k-edge bench graph, and a triangle count over a cached
   200-vertex edge table ran 134 Spark jobs under AQE against 3 without.
-- The kernel sets its shuffle width once, when it knows its size
-  (``set_kernel_width``), so every groupBy/join inside its rounds
-  shuffles at its own data-proportional width instead of paying a
-  session-width task launch per tiny shuffle and an extra exchange per
-  misaligned join.
+- The kernel sets its shuffle width once, when it knows its size, so
+  every groupBy/join inside its rounds shuffles at its own
+  data-proportional width instead of paying a session-width task launch
+  per tiny shuffle and an extra exchange per misaligned join. One rule,
+  ``size_kernel``, sizes every kernel: one task per 50k rows, at least
+  4, at most the session's width, because per-task overhead, not
+  per-row work, dominates small rounds. ``pagerank(num_partitions=)``
+  is the one explicit width, for scaling jobs that pin it.
+- A kernel that joins its edge set every round caches it once through
+  ``kernel_edges``: count, set the width from that count, hash-partition
+  on the join key at that width, cache, and release the unpartitioned
+  copy. Rounds that join vertex state partitioned on the same key at the
+  same width then need no exchange on the edge side.
 - The scope restores AQE and the width on return, on exception and
   when kernels nest; ``session_width`` stays the session's own value
   inside any kernel.
@@ -86,11 +94,51 @@ def kernel(fn):
     return scoped
 
 
-def set_kernel_width(spark: SparkSession, num_partitions: int) -> None:
+def set_kernel_width(spark: SparkSession, width: int) -> None:
     """Set the running kernel's shuffle width; its scope restores it."""
     if not _open_scopes:
         raise RuntimeError("set_kernel_width called outside a kernel scope")
-    spark.conf.set(_WIDTH, str(num_partitions))
+    spark.conf.set(_WIDTH, str(width))
+
+
+def size_kernel(spark: SparkSession, n_rows: int, width: int | None = None) -> int:
+    """Set the running kernel's shuffle width for ``n_rows`` rows (or to
+    an explicit ``width``) and return it.
+
+    A fixed ``spark.sql.shuffle.partitions`` is wrong at both ends: a
+    20k-edge fixture graph over 32 partitions pays 32 task launches per
+    round for microseconds of work each, while a 10^11-edge graph needs
+    far more than the session default. So: one task per 50k rows, at
+    least 4, capped at the session's width (the cluster's parallelism;
+    not a running kernel's width)."""
+    if width is None:
+        width = max(4, min(session_width(spark), n_rows // 50_000 + 1))
+    set_kernel_width(spark, width)
+    return width
+
+
+def kernel_edges(
+    edges: DataFrame, key: str, n_rows: int | None = None
+) -> tuple[DataFrame, int, int]:
+    """``(cached, n_rows, width)``: the kernel's edge set cached once,
+    hash-partitioned on ``key`` at the width ``size_kernel`` sets from
+    its row count.
+
+    ``edges`` is a lineage the kernel derived; it is cached and counted
+    here, so the lineage runs once, and released once the partitioned
+    copy is cached. A kernel that must count before it decides to
+    partition at all passes its own cache with ``n_rows``; that cache
+    stays the kernel's to release. The kernel unpersists ``cached``."""
+    own = n_rows is None
+    if own:
+        edges = edges.persist()
+        n_rows = edges.count()
+    width = size_kernel(edges.sparkSession, n_rows)
+    cached = edges.repartition(width, key).persist()
+    cached.count()
+    if own:
+        edges.unpersist()
+    return cached, n_rows, width
 
 
 def session_width(spark: SparkSession) -> int:

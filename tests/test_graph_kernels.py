@@ -8,19 +8,40 @@ import pytest
 
 from citation_graph_spark.graph import (
     betweenness_sampled,
+    bfs_distances,
+    bfs_per_source,
     connected_components,
+    densest_subgraph_rounds,
+    densest_subgraph_vertices,
+    deterministic_walks,
     edge_betweenness_sampled,
     eigenvector_centrality,
+    exact_balls,
     fiedler_scores,
+    four_clique_counts,
     greedy_coloring,
+    hits,
     hyperball,
+    k_core,
+    k_truss,
     katz_centrality,
     label_propagation,
     louvain_local_moves,
+    maximal_independent_set,
     maximal_matching,
+    neighbor_sample,
     pagerank,
+    personalized_pagerank,
+    sssp,
+    strongly_connected_components,
     triangle_counts,
+    widest_paths,
+    wl_refinement,
 )
+from citation_graph_spark.graph.csr import pagerank_csr
+from citation_graph_spark.graph.louvain import louvain_local_moves_weighted
+from citation_graph_spark.graph.msf import boruvka_msf
+from citation_graph_spark.graph.spectral import refine_bisection
 from citation_graph_spark.session import kernel, session_width, set_kernel_width
 from citation_graph_spark.streaming.incremental import refresh_pagerank
 from tests.conftest import edges_df, vertices_df
@@ -100,32 +121,33 @@ def test_components_match_oracle(spark, name):
 
 
 @pytest.mark.parametrize("name", ["cycle4_isolated", "two_cliques_bridge", "random_200"])
-def test_star_contraction_matches_minlabel(spark, name):
+def test_star_contraction_matches_minlabel(spark, name, monkeypatch):
     """All three routes — distributed min-label, distributed star
     contraction, and the driver union-find local finish (the default on
     graphs this small) — must produce identical labels.
-    local_finish_edges=0 forces the distributed kernels so they stay
-    exercised on fixture-sized graphs."""
+    _LOCAL_FINISH_UND_ROWS = 0 forces the distributed kernels so they
+    stay exercised on fixture-sized graphs."""
+    from citation_graph_spark.graph import components
+
     n, el = GRAPHS[name]
-    base = (
-        connected_components(
-            edges_df(spark, el), vertices_df(spark, n), local_finish_edges=0
+    with monkeypatch.context() as m:
+        m.setattr(components, "_LOCAL_FINISH_UND_ROWS", 0)
+        base = (
+            connected_components(edges_df(spark, el), vertices_df(spark, n))
+            .orderBy("vid")
+            .toPandas()["component"]
+            .tolist()
         )
-        .orderBy("vid")
-        .toPandas()["component"]
-        .tolist()
-    )
-    star = (
-        connected_components(
-            edges_df(spark, el),
-            vertices_df(spark, n),
-            star_contraction=True,
-            local_finish_edges=0,
+        star = (
+            connected_components(
+                edges_df(spark, el),
+                vertices_df(spark, n),
+                star_contraction=True,
+            )
+            .orderBy("vid")
+            .toPandas()["component"]
+            .tolist()
         )
-        .orderBy("vid")
-        .toPandas()["component"]
-        .tolist()
-    )
     local = (
         connected_components(edges_df(spark, el), vertices_df(spark, n))
         .orderBy("vid")
@@ -497,15 +519,15 @@ def _matching_oracle(edge_list, max_iter=100):
 
 @pytest.mark.parametrize("lf", [None, 0], ids=["endgame", "distributed"])
 @pytest.mark.parametrize("name", ["random_200", "random_500_skew"])
-def test_matching_matches_sequential_replay(spark, name, lf):
-    from citation_graph_spark.graph import maximal_matching
+def test_matching_matches_sequential_replay(spark, name, lf, monkeypatch):
+    from citation_graph_spark.graph import maximal_matching, matching
 
+    if lf is not None:
+        monkeypatch.setattr(matching, "_LOCAL_FINISH_ROWS", lf)
     n, el = GRAPHS[name]
     got = {
         r["vid"]: (r["mate"], r["match_round"])
-        for r in maximal_matching(
-            edges_df(spark, el), local_finish_rows=lf
-        ).collect()
+        for r in maximal_matching(edges_df(spark, el)).collect()
     }
     assert got == _matching_oracle(el)
 
@@ -593,15 +615,15 @@ def _coloring_oracle(edge_list, max_iter=100):
 
 @pytest.mark.parametrize("lf", [None, 0], ids=["endgame", "distributed"])
 @pytest.mark.parametrize("name", ["random_200", "random_500_skew"])
-def test_coloring_matches_sequential_replay(spark, name, lf):
-    from citation_graph_spark.graph import greedy_coloring
+def test_coloring_matches_sequential_replay(spark, name, lf, monkeypatch):
+    from citation_graph_spark.graph import coloring, greedy_coloring
 
+    if lf is not None:
+        monkeypatch.setattr(coloring, "_LOCAL_FINISH_ROWS", lf)
     n, el = GRAPHS[name]
     got = {
         r["vid"]: (r["color"], r["color_round"])
-        for r in greedy_coloring(
-            edges_df(spark, el), local_finish_rows=lf
-        ).collect()
+        for r in greedy_coloring(edges_df(spark, el)).collect()
     }
     assert got == _coloring_oracle(el)
 
@@ -738,6 +760,43 @@ KERNELS = {
     "edge_betweenness_sampled": (
         lambda e, v: edge_betweenness_sampled(e, v.filter("vid < 3"))
     ),
+    "hits": lambda e, v: hits(e, v, max_iter=3),
+    "k_core": lambda e, v: k_core(e, k=3),
+    "k_truss": lambda e, v: k_truss(e, k=3),
+    "maximal_independent_set": lambda e, v: maximal_independent_set(e),
+    "strongly_connected_components": (
+        lambda e, v: strongly_connected_components(e, v)
+    ),
+    "boruvka_msf": (
+        lambda e, v: boruvka_msf(e.withColumnRenamed("weight", "w"), v)
+    ),
+    "bfs_distances": lambda e, v: bfs_distances(e, v.filter("vid < 3")),
+    "bfs_per_source": lambda e, v: bfs_per_source(e, v.filter("vid < 3")),
+    "sssp": lambda e, v: sssp(e, v.filter("vid < 3")),
+    "widest_paths": lambda e, v: widest_paths(e, v.filter("vid < 3")),
+    "personalized_pagerank": (
+        lambda e, v: personalized_pagerank(e, v.filter("vid < 3"), max_iter=3)
+    ),
+    "wl_refinement": lambda e, v: wl_refinement(e, rounds=2),
+    "deterministic_walks": (
+        lambda e, v: deterministic_walks(e, v.filter("vid < 3"), steps=3)
+    ),
+    "neighbor_sample": (
+        lambda e, v: neighbor_sample(e, v.filter("vid < 3"), fanouts=[2, 2])
+    ),
+    "densest_subgraph_rounds": lambda e, v: densest_subgraph_rounds(e),
+    "densest_subgraph_vertices": lambda e, v: densest_subgraph_vertices(e),
+    "louvain_local_moves_weighted": lambda e, v: louvain_local_moves_weighted(
+        e.selectExpr("least(src, dst) as src", "greatest(src, dst) as dst", "1 as w")
+        .filter("src < dst")
+        .distinct()
+    ),
+    "refine_bisection": (
+        lambda e, v: refine_bisection(e, v.selectExpr("vid", "vid % 2 as side"))
+    ),
+    "exact_balls": lambda e, v: exact_balls(e, radius=2),
+    "four_clique_counts": lambda e, v: four_clique_counts(e, v),
+    "pagerank_csr": lambda e, v: pagerank_csr(e, v, tol=1e-6),
 }
 
 

@@ -8,6 +8,7 @@ import random
 
 from pyspark.sql import functions as F
 
+from citation_graph_spark.graph import msf
 from citation_graph_spark.graph.msf import boruvka_msf
 
 
@@ -54,14 +55,15 @@ def _spark_msf(spark, n, edges, **kw):
     return {(r.src, r.dst, r.w) for r in got.collect()}
 
 
-def test_msf_equals_kruskal_dense_ties(spark):
-    # local_finish_comps=0 runs the distributed Borůvka loop to
+def test_msf_equals_kruskal_dense_ties(spark, monkeypatch):
+    # _LOCAL_FINISH_COMPS = 0 runs the distributed Borůvka loop to
     # convergence — keeps the loop exercised on fixture-sized graphs
     n, edges = 40, _random_graph(seed=7, n=40, m=200, wmax=6)
-    assert _spark_msf(spark, n, edges, local_finish_comps=0) == kruskal(n, edges)
+    monkeypatch.setattr(msf, "_LOCAL_FINISH_COMPS", 0)
+    assert _spark_msf(spark, n, edges) == kruskal(n, edges)
 
 
-def test_msf_local_tail_equals_distributed(spark):
+def test_msf_local_tail_equals_distributed(spark, monkeypatch):
     """The driver-Kruskal endgame (default when few components remain
     live) must return the same forest as running the Borůvka loop out,
     and both must equal reference Kruskal — including under heavy
@@ -70,7 +72,8 @@ def test_msf_local_tail_equals_distributed(spark):
     want = kruskal(n, edges)
     assert _spark_msf(spark, n, edges) == want  # immediate local tail
     # one distributed round, then the tail (threshold mid-run)
-    assert _spark_msf(spark, n, edges, local_finish_comps=20) == want
+    monkeypatch.setattr(msf, "_LOCAL_FINISH_COMPS", 20)
+    assert _spark_msf(spark, n, edges) == want
 
 
 def test_msf_equals_kruskal_forest_with_isolates(spark):

@@ -201,17 +201,16 @@ def test_eigenvector_kill_resume_identical(spark, tmp_path):
     assert (again == resumed).all()
 
 
-def test_coloring_kill_resume_identical(spark, tmp_path):
-    from citation_graph_spark.graph import greedy_coloring
+def test_coloring_kill_resume_identical(spark, tmp_path, monkeypatch):
+    from citation_graph_spark.graph import coloring, greedy_coloring
 
     el = random_graph(300, 1500, seed=9)
     edges = edges_df(spark, el)
 
-    # local_finish_rows=0 forces the distributed rounds — the endgame
+    # _LOCAL_FINISH_ROWS = 0 forces the distributed rounds — the endgame
     # would otherwise finish round 1 before any checkpoint lands
-    full = (
-        greedy_coloring(edges, local_finish_rows=0).orderBy("vid").collect()
-    )
+    monkeypatch.setattr(coloring, "_LOCAL_FINISH_ROWS", 0)
+    full = greedy_coloring(edges).orderBy("vid").collect()
     ck = str(tmp_path / "ck")
     # "kill" after 2 rounds (checkpoint every round), then resume
     greedy_coloring(
@@ -219,39 +218,32 @@ def test_coloring_kill_resume_identical(spark, tmp_path):
         max_iter=2,
         checkpoint_dir=ck,
         checkpoint_interval=1,
-        local_finish_rows=0,
     )
     resumed = (
-        greedy_coloring(
-            edges, checkpoint_dir=ck, resume=True, local_finish_rows=0
-        )
+        greedy_coloring(edges, checkpoint_dir=ck, resume=True)
         .orderBy("vid")
         .collect()
     )
     assert [tuple(r) for r in full] == [tuple(r) for r in resumed]
 
 
-def test_matching_kill_resume_identical(spark, tmp_path):
-    from citation_graph_spark.graph import maximal_matching
+def test_matching_kill_resume_identical(spark, tmp_path, monkeypatch):
+    from citation_graph_spark.graph import matching, maximal_matching
 
     el = random_graph(300, 1500, seed=10)
     edges = edges_df(spark, el)
 
-    full = (
-        maximal_matching(edges, local_finish_rows=0).orderBy("vid").collect()
-    )
+    monkeypatch.setattr(matching, "_LOCAL_FINISH_ROWS", 0)
+    full = maximal_matching(edges).orderBy("vid").collect()
     ck = str(tmp_path / "ck")
     maximal_matching(
         edges,
         max_iter=2,
         checkpoint_dir=ck,
         checkpoint_interval=1,
-        local_finish_rows=0,
     )
     resumed = (
-        maximal_matching(
-            edges, checkpoint_dir=ck, resume=True, local_finish_rows=0
-        )
+        maximal_matching(edges, checkpoint_dir=ck, resume=True)
         .orderBy("vid")
         .collect()
     )
@@ -294,6 +286,37 @@ def test_pagerank_refuses_a_checkpoint_of_another_graph(spark, tmp_path):
     cold = _scores(pagerank(b, verts))
     resumed = _scores(pagerank(b, verts, checkpoint_dir=ck, resume=True))
     assert np.allclose(cold, resumed, atol=1e-12, rtol=0)
+
+
+def test_pagerank_refuses_a_checkpoint_of_another_alpha(spark, tmp_path):
+    """A converged manifest written with alpha 0.85 is not the answer for
+    alpha 0.5: the resume starts cold."""
+    edges = edges_df(spark, random_graph(200, 800, seed=3))
+    verts = vertices_df(spark, 200)
+    ck = str(tmp_path / "ck")
+    pagerank(edges, verts, alpha=0.85, checkpoint_dir=ck)
+    cold = _scores(pagerank(edges, verts, alpha=0.5))
+    resumed = _scores(
+        pagerank(edges, verts, alpha=0.5, checkpoint_dir=ck, resume=True)
+    )
+    assert np.allclose(cold, resumed, atol=1e-12, rtol=0)
+
+
+def test_hyperball_refuses_a_checkpoint_of_another_log2m(spark, tmp_path):
+    """Registers written with log2m 6 are the wrong registers for log2m 8:
+    the resume starts cold and equals an uninterrupted run."""
+    from citation_graph_spark.graph.anf import hyperball
+
+    edges = edges_df(spark, random_graph(200, 800, seed=9))
+    ck = str(tmp_path / "ck")
+    hyperball(edges, radius=2, log2m=6, checkpoint_dir=ck, checkpoint_interval=1)
+    cold = hyperball(edges, radius=4, log2m=8).orderBy("vid", "r").toPandas()
+    resumed = (
+        hyperball(edges, radius=4, log2m=8, checkpoint_dir=ck, resume=True)
+        .orderBy("vid", "r")
+        .toPandas()
+    )
+    assert (cold.to_numpy() == resumed.to_numpy()).all()
 
 
 @pytest.mark.parametrize("fault", ["torn_snapshot", "stale_tmp_manifest", "old_format"])
