@@ -111,9 +111,9 @@ def connected_components(
     """Returns ``(vid: long, component: long)``; component = min vid in
     the component (deterministic, order-insensitive reducer — min —
     per SURVEY.md §7.2(c)). At or below ``_LOCAL_FINISH_UND_ROWS``
-    undirected rows the labels come from one vectorized driver
-    union-find instead of distributed rounds; identical labels either
-    way.
+    undirected rows, and with no checkpoint or warm start asked for, the
+    labels come from one vectorized driver union-find instead of
+    distributed rounds; identical labels either way.
 
     ``init_labels`` — warm start for APPEND-ONLY graph growth (the
     incremental-ingest model): a ``(vid, label)`` DataFrame from a
