@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from citation_graph_spark.checkpointing import checkpoints
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import kernel, size_kernel
+from citation_graph_spark.session import kernel, kernel_cache, size_kernel
 
 # HLL needs genuinely mixed bits: a linear map (v*A + B mod P) over
 # DENSE vertex ids biases the trailing-zero distribution ~2x (measured
@@ -76,7 +76,7 @@ def exact_balls(
     """Exact out-ball sizes ``(vid, r, ball)`` for r = 0..radius over
     the DIRECTED edge set. State is the full reached-pair set — the
     oracle-scale twin of :func:`hyperball`, not a 100-TB operator."""
-    e = edges.select("src", "dst").distinct().persist()
+    e = kernel_cache(edges.select("src", "dst").distinct())
     width = size_kernel(edges.sparkSession, e.count())
 
     verts = (
@@ -108,7 +108,6 @@ def exact_balls(
             .localCheckpoint(eager=True)
         )
         out = out.unionByName(counts(r))
-    e.unpersist()
     return out.select("vid", "r", "ball")
 
 
@@ -151,7 +150,7 @@ def hyperball(
     spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "hyperball")
     m = 1 << log2m
-    e = edges.select("src", "dst").distinct().persist()
+    e = kernel_cache(edges.select("src", "dst").distinct())
     n_edges = e.count()
     width = size_kernel(spark, n_edges)
 
@@ -223,5 +222,4 @@ def hyperball(
             # reading the just-written estimates back caps the
             # union lineage at checkpoint_interval rounds
             out = spark.read.parquet(est_path)
-    e.unpersist()
     return out.select("vid", "r", "est")

@@ -109,20 +109,18 @@ def betweenness_sampled(
     levels; with a cap the result is the dependency sum over the
     ≤max_iter-hop shortest-path DAG — the (still well-defined) state
     the SQL oracle mirrors."""
-    e, verts, done = _brandes_state(edges, sources, max_iter, metrics_path)
+    _, verts, done = _brandes_state(edges, sources, max_iter, metrics_path)
     bc = (
         done.filter(F.col("vid") != F.col("s"))
         .groupBy("vid")
         .agg(F.sum("delta").alias("bc"))
     )
-    out = verts.join(bc, "vid", "left").select(
+    return verts.join(bc, "vid", "left").select(
         "vid",
         F.floor(F.coalesce(F.col("bc"), F.lit(0.0)) * 1000000 + F.lit(0.5))
         .cast("long")
         .alias("bc_micro"),
-    ).localCheckpoint(eager=True)
-    e.unpersist()
-    return out
+    )
 
 
 @kernel
@@ -142,10 +140,8 @@ def edge_betweenness_sampled(
     score — one extra edge join and groupBy, no extra rounds. Floored
     to micro-integers for exact cross-engine comparison (per-term
     formula identical on both sides; only summation order floats)."""
-    e, verts, done = _brandes_state(edges, sources, max_iter, metrics_path)
-    out = edge_dependency_lineage(e, done).localCheckpoint(eager=True)
-    e.unpersist()
-    return out
+    e, _, done = _brandes_state(edges, sources, max_iter, metrics_path)
+    return edge_dependency_lineage(e, done)
 
 
 def edge_dependency_lineage(e: DataFrame, done: DataFrame) -> DataFrame:
@@ -207,8 +203,8 @@ def _brandes_state(
     metrics_path: str | None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Forward + backward Brandes passes; returns ``(e, verts, done)``
-    where ``e`` is the cached undirected edge closure (caller
-    unpersists), ``verts`` its vertex set, and ``done`` the full
+    where ``e`` is the cached undirected edge closure (the scope
+    releases it), ``verts`` its vertex set, and ``done`` the full
     per-(pivot, vertex) state (s, vid, dist, sigma, delta)."""
     metrics = MetricsLogger(metrics_path, "betweenness")
     e, _, width = kernel_edges(undirect(edges).select("src", "dst"), "src")

@@ -186,7 +186,7 @@ def greedy_coloring(
                             new,
                             "vid long, color long, color_round long",
                         )
-                    ).localCheckpoint(eager=True)
+                    )
                 metrics.log(
                     it,
                     winners=len(new),
@@ -241,10 +241,8 @@ def greedy_coloring(
         n_active = n_next
         ckpt.end_round(colored, it, max_iter, done=n_active == 0)
 
-    out = verts.join(colored, "vid", "left").select(
+    return verts.join(colored, "vid", "left").select(
         "vid",
         F.coalesce("color", F.lit(-1)).cast("long").alias("color"),
         F.coalesce("color_round", F.lit(0)).cast("long").alias("color_round"),
-    ).localCheckpoint(eager=True)
-    e.unpersist()
-    return out
+    )

@@ -120,5 +120,4 @@ def label_propagation(
         if changed == 0:
             break
 
-    und.unpersist()
     return labels.select("vid", "label")

@@ -30,7 +30,13 @@ from pyspark.sql import functions as F
 from citation_graph_spark.checkpointing import checkpoints
 from citation_graph_spark.graph.degrees import undirect
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import kernel, kernel_edges, size_kernel
+from citation_graph_spark.session import (
+    kernel,
+    kernel_cache,
+    kernel_edges,
+    kernel_release,
+    size_kernel,
+)
 
 
 # Below this many collected edge rows the component computation runs as
@@ -160,7 +166,7 @@ def connected_components(
     spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "connected_components")
 
-    und0 = undirect(edges).persist()
+    und0 = kernel_cache(undirect(edges))
     n_und = und0.count()
     # driver-trivial graph and no durable-checkpoint / warm-start
     # contract → vectorized local union-find (identical labels, one job
@@ -173,10 +179,7 @@ def connected_components(
     ):
         if vertices is None:
             vertices = und0.select(F.col("src").alias("vid")).distinct()
-        out = _local_components(und0, vertices)
-        out = out.localCheckpoint(eager=True)
-        und0.unpersist()
-        return out
+        return _local_components(und0, vertices)
     # auto star-contraction only when no durable-checkpoint contract is
     # in play: _star_components has no checkpoints, so routing a
     # checkpoint_dir/resume caller there would silently drop the
@@ -188,10 +191,9 @@ def connected_components(
         and not resume
         and init_labels is None
     ):
-        und0.unpersist()
+        kernel_release(und0)
         return _star_components(edges, vertices, max_iter, metrics_path)
     und, _, width = kernel_edges(und0, "src", n_und)
-    und0.unpersist()
 
     if vertices is None:
         vertices = und.select(F.col("src").alias("vid")).distinct()
@@ -202,7 +204,6 @@ def connected_components(
     )
     labels, start_iter, meta = ckpt.restore(spark, width)
     if meta.get("done"):
-        und.unpersist()
         return labels.select("vid", F.col("label").alias("component"))
     if labels is None:
         if init_labels is not None:
@@ -249,7 +250,6 @@ def connected_components(
         if changed == 0:
             break
 
-    und.unpersist()
     return labels.select("vid", F.col("label").alias("component"))
 
 
@@ -286,7 +286,7 @@ def _star_components(
         return _local_components(
             e.select(F.col("u").alias("src"), F.col("v").alias("dst")),
             vertices,
-        ).localCheckpoint(eager=True)
+        )
     size_kernel(spark, n_e)
 
     # Each round SELF-JOINS the evolving edge list twice (nbrs with its
@@ -297,9 +297,7 @@ def _star_components(
     # planning.  Overlaying persist on the round-boundary checkpoint
     # and materializing it pins the REAL cached size each round (same
     # medicine as msf.contract_nominations), so within-round products
-    # stay bounded; caches are freed after the loop — the checkpoint
-    # underneath keeps the final edge list recomputable.
-    handles = []
+    # stay bounded; the scope frees the caches on exit.
     for it in range(max_iter):
         t0 = time.monotonic()
         # large-star: γ(u) ∪ {u} grouped by u → link every w > u to min
@@ -322,16 +320,14 @@ def _star_components(
         with_min2 = nbrs2.join(
             nbrs2.groupBy("u").agg(F.min("v").alias("m")), "u"
         )
-        small = (
+        small = kernel_cache(
             with_min2.select(F.col("v").alias("u"), F.col("m").alias("v"))
             .unionByName(with_min2.select(F.col("u"), F.col("m").alias("v")))
             .filter(F.col("u") != F.col("v"))
             .distinct()
             # lazy: the star-forest check below materializes it
             .localCheckpoint(eager=False)
-            .persist()
         )
-        handles.append(small)
         # converged when small-star output is stable star forest:
         # every u appears with exactly one v and v is a root (not a
         # u); this count also materializes small's checkpoint + cache
@@ -346,12 +342,8 @@ def _star_components(
         )
         if non_star == 0:
             break
-    for h in handles:
-        h.unpersist()
 
     comp = e.select(F.col("u").alias("vid"), F.col("v").alias("component"))
-    return (
-        vertices.join(comp, "vid", "left")
-        .select("vid", F.coalesce("component", "vid").alias("component"))
-        .localCheckpoint(eager=True)
+    return vertices.join(comp, "vid", "left").select(
+        "vid", F.coalesce("component", "vid").alias("component")
     )

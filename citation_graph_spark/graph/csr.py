@@ -109,7 +109,6 @@ def pagerank_csr(
 
     n = vertices.count()
     if n == 0:
-        edges_n.unpersist()
         return spark.createDataFrame([], "vid long, score double")
 
     dangling = vertices.join(
@@ -159,5 +158,4 @@ def pagerank_csr(
         if stats["l1"] < tol:
             break
 
-    edges_n.unpersist()
     return ranks.select("vid", F.col("rank").alias("score"))

@@ -135,5 +135,4 @@ def _peel(
         )
         if n_next == 0:
             break
-    e.unpersist()
     return rows, snapshots

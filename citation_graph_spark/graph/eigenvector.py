@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 from citation_graph_spark.checkpointing import checkpoints
 from citation_graph_spark.graph.degrees import undirect
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import kernel, size_kernel
+from citation_graph_spark.session import kernel, kernel_cache, size_kernel
 
 EV_SCALE = 1000000
 
@@ -93,11 +93,11 @@ def eigenvector_centrality(
     metrics = MetricsLogger(metrics_path, "eigenvector")
     sym = undirect(edges.select("src", "dst"))
     verts = sym.select(F.col("src").alias("vid")).distinct()
-    sym2 = sym.unionByName(
-        verts.select(
-            F.col("vid").alias("src"), F.col("vid").alias("dst")
+    sym2 = kernel_cache(
+        sym.unionByName(
+            verts.select(F.col("vid").alias("src"), F.col("vid").alias("dst"))
         )
-    ).persist()
+    )
     n_edges = sym2.count()
     width = size_kernel(spark, n_edges)
 
@@ -119,7 +119,6 @@ def eigenvector_centrality(
         y = eigenvector_round_lineage(sym2, x)
         m = y.agg(F.max("y")).first()[0]  # scalar-only collect
         if not m:  # edgeless graph: all mass is gone, stop
-            sym2.unpersist()
             return x.select(
                 "vid", F.lit(0).cast("long").alias("score_ppm")
             )
@@ -138,5 +137,4 @@ def eigenvector_centrality(
             max_y=int(m),
         )
         ckpt.end_round(x, it, max_iter)
-    sym2.unpersist()
     return x.select("vid", F.col("x").alias("score_ppm"))

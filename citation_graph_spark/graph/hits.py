@@ -125,7 +125,6 @@ def hits(
         raw.unpersist()
         metrics.log(it, wall_s=round(time.monotonic() - t0, 4), msgs=n_msgs)
 
-    e.unpersist()
     return state.select(
         "vid", F.col("a").alias("authority"), F.col("h").alias("hub")
     )

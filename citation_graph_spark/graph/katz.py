@@ -127,5 +127,4 @@ def katz_centrality(
         )
         ckpt.end_round(state, it, max_iter)
 
-    e.unpersist()
     return state.select("vid", F.col("x").alias("score"))

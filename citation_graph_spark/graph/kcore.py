@@ -84,5 +84,4 @@ def k_core(
         if converged or n_alive == 0:
             break
 
-    e.unpersist()
     return alive

@@ -111,9 +111,7 @@ def k_truss(
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
-    e, _, width = kernel_edges(canon, "a")
-    alive = e
-    n_alive = alive.count()
+    alive, n_alive, width = kernel_edges(canon, "a")
 
     for it in range(1, max_iter + 1):
         t0 = time.monotonic()
@@ -135,19 +133,12 @@ def k_truss(
         if converged or n_alive == 0:
             # converged: this round's support is the fixpoint
             # support — reuse it instead of one more enumeration
-            e.unpersist()
             return survivors.select("a", "b", "support")
 
     # round cap hit: report the capped state with its support
-    out = (
-        alive.join(
-            _edge_support(alive, width), ["a", "b"], "left"
-        )
-        .select("a", "b", F.coalesce("support", F.lit(0)).alias("support"))
-        .localCheckpoint(eager=True)
+    return alive.join(_edge_support(alive, width), ["a", "b"], "left").select(
+        "a", "b", F.coalesce("support", F.lit(0)).alias("support")
     )
-    e.unpersist()
-    return out
 
 
 def _edge_support(canon: DataFrame, width: int) -> DataFrame:

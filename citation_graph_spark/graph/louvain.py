@@ -46,7 +46,7 @@ from pyspark.sql.window import Window
 from citation_graph_spark.checkpointing import checkpoints
 from citation_graph_spark.graph.degrees import undirect
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import kernel, size_kernel
+from citation_graph_spark.session import kernel, kernel_cache, size_kernel
 
 
 def louvain_round_lineage(
@@ -137,7 +137,7 @@ def louvain_local_moves(
     resumed fixpoint is bit-identical.
     """
     spark = edges.sparkSession
-    e = (
+    e = kernel_cache(
         edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .select(
@@ -145,16 +145,14 @@ def louvain_local_moves(
             F.greatest("src", "dst").alias("dst"),
         )
         .distinct()
-        .persist()
     )
     m = e.count()
     width = size_kernel(spark, m)
-    sym = undirect(e).persist()
-    deg = (
+    sym = kernel_cache(undirect(e))
+    deg = kernel_cache(
         sym.groupBy(F.col("src").alias("vid"))
         .agg(F.count(F.lit(1)).alias("d"))
         .repartition(width, "vid")
-        .persist()
     )
     deg.count()
 
@@ -174,9 +172,6 @@ def louvain_local_moves(
             it, wall_s=round(time.monotonic() - t0, 4), msgs=2 * m
         )
         ckpt.end_round(comm, it, rounds)
-    e.unpersist()
-    sym.unpersist()
-    deg.unpersist()
     return comm
 
 
@@ -200,17 +195,16 @@ def louvain_local_moves_weighted(
     ``wedges``: (src, dst, w) — undirected, one row per unordered pair
     (src < dst), no self rows. Returns (vid, community)."""
     spark = wedges.sparkSession
-    e = (
+    e = kernel_cache(
         wedges.select("src", "dst", F.col("w").cast("long").alias("w"))
         .filter(F.col("src") != F.col("dst"))
-        .persist()
     )
     width = size_kernel(spark, e.count())
-    sym = e.unionByName(
-        e.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
+    sym = kernel_cache(
+        e.unionByName(
+            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
         )
-    ).persist()
+    )
     wdeg = sym.groupBy(F.col("src").alias("vid")).agg(
         F.sum("w").alias("dw")
     )
@@ -221,7 +215,7 @@ def louvain_local_moves_weighted(
         if self_weights is not None
         else spark.createDataFrame([], "vid long, sw long")
     )
-    deg = (
+    deg = kernel_cache(
         sw.join(wdeg, "vid", "full")
         .select(
             "vid",
@@ -230,7 +224,6 @@ def louvain_local_moves_weighted(
             ).alias("d"),
         )
         .repartition(width, "vid")
-        .persist()
     )
     total_vol = deg.agg(F.sum("d")).first()[0] or 0
     assert total_vol % 2 == 0, "self_weights must use the 2x convention"
@@ -248,7 +241,4 @@ def louvain_local_moves_weighted(
             wall_s=round(time.monotonic() - t0, 4),
             msgs=total_vol,
         )
-    e.unpersist()
-    sym.unpersist()
-    deg.unpersist()
     return comm

@@ -50,7 +50,12 @@ from pyspark.sql import functions as F
 from citation_graph_spark.checkpointing import checkpoints
 from citation_graph_spark.graph.degrees import undirect
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import kernel, size_kernel
+from citation_graph_spark.session import (
+    kernel,
+    kernel_cache,
+    kernel_release,
+    size_kernel,
+)
 
 _P = 2147483647
 _EID_S = 2147483648  # 2^31: eid = a * 2^31 + b, injective for vid < 2^31
@@ -153,7 +158,7 @@ def maximal_matching(
     spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "matching")
 
-    und0 = undirect(edges).select("src", "dst").persist()
+    und0 = kernel_cache(undirect(edges).select("src", "dst"))
     n_sym = und0.count()
     width = size_kernel(spark, n_sym)
 
@@ -171,7 +176,7 @@ def maximal_matching(
         .repartition(width, "vid")
         .localCheckpoint(eager=True)
     )
-    und0.unpersist()
+    kernel_release(und0)
 
     ckpt = checkpoints(checkpoint_dir, "matching", n_sym, checkpoint_interval, resume)
     matched, start_iter, _ = ckpt.restore(spark, width, key="a")
@@ -207,7 +212,7 @@ def maximal_matching(
                     spark.createDataFrame(
                         new, "a long, b long, match_round long"
                     )
-                ).localCheckpoint(eager=True)
+                )
             metrics.log(
                 it,
                 winners=len(new),
@@ -262,4 +267,4 @@ def maximal_matching(
         .cast("long")
         .alias("matched"),
         F.coalesce("match_round", F.lit(0)).cast("long").alias("match_round"),
-    ).localCheckpoint(eager=True)
+    )

@@ -95,9 +95,6 @@ def maximal_independent_set(
 
     for it in range(1, max_iter + 1):
         t0 = time.monotonic()
-        e_act = e.join(
-            active.select(F.col("vid").alias("src")), "src", "left_semi"
-        ).join(active.select(F.col("vid").alias("dst")), "dst", "left_semi")
         winners = mis_round_lineage(e, active, it).localCheckpoint(
             eager=True
         )
@@ -105,10 +102,10 @@ def maximal_independent_set(
         won = winners.withColumn("mis_round", F.lit(it).cast("long"))
         mis = won if mis is None else mis.unionByName(won)
         mis = mis.localCheckpoint(eager=True)
+        # winners are active, and the anti-join below keeps only
+        # active vertices, so the edges need no semi-join on active here
         removed_nb = (
-            e_act.join(
-                winners.select(F.col("vid").alias("src")), "src", "left_semi"
-            )
+            e.join(winners.select(F.col("vid").alias("src")), "src", "left_semi")
             .select(F.col("dst").alias("vid"))
             .distinct()
         )
@@ -130,13 +127,11 @@ def maximal_independent_set(
         if n_active == 0:
             break
 
-    out = verts.join(mis, "vid", "left").select(
+    return verts.join(mis, "vid", "left").select(
         "vid",
         F.when(F.col("mis_round").isNotNull(), 1)
         .otherwise(0)
         .cast("long")
         .alias("in_mis"),
         F.coalesce("mis_round", F.lit(0)).cast("long").alias("mis_round"),
-    ).localCheckpoint(eager=True)
-    e.unpersist()
-    return out
+    )

@@ -111,7 +111,7 @@ def boruvka_msf(
     out = forest_parts[0]
     for p in forest_parts[1:]:
         out = out.unionByName(p)
-    return out.distinct().localCheckpoint(eager=True)
+    return out.distinct()
 
 
 def normalize_edges(edges: DataFrame) -> DataFrame:
@@ -194,7 +194,7 @@ def _local_kruskal_tail(e: DataFrame, labels: DataFrame) -> DataFrame:
         }
     )
     # e's own schema (weights may be any integer-comparable type)
-    return spark.createDataFrame(chosen, e.schema).localCheckpoint(eager=True)
+    return spark.createDataFrame(chosen, e.schema)
 
 
 def cross_component_edges(e: DataFrame, labels: DataFrame) -> DataFrame:

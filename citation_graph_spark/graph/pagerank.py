@@ -35,13 +35,17 @@ from __future__ import annotations
 
 import time
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from citation_graph_spark.checkpointing import checkpoints
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import kernel, size_kernel
+from citation_graph_spark.session import (
+    kernel,
+    kernel_cache,
+    kernel_release,
+    size_kernel,
+)
 
 
 @kernel
@@ -95,8 +99,7 @@ def pagerank(
     # a from-scratch edges.select(src).distinct() scan). At 100 TB the
     # edge table is the big object; setup must not materialize it twice.
     # A caller's cache is used as it is and left alone.
-    own_edges = edges.storageLevel == StorageLevel.NONE
-    edges_p = edges.persist() if own_edges else edges
+    edges_p = kernel_cache(edges)
     edge_count = edges_p.count()
     width = size_kernel(spark, edge_count, num_partitions)
 
@@ -108,13 +111,14 @@ def pagerank(
         )
     vertices = vertices.select("vid")
 
-    out_deg = edges_p.groupBy("src").agg(F.sum("weight").alias("_wout")).persist()
+    out_deg = kernel_cache(
+        edges_p.groupBy("src").agg(F.sum("weight").alias("_wout"))
+    )
     # pin the co-partitioning every round reuses (SURVEY §4.3)
-    edges_n = (
+    edges_n = kernel_cache(
         edges_p.repartition(width, "src")
         .join(out_deg, "src")
         .select("src", "dst", (F.col("weight") / F.col("_wout")).alias("wnorm"))
-        .persist()
     )
     edges_n.count()
     # edges_p stays cached until the initial rank vector is materialized:
@@ -167,13 +171,12 @@ def pagerank(
                 .localCheckpoint(eager=True)
             )
 
-    # ranks is eagerly checkpointed — lineage cut; release the setup caches
-    out_deg.unpersist()
-    if own_edges:
-        edges_p.unpersist()
+    # ranks is eagerly checkpointed — lineage cut; release the setup
+    # caches before the rounds, which hold only edges_n
+    kernel_release(out_deg)
+    kernel_release(edges_p)
     if meta.get("done"):
         # already at fixpoint — identical results, no extra rounds
-        edges_n.unpersist()
         return ranks.select("vid", F.col("rank").alias("score"))
 
     teleport = (1.0 - alpha) / n
@@ -259,5 +262,4 @@ def pagerank(
         iterations=it - start_iter,
         iters_per_sec=round((it - start_iter) / total_wall, 3) if total_wall else None,
     )
-    edges_n.unpersist()
     return ranks.select("vid", F.col("rank").alias("score"))

@@ -122,7 +122,7 @@ def strongly_connected_components(
     width = size_kernel(spark, n_edges)
 
     if n_edges <= _LOCAL_FINISH_EDGE_ROWS:
-        return _finish_local(e, vertices).localCheckpoint(eager=True)
+        return _finish_local(e, vertices)
 
     done = None  # accumulated (vid, scc) for removed vertices
     live = vertices.localCheckpoint(eager=True)
@@ -241,10 +241,8 @@ def strongly_connected_components(
         done = vertices.select("vid", F.col("vid").alias("scc"))
 
     # vertices never touched by an edge keep their own vid
-    return (
-        vertices.join(done, "vid", "left")
-        .select("vid", F.coalesce("scc", F.col("vid")).alias("scc"))
-        .localCheckpoint(eager=True)
+    return vertices.join(done, "vid", "left").select(
+        "vid", F.coalesce("scc", F.col("vid")).alias("scc")
     )
 
 

@@ -67,7 +67,12 @@ from pyspark.sql import functions as F
 from citation_graph_spark.checkpointing import checkpoints
 from citation_graph_spark.graph.degrees import undirect
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import kernel, kernel_edges, size_kernel
+from citation_graph_spark.session import (
+    kernel,
+    kernel_cache,
+    kernel_edges,
+    size_kernel,
+)
 
 FIEDLER_SCALE = 10000
 
@@ -132,7 +137,7 @@ def fiedler_scores(
     n = int(stats["n"])
     width = size_kernel(spark, sym.count())
     # self-loop rows carry σ − deg(v); neighbor rows carry 1
-    syms = (
+    syms = kernel_cache(
         sym.select("src", "dst", F.lit(1).cast("long").alias("w"))
         .unionByName(
             deg.select(
@@ -142,7 +147,6 @@ def fiedler_scores(
             )
         )
         .repartition(width, "dst")
-        .persist()
     )
     n_syms = syms.count()
 
@@ -226,7 +230,6 @@ def fiedler_scores(
             z_spread=zmax - zmin,
         )
         ckpt.end_round(x, it, max_iter)
-    syms.unpersist()
     return x.select("vid", F.col("x").alias("score_q4"), "z")
 
 
@@ -374,5 +377,4 @@ def refine_bisection(
             .repartition(width, "vid")
             .localCheckpoint(eager=True)
         )
-    sym.unpersist()
     return state

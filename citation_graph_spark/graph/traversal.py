@@ -92,7 +92,6 @@ def bfs_distances(
         dist = dist.unionByName(new).localCheckpoint(eager=True)
         frontier = new.select("vid")
 
-    e.unpersist()
     return dist
 
 
@@ -150,7 +149,6 @@ def bfs_per_source(
         dist = dist.unionByName(new).localCheckpoint(eager=True)
         frontier = new.select("seed", "vid")
 
-    e.unpersist()
     return dist
 
 
@@ -241,7 +239,6 @@ def sssp(
         )
         frontier = improved
 
-    e.unpersist()
     return dist
 
 
@@ -267,8 +264,7 @@ def personalized_pagerank(
     n_seeds = seed_set.count()
     if n_seeds == 0:
         # no teleport targets: PPR is undefined; empty result, not a
-        # ZeroDivisionError — checked BEFORE any edge caching so
-        # nothing is left persisted
+        # ZeroDivisionError
         return spark.createDataFrame([], "vid long, score double")
 
     out_deg = edges.groupBy("src").agg(F.sum("weight").alias("_wout"))
@@ -347,7 +343,6 @@ def personalized_pagerank(
         )
         metrics.log(it, wall_s=round(time.monotonic() - t0, 4), edges=n_edges)
 
-    e.unpersist()
     return ranks.select("vid", F.col("rank").alias("score"))
 
 
@@ -438,7 +433,6 @@ def widest_paths(
         )
         frontier = improved
 
-    e.unpersist()
     return cap.select(
         "vid",
         F.when(F.col("width") == _WIDEST_INF, F.lit(-1))

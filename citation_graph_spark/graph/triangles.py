@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from citation_graph_spark.session import kernel, size_kernel
+from citation_graph_spark.session import kernel, kernel_cache, size_kernel
 
 
 def _canonical_edges(edges: DataFrame) -> DataFrame:
@@ -65,7 +65,7 @@ def triangle_counts(
 ) -> DataFrame:
     """Returns ``(vid: long, n_triangles: long)`` — number of triangles
     each vertex participates in; Σ = 3 × global triangle count."""
-    o = oriented_edges(edges).persist()
+    o = kernel_cache(oriented_edges(edges))
     size_kernel(edges.sparkSession, o.count())
 
     e1 = o.select(F.col("u").alias("w0"), F.col("v").alias("w1"))
@@ -93,8 +93,6 @@ def triangle_counts(
             .join(counts, "vid", "left")
             .select("vid", F.coalesce("n_triangles", F.lit(0)).alias("n_triangles"))
         )
-    counts = counts.localCheckpoint(eager=True)
-    o.unpersist()
     return counts
 
 
@@ -117,11 +115,9 @@ def four_clique_counts(
 
     Returns ``(vid, n_four_cliques)``; Σ = 4 × global 4-clique count.
     """
-    o = oriented_edges(edges).persist()
+    o = kernel_cache(oriented_edges(edges))
     size_kernel(edges.sparkSession, o.count())
-    counts = four_clique_lineage(o, vertices).localCheckpoint(eager=True)
-    o.unpersist()
-    return counts
+    return four_clique_lineage(o, vertices)
 
 
 def four_clique_lineage(o: DataFrame, vertices: DataFrame | None = None) -> DataFrame:

@@ -93,7 +93,6 @@ def deterministic_walks(
         if frontier.isEmpty():
             break
         out = out.unionByName(frontier)
-    e.unpersist()
     return out.select("wid", "step", F.col("v").alias("vid"))
 
 
@@ -154,5 +153,4 @@ def neighbor_sample(
         ).distinct()
         if frontier.isEmpty():  # every branch hit a sink:
             break  # later hops would rank O(E) rows for nothing
-    e.unpersist()
     return out

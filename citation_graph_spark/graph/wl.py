@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from citation_graph_spark.graph.degrees import undirect
-from citation_graph_spark.session import kernel, size_kernel
+from citation_graph_spark.session import kernel, kernel_cache, size_kernel
 
 WL_P = 2147483647
 WL_C1 = 1000003
@@ -77,7 +77,7 @@ def wl_refinement(
     """``(vid, color)`` after ``rounds`` WL refinement rounds on the
     undirected simple graph of ``edges``, starting from degree colors.
     """
-    sym = undirect(edges.select("src", "dst")).persist()
+    sym = kernel_cache(undirect(edges.select("src", "dst")))
     width = size_kernel(edges.sparkSession, sym.count())
     colors = (
         sym.groupBy(F.col("src").alias("vid"))
@@ -91,5 +91,4 @@ def wl_refinement(
             .repartition(width, "vid")
             .localCheckpoint(eager=True)
         )
-    sym.unpersist()
     return colors

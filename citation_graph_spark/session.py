@@ -38,15 +38,16 @@ Every graph kernel runs under ``@kernel``, which owns the kernel policy:
 - The scope restores AQE and the width on return, on exception and
   when kernels nest; ``session_width`` stays the session's own value
   inside any kernel.
-- A kernel returns a materialized frame: its result reads a checkpoint
-  or local rows, so the caller never re-runs the kernel's joins (under
-  the caller's AQE setting) and nothing the kernel released is needed
-  again. It materializes before it unpersists anything the result
-  depends on.
-- Cache ownership: a kernel calls persist/unpersist only on frames it
-  created. ``df.persist()`` returns ``df`` itself, so persisting and
-  later unpersisting a caller's frame would drop the caller's cache; a
-  caller's cached input is used as it is.
+- The scope owns what the kernel cached and its result. A kernel
+  caches through ``kernel_edges`` or ``kernel_cache``, which register
+  what they persist with the open scope; a frame already cached (a
+  caller's) is used as it is and never released. When the kernel
+  returns a DataFrame whose optimized plan holds any node but
+  ``Project``, ``Filter``, ``Union``, ``LogicalRDD`` or
+  ``LocalRelation``, the scope ``localCheckpoint``s it eagerly, so the
+  caller never re-runs the kernel's joins. Then, as on an exception, it
+  unpersists what this scope registered. ``kernel_release`` frees a
+  setup cache before the rounds.
 """
 
 from __future__ import annotations
@@ -55,33 +56,51 @@ import functools
 import os
 import re
 from contextlib import contextmanager
+from dataclasses import dataclass, field
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 _AQE = "spark.sql.adaptive.enabled"
 _WIDTH = "spark.sql.shuffle.partitions"
-# confs saved by each kernel scope open now, outermost first; the confs
-# are session-wide, so kernels on one session run one at a time
-_open_scopes: list[dict[str, str]] = []
+# plan nodes that read rows already computed: a result made only of
+# these is materialized
+_MATERIALIZED = {"Project", "Filter", "Union", "LogicalRDD", "LocalRelation"}
+
+
+@dataclass
+class _Scope:
+    conf: dict[str, str]  # the confs to restore on exit
+    cached: list[DataFrame] = field(default_factory=list)
+
+
+# kernel scopes open now, outermost first; the confs are session-wide,
+# so kernels on one session run one at a time
+_open_scopes: list[_Scope] = []
 
 
 @contextmanager
 def kernel_scope(spark: SparkSession):
-    """AQE off until exit; AQE and shuffle width restored on exit."""
-    saved = {k: spark.conf.get(k) for k in (_AQE, _WIDTH)}
-    _open_scopes.append(saved)
+    """AQE off until exit; on exit AQE and the shuffle width are
+    restored and the frames cached in this scope released. Used alone
+    (as the plan audits do), it materializes nothing."""
+    scope = _Scope({k: spark.conf.get(k) for k in (_AQE, _WIDTH)})
+    _open_scopes.append(scope)
     spark.conf.set(_AQE, "false")
     try:
         yield
     finally:
         _open_scopes.pop()
-        for k, v in saved.items():
+        for k, v in scope.conf.items():
             spark.conf.set(k, v)
+        for df in scope.cached:
+            df.unpersist()
 
 
 def kernel(fn):
     """Run ``fn`` under ``kernel_scope`` of the session of its first
-    DataFrame argument (see the module docstring for the policy)."""
+    DataFrame argument and materialize a DataFrame it returns before the
+    scope releases its caches (see the module docstring for the policy)."""
 
     @functools.wraps(fn)
     def scoped(*args, **kwargs):
@@ -89,9 +108,41 @@ def kernel(fn):
             a for a in (*args, *kwargs.values()) if isinstance(a, DataFrame)
         )
         with kernel_scope(frame.sparkSession):
-            return fn(*args, **kwargs)
+            out = fn(*args, **kwargs)
+            if isinstance(out, DataFrame) and not _materialized(out):
+                out = out.localCheckpoint(eager=True)
+            return out
 
     return scoped
+
+
+def _materialized(df: DataFrame) -> bool:
+    """Whether ``df``'s optimized plan only reads computed rows."""
+    plans = [df._jdf.queryExecution().optimizedPlan()]
+    while plans:
+        plan = plans.pop()
+        if plan.nodeName() not in _MATERIALIZED:
+            return False
+        children = plan.children()
+        plans.extend(children.apply(i) for i in range(children.size()))
+    return True
+
+
+def kernel_cache(df: DataFrame) -> DataFrame:
+    """``df``, cached until the running kernel's scope exits. A frame
+    cached already (a caller's) is neither persisted nor registered.
+    Registering before any action means a count that raises leaves no
+    cache behind."""
+    if df.storageLevel == StorageLevel.NONE:
+        _open_scopes[-1].cached.append(df.persist())
+    return df
+
+
+def kernel_release(df: DataFrame) -> None:
+    """Release ``df`` before the kernel returns, if the running kernel
+    cached it; a caller's frame is left alone."""
+    if any(df is own for own in _open_scopes[-1].cached):
+        df.unpersist()
 
 
 def set_kernel_width(spark: SparkSession, width: int) -> None:
@@ -127,24 +178,22 @@ def kernel_edges(
     ``edges`` is a lineage the kernel derived; it is cached and counted
     here, so the lineage runs once, and released once the partitioned
     copy is cached. A kernel that must count before it decides to
-    partition at all passes its own cache with ``n_rows``; that cache
-    stays the kernel's to release. The kernel unpersists ``cached``."""
-    own = n_rows is None
-    if own:
-        edges = edges.persist()
+    partition at all passes its own ``kernel_cache`` with ``n_rows``.
+    The scope releases ``cached``."""
+    if n_rows is None:
+        edges = kernel_cache(edges)
         n_rows = edges.count()
     width = size_kernel(edges.sparkSession, n_rows)
-    cached = edges.repartition(width, key).persist()
+    cached = kernel_cache(edges.repartition(width, key))
     cached.count()
-    if own:
-        edges.unpersist()
+    kernel_release(edges)
     return cached, n_rows, width
 
 
 def session_width(spark: SparkSession) -> int:
     """The session's shuffle width, not the width of a running kernel."""
     if _open_scopes:
-        return int(_open_scopes[0][_WIDTH])
+        return int(_open_scopes[0].conf[_WIDTH])
     return int(spark.conf.get(_WIDTH))
 
 

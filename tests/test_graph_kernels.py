@@ -804,11 +804,28 @@ def _conf(spark):
     return {k: spark.conf.get(k) for k in (AQE, WIDTH)}
 
 
+def _no_cache(spark):
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _plan_nodes(df):
+    """Node names of ``df``'s optimized plan."""
+    plans, names = [df._jdf.queryExecution().optimizedPlan()], []
+    while plans:
+        plan = plans.pop()
+        names.append(plan.nodeName())
+        children = plan.children()
+        plans.extend(children.apply(i) for i in range(children.size()))
+    return names
+
+
 @pytest.mark.parametrize("cached", [False, True], ids=["uncached", "cached"])
 @pytest.mark.parametrize("name", sorted(KERNELS))
 def test_kernel_policy(spark, name, cached):
     """The caller's cache state and session conf are unchanged after the
-    call, and the result reads a checkpoint (no join left to run)."""
+    call, the kernel leaves no cache of its own, and the result only
+    reads computed rows (no aggregate, join or cache read left to run)."""
+    spark.catalog.clearCache()
     n, el = GRAPHS["random_200"]
     edges = edges_df(spark, el)
     if cached:
@@ -818,8 +835,27 @@ def test_kernel_policy(spark, name, cached):
     out = KERNELS[name](edges, vertices_df(spark, n))
     assert edges.storageLevel == level
     assert _conf(spark) == conf
-    assert "Join" not in out._jdf.queryExecution().optimizedPlan().toString()
+    assert set(_plan_nodes(out)) <= {
+        "Project", "Filter", "Union", "LogicalRDD", "LocalRelation"
+    }
     edges.unpersist()
+    assert _no_cache(spark)
+
+
+def test_weighted_lp_leaves_no_cache_when_it_raises(spark):
+    spark.catalog.clearCache()
+    edges = edges_df(spark, [(0, 1, 0.7), (1, 2, 1.0)])
+    with pytest.raises(Exception, match="integral"):
+        label_propagation(edges, vertices_df(spark, 3), weighted=True)
+    assert _no_cache(spark)
+
+
+def test_pagerank_of_no_vertices_leaves_no_cache(spark):
+    spark.catalog.clearCache()
+    edges = edges_df(spark, [(0, 1), (1, 2)])
+    out = pagerank(edges, vertices_df(spark, 0))
+    assert out.count() == 0
+    assert _no_cache(spark)
 
 
 def _jobs(spark, group, action):
@@ -845,6 +881,7 @@ def test_triangle_jobs_do_not_depend_on_an_earlier_pagerank(spark):
 
 
 def test_kernel_scope_restores_conf_on_error_and_nesting(spark):
+    spark.catalog.clearCache()
     edges = edges_df(spark, [(0, 1), (1, 2), (2, 0)])
     session = _conf(spark)
     seen = {}
@@ -863,13 +900,16 @@ def test_kernel_scope_restores_conf_on_error_and_nesting(spark):
     assert seen["after_inner"] == {AQE: "false", WIDTH: "3"}
     assert seen["session_width"] == int(session[WIDTH])
     assert _conf(spark) == session
+    assert _no_cache(spark)
     with pytest.raises(ValueError, match="boom"):
         outer(edges, fail=True)
     assert _conf(spark) == session
+    assert _no_cache(spark)
     fractional = edges_df(spark, [(0, 1, 0.5)])
     with pytest.raises(Exception, match="integral"):
         label_propagation(fractional, weighted=True)
     assert _conf(spark) == session
+    assert _no_cache(spark)
 
 
 def test_driver_young_generation_is_fixed(spark):
