@@ -69,11 +69,9 @@ def densest_subgraph_rounds(
     survivor set entering that round (see
     :func:`densest_subgraph_vertices`)."""
     rows, _ = _peel(edges, max_iter, metrics_path, None)
-    spark = edges.sparkSession
-    best_density = max(r[3] for r in rows)
-    best_round = min(r[0] for r in rows if r[3] == best_density)
+    best_round = _best_round(rows)
     out = [(r[0], r[1], r[2], r[3], 1 if r[0] == best_round else 0) for r in rows]
-    return spark.createDataFrame(
+    return edges.sparkSession.createDataFrame(
         out,
         "round long, n_vertices long, n_edges long, "
         "density_micro long, is_best long",
@@ -89,9 +87,17 @@ def densest_subgraph_vertices(
     """Returns ``(vid: long)`` — the survivor set at the best-density
     round (the 2(1+eps)-approximate densest subgraph)."""
     rows, snapshots = _peel(edges, max_iter, metrics_path, keep_snapshots=True)
-    best_density = max(r[3] for r in rows)
-    best_round = min(r[0] for r in rows if r[3] == best_density)
+    best_round = _best_round(rows)
+    if best_round is None:
+        return edges.sparkSession.createDataFrame([], "vid long")
     return snapshots[best_round]
+
+
+def _best_round(rows: list[tuple[int, int, int, int]]) -> int | None:
+    """The first round of maximum density; None when no round ran (an
+    edge set with no rows)."""
+    best_density = max((r[3] for r in rows), default=None)
+    return min((r[0] for r in rows if r[3] == best_density), default=None)
 
 
 def _peel(

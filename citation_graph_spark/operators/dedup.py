@@ -39,6 +39,7 @@ from citation_graph_spark.operators.clustering import (
     DOT_BIGINT as _DOT,
     QUANT_MILLI,
 )
+from citation_graph_spark.operators.similarity import cosine
 
 # ---- deterministic universal-hash constants (shared Spark/SQL) ----------
 _P = 2147483647  # 2^31 - 1 (Mersenne prime)
@@ -531,7 +532,7 @@ def dedup_embedding_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         cand.join(a, "v1")
         .join(b, "v2")
-        .withColumn("cosine", dot / F.sqrt((F.col("na") * F.col("nb")).cast("double")))
+        .withColumn("cosine", cosine(dot))
     )
     return pairs.filter(F.col("cosine") >= _EMB_THRESHOLD).select(
         "v1",
@@ -566,10 +567,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         a.crossJoin(b)
         .filter(F.col("v1") < F.col("v2"))
-        .withColumn(
-            "cosine",
-            dot / F.sqrt((F.col("na") * F.col("nb")).cast("double")),
-        )
+        .withColumn("cosine", cosine(dot))
     )
     return pairs.filter(F.col("cosine") >= _EMB_THRESHOLD).select(
         "v1",

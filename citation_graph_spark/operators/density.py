@@ -186,17 +186,11 @@ def hdbscan_cut_labels(
     comp: DataFrame | None = None
     for lv in sorted(levels):
         if comp is None:
-            # star_contraction: an MSF cut is a FOREST, whose diameter
-            # grows with n (a near-chain forest means O(n) min-label
-            # rounds) — the large/small-star kernel converges in
-            # O(log² n) rounds with identical min-vid labels
-            # (tests/test_graph_kernels.py pins star == minlabel)
             comp = connected_components(
                 forest.filter(F.col("w") <= lv).select(
                     "src", "dst", F.lit(1.0).alias("weight")
                 ),
                 vertices=vids,
-                star_contraction=True,
             ).localCheckpoint(eager=True)
         else:
             inc = forest.filter(
@@ -227,12 +221,7 @@ def hdbscan_cut_labels(
             quotient_vids = comp.select(
                 F.col("component").alias("vid")
             ).distinct()
-            # quotient merges chain too (each level can string prior
-            # components into long paths) — same star rationale as the
-            # base cut
-            qcomp = connected_components(
-                quotient_edges, vertices=quotient_vids, star_contraction=True
-            )
+            qcomp = connected_components(quotient_edges, vertices=quotient_vids)
             comp = (
                 comp.join(
                     qcomp.select(

@@ -1336,11 +1336,22 @@ _CORPUS_CTE = f"""
 # query starts from the same deterministic (vertices, edges) pair, and
 # at warehouse scale the edge table is extracted once and STORED (see
 # snapshots.py) — re-running the extraction per query models nothing.
-# Keyed by the JVM session object; values are eagerly checkpointed so
-# reuse is a scan, not a lineage replay. Determinism (pinned seed +
-# exact integer extraction) makes the memo value-identical to a fresh
-# run — the gate compares values, and they cannot diverge.
-_CORPUS_MEMO: dict[str, tuple[DataFrame, DataFrame]] = {}
+# Keyed by the SparkContext's applicationId; values are eagerly
+# checkpointed so reuse is a scan, not a lineage replay. Determinism
+# (pinned seed + exact integer extraction) makes the memo
+# value-identical to a fresh run — the gate compares values, and they
+# cannot diverge.
+_CORPUS_MEMO: dict[tuple, tuple[DataFrame, DataFrame]] = {}
+
+
+def _memo_lookup(memo: dict, key: tuple):
+    """``memo``'s entry for ``key``, or None. ``key[0]`` is the running
+    SparkContext's applicationId; entries of every other context are
+    dropped first, since a stopped context's checkpointed frames would
+    otherwise stay pinned by the memo."""
+    for stale in [k for k in memo if k[0] != key[0]]:
+        del memo[stale]
+    return memo.get(key)
 
 
 def corpus_tables(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
@@ -1350,8 +1361,8 @@ def corpus_tables(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
     disk."""
     # applicationId is unique per SparkContext lifetime — unlike id(),
     # it can never alias a stopped session's checkpointed RDDs
-    key = spark.sparkContext.applicationId
-    hit = _CORPUS_MEMO.get(key)
+    key = (spark.sparkContext.applicationId,)
+    hit = _memo_lookup(_CORPUS_MEMO, key)
     if hit is not None:
         return hit
     ensure_corpus_parquet(_CORPUS_DOCS, _CORPUS_SEED)
@@ -2710,7 +2721,7 @@ def graph_part_multilevel_partition(
     from citation_graph_spark.graph.spectral import spectral_bisect
 
     memo_key = (spark.sparkContext.applicationId, sf_dir, "multilevel")
-    hit = _PARTITION_MEMO.get(memo_key)
+    hit = _memo_lookup(_PARTITION_MEMO, memo_key)
     if hit is not None:
         return hit
 
@@ -2834,7 +2845,7 @@ def graph_part_partition_refine(
     from citation_graph_spark.graph.spectral import refine_bisection
 
     memo_key = (spark.sparkContext.applicationId, sf_dir, "refine")
-    hit = _PARTITION_MEMO.get(memo_key)
+    hit = _memo_lookup(_PARTITION_MEMO, memo_key)
     if hit is not None:
         return hit
 

@@ -16,7 +16,7 @@ engines — see dedup.py for the determinism argument).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from citation_graph_spark.operators import register
@@ -28,6 +28,15 @@ from citation_graph_spark.operators.clustering import (
 )
 _N_QUERIES = 10
 _TOP_K = 5
+
+
+def cosine(dot: Column) -> Column:
+    """``dot / sqrt(na * nb)`` over the integer squared norms ``na`` and
+    ``nb``. Each factor is cast to double before the product: an int64
+    product wraps silently past 2^63. Below that the values are
+    bit-identical to the int64 form, since factors under 2^53 are exact
+    in double and both forms round the exact product once."""
+    return dot / F.sqrt(F.col("na").cast("double") * F.col("nb").cast("double"))
 
 
 def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -86,7 +95,7 @@ def knn_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(queries)
         .crossJoin(cands)
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", dot / F.sqrt((F.col("na") * F.col("nb")).cast("double")))
+        .withColumn("cosine", cosine(dot))
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
@@ -165,7 +174,7 @@ def ann_sign_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         queries.join(cands, "bucket")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", dot / F.sqrt((F.col("na") * F.col("nb")).cast("double")))
+        .withColumn("cosine", cosine(dot))
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
@@ -332,7 +341,7 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .join(F.broadcast(nq), "query_id")
         .join(nc, "neighbor_id")
-        .withColumn("cosine", dot / F.sqrt((F.col("na") * F.col("nb")).cast("double")))
+        .withColumn("cosine", cosine(dot))
     )
     w2 = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
@@ -455,9 +464,7 @@ def knn_cosine_topk_d512(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(queries)
         .crossJoin(cands)
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cosine", dot / F.sqrt((F.col("na") * F.col("nb")).cast("double"))
-        )
+        .withColumn("cosine", cosine(dot))
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("neighbor_id")

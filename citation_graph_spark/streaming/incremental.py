@@ -25,10 +25,13 @@ identity.
 
 Scale posture: the stream shuffles nothing — extraction is
 map-partition work on arriving files; the append writes partitioned
-parquet. Kernel warm-starting turns each refresh from O(full
-convergence) into O(drift): ranks are already near the fixpoint, so
-far fewer rounds run (the test asserts the resumed run converges in
-fewer iterations than cold).
+parquet. Warm-starting saves only a few rounds: on 1500 base + 150
+delta documents at tol 1e-8, the prior scores start 8-9x closer to the
+fixpoint, but the L1 residual shrinks only to 0.35-0.47 of itself per
+round, so a warm refresh takes 17 rounds against 19-20 cold (27
+against 36 for one slower seed). A refresh costs its per-call set-up
+plus rounds x Spark jobs per round; the warm start trims the rounds a
+little and nothing else (the test asserts fewer rounds than cold).
 """
 
 from __future__ import annotations
@@ -99,10 +102,10 @@ def refresh_pagerank(
     metrics_path: str | None = None,
 ) -> DataFrame:
     """One incremental refresh: re-rank the grown graph, warm-started
-    from the previous refresh's converged scores. O(drift) rounds
-    instead of O(cold convergence) — the test asserts strictly fewer
-    iterations than a cold run on the same graph, with allclose
-    scores."""
+    from the previous refresh's converged scores. That takes a few
+    rounds fewer than a cold run (17 against 19-20 on the corpora in
+    the module docstring), with allclose scores; the test asserts
+    strictly fewer iterations than cold on the same graph."""
     from citation_graph_spark.graph import pagerank
 
     return pagerank(

@@ -109,3 +109,14 @@ def test_dangling_refs_dropped(corpus):
     resolved = edges.agg(F.sum("weight")).collect()[0][0]
     assert n_refs > resolved  # dangling + self-shifted refs dropped
     assert refs.filter(F.col("ref_key").startswith("src/missing/")).count() > 0
+
+
+def test_corpus_memo_drops_entries_of_stopped_contexts(spark):
+    """The operators' corpus memo drops an entry keyed by another
+    SparkContext's applicationId on the next call, so a stopped
+    context's checkpointed frames are not pinned."""
+    from citation_graph_spark.operators import graphq
+
+    graphq._CORPUS_MEMO[("app-of-a-stopped-context",)] = (None, None)
+    graphq.corpus_tables(spark)
+    assert list(graphq._CORPUS_MEMO) == [(spark.sparkContext.applicationId,)]

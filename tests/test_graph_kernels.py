@@ -3,6 +3,8 @@ components / communities / triangles exact (north rule)."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
 
@@ -121,12 +123,11 @@ def test_components_match_oracle(spark, name):
 
 
 @pytest.mark.parametrize("name", ["cycle4_isolated", "two_cliques_bridge", "random_200"])
-def test_star_contraction_matches_minlabel(spark, name, monkeypatch):
-    """All three routes — distributed min-label, distributed star
-    contraction, and the driver union-find local finish (the default on
-    graphs this small) — must produce identical labels.
-    _LOCAL_FINISH_UND_ROWS = 0 forces the distributed kernels so they
-    stay exercised on fixture-sized graphs."""
+def test_distributed_components_match_local(spark, name, monkeypatch):
+    """Both routes — the distributed kernel and the driver union-find
+    local finish (the default on graphs this small) — must produce
+    identical labels. _LOCAL_FINISH_UND_ROWS = 0 forces the distributed
+    kernel so it stays exercised on fixture-sized graphs."""
     from citation_graph_spark.graph import components
 
     n, el = GRAPHS[name]
@@ -138,24 +139,45 @@ def test_star_contraction_matches_minlabel(spark, name, monkeypatch):
             .toPandas()["component"]
             .tolist()
         )
-        star = (
-            connected_components(
-                edges_df(spark, el),
-                vertices_df(spark, n),
-                star_contraction=True,
-            )
-            .orderBy("vid")
-            .toPandas()["component"]
-            .tolist()
-        )
     local = (
         connected_components(edges_df(spark, el), vertices_df(spark, n))
         .orderBy("vid")
         .toPandas()["component"]
         .tolist()
     )
-    assert star == base
     assert local == base
+
+
+@pytest.mark.parametrize("ids", ["sorted", "shuffled"])
+def test_distributed_components_take_logarithmic_rounds(
+    spark, tmp_path, monkeypatch, ids
+):
+    """A 1,024-vertex path on the distributed kernel: labels equal
+    union-find within 2·log2(n) rounds, with sorted and with shuffled
+    ids. Neighbour minimum alone needs n - 1 rounds here."""
+    from citation_graph_spark.graph import components
+
+    n = 1024
+    order = np.arange(n)
+    if ids == "shuffled":
+        order = np.random.default_rng(3).permutation(n)
+    el = [(int(order[i]), int(order[i + 1])) for i in range(n - 1)]
+    monkeypatch.setattr(components, "_LOCAL_FINISH_UND_ROWS", 0)
+    log = tmp_path / "cc.jsonl"
+    out = connected_components(
+        edges_df(spark, el), vertices_df(spark, n), metrics_path=str(log)
+    )
+    got = out.orderBy("vid").toPandas()["component"].tolist()
+    assert got == components_oracle(n, el).tolist()
+    rounds = len(log.read_text().splitlines())
+    assert rounds <= 2 * int(np.ceil(np.log2(n))), rounds
+    # each round's checkpoint carries the planner's size estimate into
+    # the next round; it must grow by a bounded factor per round, not
+    # square itself (a doubling bit length stalls planning at scale).
+    # Spark prints sizes past 1024 EiB as "<mantissa>E+<exponent> B".
+    est = out._jdf.queryExecution().optimizedPlan().stats().simpleString()
+    exponent = re.search(r"E\+(\d+) B", est)
+    assert exponent is None or int(exponent.group(1)) <= 20 * rounds, est
 
 
 @pytest.mark.parametrize("name", sorted(GRAPHS))
@@ -209,23 +231,6 @@ def test_weighted_lp_rejects_fractional_weights(spark):
         label_propagation(
             edges, vertices_df(spark, 3), max_iter=2, weighted=True
         ).collect()
-
-
-def test_forced_star_contraction_rejects_checkpoint_contract(spark):
-    """star_contraction=True has no warm-start/checkpoint support —
-    combining them must raise, not silently run cold/non-resumable."""
-    edges = edges_df(spark, [(0, 1), (1, 2)])
-    verts = vertices_df(spark, 3)
-    init = verts.withColumn("label", verts["vid"])
-    with pytest.raises(ValueError, match="star_contraction"):
-        connected_components(
-            edges, verts, star_contraction=True, init_labels=init
-        )
-    with pytest.raises(ValueError, match="star_contraction"):
-        connected_components(
-            edges, verts, star_contraction=True, resume=True,
-            checkpoint_dir="/tmp/cgs-test-star-ckpt",
-        )
 
 
 def test_modularity_invariants(spark):
@@ -424,6 +429,24 @@ def test_densest_vertices_find_planted_clique(spark):
     )
     assert set(range(8)).issubset(got)
     assert all(v < 8 for v in got), got
+
+
+def test_densest_rounds_of_no_edges_is_empty(spark):
+    from citation_graph_spark.graph import densest_subgraph_rounds
+
+    out = densest_subgraph_rounds(edges_df(spark, []))
+    assert out.collect() == []
+    assert out.columns == [
+        "round", "n_vertices", "n_edges", "density_micro", "is_best"
+    ]
+
+
+def test_densest_vertices_of_no_edges_is_empty(spark):
+    from citation_graph_spark.graph import densest_subgraph_vertices
+
+    out = densest_subgraph_vertices(edges_df(spark, []))
+    assert out.collect() == []
+    assert out.dtypes == [("vid", "bigint")]
 
 
 # ----------------------------------------------------------------- Luby MIS
