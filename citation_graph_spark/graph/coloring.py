@@ -40,19 +40,13 @@ from citation_graph_spark.checkpointing import checkpoints
 from citation_graph_spark.graph.degrees import undirect
 from citation_graph_spark.graph.mis import mis_round_lineage
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import kernel, kernel_edges
+from citation_graph_spark.session import finish_locally, kernel, kernel_edges
 
 # mex of a sorted ascending distinct color array: first gap, else size
 _MEX_FOLD = (
     "aggregate(cs, cast(0 as bigint),"
     " (acc, c) -> if(c = acc, acc + cast(1 as bigint), acc))"
 )
-
-# incident-row count at or below which the remaining schedule replays
-# as one vectorized driver pass (the CC "filtering" endgame precedent,
-# components.py:41) — the JP tail is many tiny synchronous rounds whose
-# per-round scheduling overhead dwarfs their work
-_LOCAL_FINISH_ROWS = 500_000
 
 _P = 2147483647
 _M = 8388608
@@ -133,9 +127,10 @@ def greedy_coloring(
     the IDENTICAL final coloring — the state is the colored set, the
     uncolored frontier is exactly vertices-minus-colored, the schedule
     is a pure function of (vid, round), and the state is int64, so the
-    parquet round-trip is exact by construction. At or below
-    ``_LOCAL_FINISH_ROWS`` incident rows the remaining rounds replay as
-    one exact driver pass; identical colors either way."""
+    parquet round-trip is exact by construction. Once
+    ``finish_locally`` takes the active set's incident rows the
+    remaining rounds replay as one exact driver pass; identical colors
+    either way."""
     spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "coloring")
     e, n_sym, width = kernel_edges(
@@ -163,39 +158,25 @@ def greedy_coloring(
         if n_active == 0:
             break
         t0 = time.monotonic()
-        if _LOCAL_FINISH_ROWS:
-            inc = e.join(
-                active.select(F.col("vid").alias("src")),
-                "src",
-                "left_semi",
+        inc = e.join(active.select(F.col("vid").alias("src")), "src", "left_semi")
+        if finish_locally(inc.count()):
+            inc_rows = [(r["src"], r["dst"]) for r in inc.collect()]
+            act_vids = [r["vid"] for r in active.collect()]
+            col_rows = [(r["vid"], r["color"]) for r in colored.collect()]
+            new = _finish_local_coloring(inc_rows, act_vids, col_rows, it, max_iter)
+            if new:
+                colored = colored.unionByName(
+                    spark.createDataFrame(new, "vid long, color long, color_round long")
+                )
+            metrics.log(
+                it,
+                winners=len(new),
+                active=len(act_vids) - len(new),
+                endgame=1,
+                wall_s=round(time.monotonic() - t0, 4),
             )
-            if inc.count() <= _LOCAL_FINISH_ROWS:
-                inc_rows = [
-                    (r["src"], r["dst"]) for r in inc.collect()
-                ]
-                act_vids = [r["vid"] for r in active.collect()]
-                col_rows = [
-                    (r["vid"], r["color"]) for r in colored.collect()
-                ]
-                new = _finish_local_coloring(
-                    inc_rows, act_vids, col_rows, it, max_iter
-                )
-                if new:
-                    colored = colored.unionByName(
-                        spark.createDataFrame(
-                            new,
-                            "vid long, color long, color_round long",
-                        )
-                    )
-                metrics.log(
-                    it,
-                    winners=len(new),
-                    active=len(act_vids) - len(new),
-                    endgame=1,
-                    wall_s=round(time.monotonic() - t0, 4),
-                )
-                n_active = 0
-                break
+            n_active = 0
+            break
         winners = mis_round_lineage(e, active, it).localCheckpoint(
             eager=True
         )

@@ -32,7 +32,7 @@ the component's minimum vid. Every state plain min-label propagation
 ever wrote meets both invariants too, so its checkpoints (manifest
 format 3) resume here unchanged.
 
-Graphs of at most ``_LOCAL_FINISH_UND_ROWS`` undirected rows, with no
+Graphs whose undirected rows ``finish_locally`` takes, with no
 checkpoint or warm start asked for, skip the rounds: one vectorized
 driver union-find computes the same labels.
 """
@@ -47,20 +47,12 @@ from pyspark.sql import functions as F
 from citation_graph_spark.checkpointing import checkpoints
 from citation_graph_spark.graph.degrees import undirect
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import kernel, kernel_cache, kernel_edges
-
-
-# Below this many collected edge rows the component computation runs as
-# one vectorized driver-side union-find instead of O(rounds) distributed
-# jobs.  This is the "filtering" endgame of the MapReduce graph
-# literature (Lattanzi et al., SPAA'11: shrink distributedly, finish
-# locally once the live graph fits one machine): the tail rounds of any
-# contraction algorithm are driver-bottlenecked anyway — each is a
-# full job-scheduling round trip over kilobytes of data.  500k rows is
-# ~8 MB via Arrow, trivially safe for the driver at any cluster size
-# (the vectorized union-find itself is milliseconds at this size), and
-# its labels are bit-identical to the distributed fixpoint.
-_LOCAL_FINISH_UND_ROWS = 500_000
+from citation_graph_spark.session import (
+    finish_locally,
+    kernel,
+    kernel_cache,
+    kernel_edges,
+)
 
 
 def _local_components(und: DataFrame, vertices: DataFrame) -> DataFrame:
@@ -121,7 +113,7 @@ def connected_components(
 ) -> DataFrame:
     """Returns ``(vid: long, component: long)``; component = min vid in
     the component (deterministic, order-insensitive reducer — min —
-    per SURVEY.md §7.2(c)). At or below ``_LOCAL_FINISH_UND_ROWS``
+    per SURVEY.md §7.2(c)). When ``finish_locally`` takes the
     undirected rows, and with no checkpoint or warm start asked for, the
     labels come from one vectorized driver union-find instead of
     distributed rounds; identical labels either way.
@@ -141,11 +133,10 @@ def connected_components(
 
     und0 = kernel_cache(undirect(edges))
     n_und = und0.count()
-    # driver-trivial graph and no durable-checkpoint / warm-start
-    # contract → vectorized local union-find (identical labels, one job
-    # instead of O(rounds); see _LOCAL_FINISH_UND_ROWS)
+    # no durable-checkpoint / warm-start contract → vectorized local
+    # union-find (identical labels, one job instead of O(rounds))
     if (
-        n_und <= _LOCAL_FINISH_UND_ROWS
+        finish_locally(n_und)
         and checkpoint_dir is None
         and not resume
         and init_labels is None
@@ -187,7 +178,11 @@ def connected_components(
     # F.least skips nulls, so a vertex with no message keeps its value.
     # The shuffle_hash hints keep a round at one Spark job: with AQE off
     # in the kernel scope, every broadcast join would run its exchange
-    # as a job of its own.
+    # as a job of its own. m and hooked each feed two branches of the
+    # round. Spark re-plans each branch from scratch (the checkpointed
+    # state defeats exchange reuse), so as plain lineage the round would
+    # compute the neighbour minimum four times; lazily checkpointed,
+    # every branch reads the one RDD the round's job computes once.
     for it in range(start_iter, max_iter):
         t0 = time.monotonic()
         # 1. neighbour minimum m
@@ -197,10 +192,14 @@ def connected_components(
             .agg(F.min("label").alias("nbr_min"))
             .hint("shuffle_hash")
         )
-        m = labels.join(nbr_min, labels["vid"] == nbr_min["dst"], "left").select(
-            labels["vid"],
-            labels["label"],
-            F.least(labels["label"], F.col("nbr_min")).alias("m"),
+        m = (
+            labels.join(nbr_min, labels["vid"] == nbr_min["dst"], "left")
+            .select(
+                labels["vid"],
+                labels["label"],
+                F.least(labels["label"], F.col("nbr_min")).alias("m"),
+            )
+            .localCheckpoint(eager=False)
         )
         # 2. hook: every vertex also sends m to the vertex its label names
         hooks = (
@@ -208,8 +207,12 @@ def connected_components(
             .agg(F.min("m").alias("hook"))
             .hint("shuffle_hash")
         )
-        hooked = m.join(hooks, F.col("vid") == F.col("x"), "left").select(
-            "vid", F.col("label").alias("_prev"), F.least("m", "hook").alias("l")
+        hooked = (
+            m.join(hooks, F.col("vid") == F.col("x"), "left")
+            .select(
+                "vid", F.col("label").alias("_prev"), F.least("m", "hook").alias("l")
+            )
+            .localCheckpoint(eager=False)
         )
         # 3. shortcut: new[v] = l[l[v]], or l[v] when l[v] has no row.
         # The groupBy on the already unique vid tells the planner that

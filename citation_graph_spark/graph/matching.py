@@ -51,6 +51,7 @@ from citation_graph_spark.checkpointing import checkpoints
 from citation_graph_spark.graph.degrees import undirect
 from citation_graph_spark.metrics import MetricsLogger
 from citation_graph_spark.session import (
+    finish_locally,
     kernel,
     kernel_cache,
     kernel_release,
@@ -59,12 +60,6 @@ from citation_graph_spark.session import (
 
 _P = 2147483647
 _EID_S = 2147483648  # 2^31: eid = a * 2^31 + b, injective for vid < 2^31
-
-# active-edge count at or below which the remaining schedule replays
-# as one exact driver pass (the CC "filtering" endgame precedent,
-# components.py:41) — the tail is many tiny synchronous rounds whose
-# scheduling overhead dwarfs their work
-_LOCAL_FINISH_ROWS = 500_000
 
 
 def _finish_local_matching(act_rows, start_it, max_iter):
@@ -152,9 +147,9 @@ def maximal_matching(
     the IDENTICAL final matching — the state is the matched-pair set,
     the active edge set is exactly canonical-edges-minus-matched-
     endpoints and the schedule is a pure function of (edge, round); the
-    int64 state round-trips parquet exactly. At or below
-    ``_LOCAL_FINISH_ROWS`` active edges the remaining rounds replay as
-    one exact driver pass; identical matching either way."""
+    int64 state round-trips parquet exactly. Once ``finish_locally``
+    takes the active edges the remaining rounds replay as one exact
+    driver pass; identical matching either way."""
     spark = edges.sparkSession
     metrics = MetricsLogger(metrics_path, "matching")
 
@@ -202,7 +197,7 @@ def maximal_matching(
         if n_active == 0:
             break
         t0 = time.monotonic()
-        if _LOCAL_FINISH_ROWS and n_active <= _LOCAL_FINISH_ROWS:
+        if finish_locally(n_active):
             act_rows = [
                 (r["a"], r["b"], r["m"]) for r in act.collect()
             ]

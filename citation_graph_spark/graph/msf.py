@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from citation_graph_spark.session import kernel, size_kernel
+from citation_graph_spark.session import finish_locally, kernel, size_kernel
 
 
 @kernel
@@ -45,10 +45,11 @@ def boruvka_msf(
     as undirected (one row per unordered pair is enough — symmetry is
     handled internally).  ``vertices``: optional (vid) frame; isolated
     vertices simply contribute no forest edges.  Returns the forest as
-    (src, dst, w) — per connected component, |C|-1 edges.  At or below
-    ``_LOCAL_FINISH_COMPS`` live components the loop stops and one
-    driver Kruskal computes the remaining forest; identical forest
-    either way.
+    (src, dst, w) — per connected component, |C|-1 edges.  Once
+    ``finish_locally`` takes the rows of the collected quotient (the
+    normalized edges before round one, at most C(n, 2) rows for n live
+    components after it), the loop stops and one driver Kruskal
+    computes the remaining forest; identical forest either way.
     """
     spark = edges.sparkSession
     e = normalize_edges(edges).localCheckpoint(eager=True)
@@ -63,12 +64,9 @@ def boruvka_msf(
     )
 
     n_edges = e.count()
-    if _LOCAL_FINISH_COMPS > 0 and n_edges <= _LOCAL_FINISH_EDGE_ROWS:
-        # round-zero filtering endgame: the whole graph fits the
-        # driver, so the identity-labels quotient IS the normalized
-        # edge set — one collect, one Kruskal, zero loop rounds
-        # (_LOCAL_FINISH_COMPS = 0 forces the distributed loop, as the
-        # equality tests do)
+    if finish_locally(n_edges):
+        # the identity-labels quotient IS the normalized edge set — one
+        # collect, one Kruskal, zero loop rounds
         return _local_kruskal_tail(e, labels)
 
     forest_parts: list[DataFrame] = []
@@ -78,15 +76,14 @@ def boruvka_msf(
         n_live = sel.count()
         if n_live == 0:  # no cross-component edge left anywhere
             break
-        if n_live <= _LOCAL_FINISH_COMPS:
-            # Kruskal endgame (filtering, Lattanzi et al. SPAA'11):
-            # ≤1024 live components bound the min-edge-per-pair
-            # quotient to ≤524k rows — reduce distributedly, collect,
-            # and finish the remaining forest in one driver Kruskal
-            # under the same (w, src, dst) total order.  The quotient
-            # MSF equals the MSF of the remaining contracted graph
-            # (cycle property kills non-minimal parallel edges), so
-            # the result is bit-identical to running the loop out.
+        if finish_locally(n_live * (n_live - 1) // 2):
+            # n_live components bound the min-edge-per-pair quotient to
+            # C(n_live, 2) rows — reduce distributedly, collect, and
+            # finish the remaining forest in one driver Kruskal under
+            # the same (w, src, dst) total order.  The quotient MSF
+            # equals the MSF of the remaining contracted graph (cycle
+            # property kills non-minimal parallel edges), so the result
+            # is bit-identical to running the loop out.
             forest_parts.append(_local_kruskal_tail(e, labels))
             break
         forest_parts.append(sel.select("src", "dst", "w").distinct())
@@ -129,25 +126,6 @@ def normalize_edges(edges: DataFrame) -> DataFrame:
         .groupBy("src", "dst")
         .agg(F.min("w").alias("w"))  # parallel edges: cheapest wins
     )
-
-
-# Once this few components remain live, the Borůvka loop stops and the
-# remaining forest is computed by one driver-side Kruskal over the
-# collected min-edge-per-component-pair quotient (≤ C(1024,2) ≈ 524k
-# rows ≈ 20 MB via Arrow, worst case).  The tail rounds of Borůvka are
-# driver-bottlenecked job round trips over kilobytes; the filtering
-# literature (Lattanzi et al., SPAA'11) finishes locally exactly here.
-_LOCAL_FINISH_COMPS = 1024
-
-# If the WHOLE normalized edge set already fits comfortably on the
-# driver, skip the distributed loop entirely: one collected quotient +
-# driver Kruskal is the same filtering endgame applied at round zero.
-# 500k (src, dst, w) rows ≈ 12 MB via Arrow — trivially safe at any
-# cluster size, and the alternative is O(log n) job round trips whose
-# latency dwarfs the compute at this size.  Identical forest (same
-# strict (w, src, dst) total order ⇒ unique MSF), pinned by
-# tests/test_msf.py's Kruskal equality.
-_LOCAL_FINISH_EDGE_ROWS = 500_000
 
 
 def _local_kruskal_tail(e: DataFrame, labels: DataFrame) -> DataFrame:

@@ -30,15 +30,13 @@ Every round removes at least every current root's SCC, so the live
 set strictly shrinks; the number of outer rounds is bounded by the
 depth of the SCC condensation (1 for a DAG — every vertex is its own
 root after one coloring — and small for real link graphs). Both
-inner fixpoints are O(diameter) one-shuffle rounds, the same cost
-shape as min-label connected components; the same star-contraction /
-checkpoint treatments apply.
+inner fixpoints are O(diameter) one-shuffle rounds, the shape of
+plain min-label propagation.
 
-Endgame: below ``_LOCAL_FINISH_EDGE_ROWS`` live edge rows the remaining
-graph is collected and finished with a VECTORIZED numpy replica of
-the identical coloring iteration (np.maximum.at / logical_or.at — no
-Python per-edge loop), the same "filtering" endgame as
-components.py (Lattanzi et al., SPAA'11). Labels are bit-identical
+Endgame: once ``finish_locally`` takes the live edge rows, the
+remaining graph is collected and finished with a VECTORIZED numpy
+replica of the identical coloring iteration (np.maximum.at /
+logical_or.at — no Python per-edge loop). Labels are bit-identical
 to the distributed fixpoint because the algorithm is the same;
 tests additionally check both against an independent Tarjan oracle.
 """
@@ -51,9 +49,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from citation_graph_spark.metrics import MetricsLogger
-from citation_graph_spark.session import kernel, size_kernel
-
-_LOCAL_FINISH_EDGE_ROWS = 50_000
+from citation_graph_spark.session import finish_locally, kernel, size_kernel
 
 
 def _local_scc_arrays(src, dst, vids):
@@ -121,7 +117,7 @@ def strongly_connected_components(
     n_edges = e.count()
     width = size_kernel(spark, n_edges)
 
-    if n_edges <= _LOCAL_FINISH_EDGE_ROWS:
+    if finish_locally(n_edges):
         return _finish_local(e, vertices)
 
     done = None  # accumulated (vid, scc) for removed vertices
@@ -130,8 +126,8 @@ def strongly_connected_components(
         n_live_e = e.count()
         if n_live_e == 0:
             break
-        if n_live_e <= _LOCAL_FINISH_EDGE_ROWS:
-            # filtering endgame: identical algorithm, numpy
+        if finish_locally(n_live_e):
+            # identical algorithm, numpy
             local = _finish_local(e, live)
             done = local if done is None else done.unionByName(local)
             live = None

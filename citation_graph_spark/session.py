@@ -48,6 +48,16 @@ Every graph kernel runs under ``@kernel``, which owns the kernel policy:
   caller never re-runs the kernel's joins. Then, as on an exception, it
   unpersists what this scope registered. ``kernel_release`` frees a
   setup cache before the rounds.
+- A kernel whose live graph shrinks (components, SCC, coloring,
+  matching, Borůvka MSF) collects it and finishes on the driver once
+  ``finish_locally`` says the rows it would collect are few enough.
+  Each tail round is a whole Spark job over kilobytes, and per-job
+  overhead, not per-row work, dominates such rounds; this is the
+  "filtering" endgame of the MapReduce graph literature (Lattanzi et
+  al., SPAA'11: shrink distributedly, finish locally once the live
+  graph fits one machine). The driver replays the same algorithm, so
+  the result is identical either way. 500k rows is a few MB through
+  Arrow, safe for any driver.
 """
 
 from __future__ import annotations
@@ -66,6 +76,8 @@ _WIDTH = "spark.sql.shuffle.partitions"
 # plan nodes that read rows already computed: a result made only of
 # these is materialized
 _MATERIALIZED = {"Project", "Filter", "Union", "LogicalRDD", "LocalRelation"}
+# a kernel finishes on the driver below this many collected rows
+_DRIVER_ROWS = 500_000
 
 
 @dataclass
@@ -190,6 +202,13 @@ def kernel_edges(
     return cached, n_rows, width
 
 
+def finish_locally(n_rows: int) -> bool:
+    """Whether a kernel collects ``n_rows`` rows to finish on the driver
+    (see the module docstring). Setting ``_DRIVER_ROWS`` to 0 sends every
+    kernel through its distributed rounds."""
+    return n_rows < _DRIVER_ROWS
+
+
 def session_width(spark: SparkSession) -> int:
     """The session's shuffle width, not the width of a running kernel."""
     if _open_scopes:
@@ -272,7 +291,6 @@ def get_spark(
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # iterative kernels checkpoint through this dir (lineage truncation)
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", mem)

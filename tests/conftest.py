@@ -7,18 +7,29 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from citation_graph_spark.session import get_spark  # noqa: E402
+from citation_graph_spark import session  # noqa: E402
 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(
+    s = session.get_spark(
         app_name="cgs-tests",
         master="local[4]",
         shuffle_partitions=8,
         extra_conf={"spark.sql.session.timeZone": "UTC"},
     )
     yield s
+
+
+@pytest.fixture
+def local_finish_rows(monkeypatch):
+    """Set the row count below which kernels finish on the driver, for
+    one test; 0 sends every kernel through its distributed rounds."""
+
+    def set_rows(n_rows):
+        monkeypatch.setattr(session, "_DRIVER_ROWS", n_rows)
+
+    return set_rows
 
 
 def edges_df(spark, edge_list):

@@ -123,23 +123,22 @@ def test_components_match_oracle(spark, name):
 
 
 @pytest.mark.parametrize("name", ["cycle4_isolated", "two_cliques_bridge", "random_200"])
-def test_distributed_components_match_local(spark, name, monkeypatch):
+def test_distributed_components_match_local(
+    spark, name, local_finish_rows
+):
     """Both routes — the distributed kernel and the driver union-find
     local finish (the default on graphs this small) — must produce
-    identical labels. _LOCAL_FINISH_UND_ROWS = 0 forces the distributed
-    kernel so it stays exercised on fixture-sized graphs."""
-    from citation_graph_spark.graph import components
-
+    identical labels. A local-finish threshold of 0 forces the
+    distributed kernel so it stays exercised on fixture-sized graphs."""
     n, el = GRAPHS[name]
-    with monkeypatch.context() as m:
-        m.setattr(components, "_LOCAL_FINISH_UND_ROWS", 0)
-        base = (
-            connected_components(edges_df(spark, el), vertices_df(spark, n))
-            .orderBy("vid")
-            .toPandas()["component"]
-            .tolist()
-        )
     local = (
+        connected_components(edges_df(spark, el), vertices_df(spark, n))
+        .orderBy("vid")
+        .toPandas()["component"]
+        .tolist()
+    )
+    local_finish_rows(0)
+    base = (
         connected_components(edges_df(spark, el), vertices_df(spark, n))
         .orderBy("vid")
         .toPandas()["component"]
@@ -150,19 +149,17 @@ def test_distributed_components_match_local(spark, name, monkeypatch):
 
 @pytest.mark.parametrize("ids", ["sorted", "shuffled"])
 def test_distributed_components_take_logarithmic_rounds(
-    spark, tmp_path, monkeypatch, ids
+    spark, tmp_path, local_finish_rows, ids
 ):
     """A 1,024-vertex path on the distributed kernel: labels equal
     union-find within 2·log2(n) rounds, with sorted and with shuffled
     ids. Neighbour minimum alone needs n - 1 rounds here."""
-    from citation_graph_spark.graph import components
-
     n = 1024
     order = np.arange(n)
     if ids == "shuffled":
         order = np.random.default_rng(3).permutation(n)
     el = [(int(order[i]), int(order[i + 1])) for i in range(n - 1)]
-    monkeypatch.setattr(components, "_LOCAL_FINISH_UND_ROWS", 0)
+    local_finish_rows(0)
     log = tmp_path / "cc.jsonl"
     out = connected_components(
         edges_df(spark, el), vertices_df(spark, n), metrics_path=str(log)
@@ -542,11 +539,11 @@ def _matching_oracle(edge_list, max_iter=100):
 
 @pytest.mark.parametrize("lf", [None, 0], ids=["endgame", "distributed"])
 @pytest.mark.parametrize("name", ["random_200", "random_500_skew"])
-def test_matching_matches_sequential_replay(spark, name, lf, monkeypatch):
-    from citation_graph_spark.graph import maximal_matching, matching
+def test_matching_matches_sequential_replay(spark, name, lf, local_finish_rows):
+    from citation_graph_spark.graph import maximal_matching
 
     if lf is not None:
-        monkeypatch.setattr(matching, "_LOCAL_FINISH_ROWS", lf)
+        local_finish_rows(lf)
     n, el = GRAPHS[name]
     got = {
         r["vid"]: (r["mate"], r["match_round"])
@@ -638,11 +635,11 @@ def _coloring_oracle(edge_list, max_iter=100):
 
 @pytest.mark.parametrize("lf", [None, 0], ids=["endgame", "distributed"])
 @pytest.mark.parametrize("name", ["random_200", "random_500_skew"])
-def test_coloring_matches_sequential_replay(spark, name, lf, monkeypatch):
-    from citation_graph_spark.graph import coloring, greedy_coloring
+def test_coloring_matches_sequential_replay(spark, name, lf, local_finish_rows):
+    from citation_graph_spark.graph import greedy_coloring
 
     if lf is not None:
-        monkeypatch.setattr(coloring, "_LOCAL_FINISH_ROWS", lf)
+        local_finish_rows(lf)
     n, el = GRAPHS[name]
     got = {
         r["vid"]: (r["color"], r["color_round"])
@@ -842,12 +839,35 @@ def _plan_nodes(df):
     return names
 
 
+# kernels that collect a shrunk graph to finish on the driver, and their
+# Spark jobs per call on random_200 when they do
+LOCAL_FINISH_JOBS = {
+    "connected_components": 4,
+    "greedy_coloring": 13,
+    "maximal_matching": 8,
+    "strongly_connected_components": 5,
+    "boruvka_msf": 6,
+}
+
+
 @pytest.mark.parametrize("cached", [False, True], ids=["uncached", "cached"])
 @pytest.mark.parametrize("name", sorted(KERNELS))
 def test_kernel_policy(spark, name, cached):
     """The caller's cache state and session conf are unchanged after the
     call, the kernel leaves no cache of its own, and the result only
     reads computed rows (no aggregate, join or cache read left to run)."""
+    _check_policy(spark, name, cached)
+
+
+@pytest.mark.parametrize("cached", [False, True], ids=["uncached", "cached"])
+@pytest.mark.parametrize("name", sorted(LOCAL_FINISH_JOBS))
+def test_kernel_policy_without_local_finish(spark, name, cached, local_finish_rows):
+    """The same policy holds on the distributed rounds."""
+    local_finish_rows(0)
+    _check_policy(spark, name, cached)
+
+
+def _check_policy(spark, name, cached):
     spark.catalog.clearCache()
     n, el = GRAPHS["random_200"]
     edges = edges_df(spark, el)
@@ -889,6 +909,25 @@ def _jobs(spark, group, action):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("cached", [False, True], ids=["uncached", "cached"])
+@pytest.mark.parametrize("name", sorted(LOCAL_FINISH_JOBS))
+def test_local_finish_jobs(spark, name, cached):
+    """A kernel that finishes on the driver runs a fixed number of Spark
+    jobs per call, whether or not the caller cached its edges."""
+    n, el = GRAPHS["random_200"]
+    edges = edges_df(spark, el)
+    if cached:
+        edges = edges.cache()
+        edges.count()
+    jobs = _jobs(
+        spark,
+        f"finish-{name}-{cached}",
+        lambda: KERNELS[name](edges, vertices_df(spark, n)),
+    )
+    edges.unpersist()
+    assert jobs == LOCAL_FINISH_JOBS[name]
 
 
 def test_triangle_jobs_do_not_depend_on_an_earlier_pagerank(spark):

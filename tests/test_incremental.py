@@ -101,11 +101,11 @@ def test_stream_ingest_matches_batch_and_warm_start(spark, tmp_path):
     assert it_warm < it_cold, (it_warm, it_cold)
 
 
-def test_components_warm_start_append_only(spark, tmp_path, monkeypatch):
+def test_components_warm_start_append_only(spark, tmp_path, local_finish_rows):
     """Append-only growth: warm-started CC == cold CC (exact), in
     strictly fewer rounds — including a component MERGE via new
     edges and brand-new vertices."""
-    from citation_graph_spark.graph import components, connected_components
+    from citation_graph_spark.graph import connected_components
     from tests.conftest import edges_df, vertices_df
 
     # snapshot 1: two long chains (high diameter → many cold rounds)
@@ -129,9 +129,9 @@ def test_components_warm_start_append_only(spark, tmp_path, monkeypatch):
 
     m_cold = str(tmp_path / "cc_cold.jsonl")
     m_warm = str(tmp_path / "cc_warm.jsonl")
-    # _LOCAL_FINISH_UND_ROWS = 0: the round-count comparison below is
-    # about the distributed kernel (warm start is skipped by the local path)
-    monkeypatch.setattr(components, "_LOCAL_FINISH_UND_ROWS", 0)
+    # no local finish: the round-count comparison below is about the
+    # distributed kernel (warm start is skipped by the local path)
+    local_finish_rows(0)
     cold = connected_components(e2, v2, metrics_path=m_cold)
     warm = connected_components(
         e2,

@@ -8,7 +8,6 @@ import random
 
 from pyspark.sql import functions as F
 
-from citation_graph_spark.graph import msf
 from citation_graph_spark.graph.msf import boruvka_msf
 
 
@@ -55,15 +54,15 @@ def _spark_msf(spark, n, edges, **kw):
     return {(r.src, r.dst, r.w) for r in got.collect()}
 
 
-def test_msf_equals_kruskal_dense_ties(spark, monkeypatch):
-    # _LOCAL_FINISH_COMPS = 0 runs the distributed Borůvka loop to
+def test_msf_equals_kruskal_dense_ties(spark, local_finish_rows):
+    # no local finish: the distributed Borůvka loop runs to
     # convergence — keeps the loop exercised on fixture-sized graphs
     n, edges = 40, _random_graph(seed=7, n=40, m=200, wmax=6)
-    monkeypatch.setattr(msf, "_LOCAL_FINISH_COMPS", 0)
+    local_finish_rows(0)
     assert _spark_msf(spark, n, edges) == kruskal(n, edges)
 
 
-def test_msf_local_tail_equals_distributed(spark, monkeypatch):
+def test_msf_local_tail_equals_distributed(spark, local_finish_rows):
     """The driver-Kruskal endgame (default when few components remain
     live) must return the same forest as running the Borůvka loop out,
     and both must equal reference Kruskal — including under heavy
@@ -71,8 +70,10 @@ def test_msf_local_tail_equals_distributed(spark, monkeypatch):
     n, edges = 60, _random_graph(seed=21, n=60, m=300, wmax=5)
     want = kruskal(n, edges)
     assert _spark_msf(spark, n, edges) == want  # immediate local tail
-    # one distributed round, then the tail (threshold mid-run)
-    monkeypatch.setattr(msf, "_LOCAL_FINISH_COMPS", 20)
+    # one distributed round, then the tail: the 300 edge rows are not
+    # below the threshold, the quotient of the <= 24 components left
+    # after the round (<= 276 rows) is
+    local_finish_rows(300)
     assert _spark_msf(spark, n, edges) == want
 
 

@@ -201,15 +201,15 @@ def test_eigenvector_kill_resume_identical(spark, tmp_path):
     assert (again == resumed).all()
 
 
-def test_coloring_kill_resume_identical(spark, tmp_path, monkeypatch):
-    from citation_graph_spark.graph import coloring, greedy_coloring
+def test_coloring_kill_resume_identical(spark, tmp_path, local_finish_rows):
+    from citation_graph_spark.graph import greedy_coloring
 
     el = random_graph(300, 1500, seed=9)
     edges = edges_df(spark, el)
 
-    # _LOCAL_FINISH_ROWS = 0 forces the distributed rounds — the endgame
-    # would otherwise finish round 1 before any checkpoint lands
-    monkeypatch.setattr(coloring, "_LOCAL_FINISH_ROWS", 0)
+    # no local finish: the distributed rounds run — the endgame would
+    # otherwise finish round 1 before any checkpoint lands
+    local_finish_rows(0)
     full = greedy_coloring(edges).orderBy("vid").collect()
     ck = str(tmp_path / "ck")
     # "kill" after 2 rounds (checkpoint every round), then resume
@@ -227,13 +227,13 @@ def test_coloring_kill_resume_identical(spark, tmp_path, monkeypatch):
     assert [tuple(r) for r in full] == [tuple(r) for r in resumed]
 
 
-def test_matching_kill_resume_identical(spark, tmp_path, monkeypatch):
-    from citation_graph_spark.graph import matching, maximal_matching
+def test_matching_kill_resume_identical(spark, tmp_path, local_finish_rows):
+    from citation_graph_spark.graph import maximal_matching
 
     el = random_graph(300, 1500, seed=10)
     edges = edges_df(spark, el)
 
-    monkeypatch.setattr(matching, "_LOCAL_FINISH_ROWS", 0)
+    local_finish_rows(0)
     full = maximal_matching(edges).orderBy("vid").collect()
     ck = str(tmp_path / "ck")
     maximal_matching(

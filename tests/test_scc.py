@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import pytest
 
-from citation_graph_spark.graph import scc as scc_module
 from citation_graph_spark.graph import strongly_connected_components
 from citation_graph_spark.graph.scc import _local_scc_arrays
 from tests.conftest import edges_df, vertices_df
@@ -53,9 +52,9 @@ def test_scc_local_endgame_matches_tarjan(spark, name):
 
 
 @pytest.mark.parametrize("name", ["nested_sccs", "random_120"])
-def test_scc_distributed_matches_local_and_tarjan(spark, name, monkeypatch):
+def test_scc_distributed_matches_local_and_tarjan(spark, name, local_finish_rows):
     n, el = GRAPHS[name]
-    monkeypatch.setattr(scc_module, "_LOCAL_FINISH_EDGE_ROWS", 0)  # force distributed
+    local_finish_rows(0)  # force distributed
     got = _got(spark, n, el)
     assert got["scc"].tolist() == scc_oracle(n, el)
 
