@@ -28,6 +28,12 @@ from pyspark.sql import functions as F
 # a reference is any double-quoted string in content; c/cpp includes
 # carry the header extension which we strip to get the module key
 _REF_RE = r'"([^"]+)"'
+# vertex tables at or below this row count broadcast to the resolution
+# joins (the reference-heavy side never shuffles). 1M rows of (vid,
+# path/module_key strings) is ~100 MB serialized — about the practical
+# per-executor ceiling; above it (the 10^12-file regime) both sides
+# shuffle on the join key as usual
+_BROADCAST_VERTICES = 1_000_000
 
 
 def extract_references(docs: DataFrame) -> DataFrame:
@@ -65,19 +71,8 @@ def module_key_col(path_col):
     return F.regexp_replace(path_col, r"\.[A-Za-z0-9]+$", "")
 
 
-def build_edges(
-    docs: DataFrame,
-    vertices: DataFrame,
-    broadcast_threshold: int = 1_000_000,
-) -> DataFrame:
+def build_edges(docs: DataFrame, vertices: DataFrame) -> DataFrame:
     """Resolve extracted references against the vertex table.
-
-    ``broadcast_threshold``: vertex tables at or below this row count
-    broadcast to the resolution joins (the reference-heavy side never
-    shuffles). 1M rows of (vid, path/module_key strings) is ~100 MB
-    serialized — about the practical per-executor ceiling; above it —
-    the 10^12-file regime — both sides shuffle on the join key as
-    usual; pass 0 to force that path.
 
     Returns ``(src: long, dst: long, weight: double)`` where weight is
     the reference multiplicity. Dangling references (no matching module
@@ -85,14 +80,10 @@ def build_edges(
     reference data_checks/test_article_cites_article.py:19-24 and the
     fetch-time exclusion europmc.py:285).
     """
-    return resolve_refs(extract_references(docs), vertices, broadcast_threshold)
+    return resolve_refs(extract_references(docs), vertices)
 
 
-def resolve_refs(
-    refs: DataFrame,
-    vertices: DataFrame,
-    broadcast_threshold: int = 1_000_000,
-) -> DataFrame:
+def resolve_refs(refs: DataFrame, vertices: DataFrame) -> DataFrame:
     """(src_path, ref_key) reference rows → (src, dst, weight) edges.
 
     The resolution-join block shared by the batch path (build_edges)
@@ -106,7 +97,7 @@ def resolve_refs(
     )
     src_side = v.select(F.col("vid").alias("src"), F.col("path").alias("src_path"))
     dst_side = v.select(F.col("vid").alias("dst"), F.col("module_key").alias("ref_key"))
-    if broadcast_threshold and vertices.count() <= broadcast_threshold:
+    if vertices.count() <= _BROADCAST_VERTICES:
         # the refs stream (10-100x the vertex table) stays put; the two
         # resolution joins become map-side — extraction is then fully
         # shuffle-free up to the final edge-multiplicity aggregation

@@ -107,6 +107,12 @@ def _finish_local_coloring(
     return out
 
 
+def _size(active: DataFrame) -> tuple[int, int]:
+    """The active set's vertex count and incident-row count, in one pass."""
+    n, deg = active.agg(F.count(F.lit(1)), F.sum("deg")).collect()[0]
+    return n, deg or 0
+
+
 @kernel
 def greedy_coloring(
     edges: DataFrame,
@@ -137,9 +143,11 @@ def greedy_coloring(
         undirect(edges).select("src", "dst"), "src"
     )
 
+    # each vertex carries its degree: the active set's degree sum is
+    # the incident-row count ``finish_locally`` decides on
     verts = (
-        e.select(F.col("src").alias("vid"))
-        .distinct()
+        e.groupBy(F.col("src").alias("vid"))
+        .agg(F.count(F.lit(1)).alias("deg"))
         .repartition(width, "vid")
         .localCheckpoint(eager=True)
     )
@@ -152,14 +160,14 @@ def greedy_coloring(
     active = verts.join(colored, "vid", "left_anti").repartition(
         width, "vid"
     ).localCheckpoint(eager=True)
-    n_active = active.count()
+    n_active, n_inc = _size(active)
 
     for it in range(start_iter + 1, max_iter + 1):
         if n_active == 0:
             break
         t0 = time.monotonic()
-        inc = e.join(active.select(F.col("vid").alias("src")), "src", "left_semi")
-        if finish_locally(inc.count()):
+        if finish_locally(n_inc):
+            inc = e.join(active.select(F.col("vid").alias("src")), "src", "left_semi")
             inc_rows = [(r["src"], r["dst"]) for r in inc.collect()]
             act_vids = [r["vid"] for r in active.collect()]
             col_rows = [(r["vid"], r["color"]) for r in colored.collect()]
@@ -212,7 +220,7 @@ def greedy_coloring(
             .repartition(width, "vid")
             .localCheckpoint(eager=True)
         )
-        n_next = active.count()
+        n_next, n_inc = _size(active)
         metrics.log(
             it,
             winners=n_active - n_next,

@@ -37,35 +37,27 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from citation_graph_spark.graph.triangles import oriented_edges
+from citation_graph_spark.graph.triangles import (
+    _canonical_edges,
+    oriented_edges,
+    triangle_rows,
+)
 from citation_graph_spark.metrics import MetricsLogger
 from citation_graph_spark.session import kernel, kernel_edges
 
 
 def _support_from_oriented(o: DataFrame) -> DataFrame:
     """Per-edge triangle support given a MATERIALIZED degree-oriented
-    edge set (u, v) — the orientation subtree is referenced four times
-    below (both wedge arms and both closure directions), so the caller
-    must checkpoint it first or the whole degree computation re-runs
+    edge set (u, v) — ``triangles.triangle_rows`` reads it four times
+    (both wedge arms and both closure directions), so the caller must
+    checkpoint it first or the whole degree computation re-runs
     four-fold.
 
-    Enumerates each triangle once via the degree-oriented wedge join
-    (triangles.py rationale: a hub's oriented out-neighborhood holds
-    only higher-degree vertices, so no vertex fans out O(deg²)
-    wedges), then charges each triangle to its three edges as
+    Charges each triangle, enumerated once, to its three edges as
     canonical (least, greatest) pairs. Edges in no triangle get no
     row — the caller treats absence as support 0.
     """
-    e1 = o.select(F.col("u").alias("w0"), F.col("v").alias("w1"))
-    e2 = o.select(F.col("u").alias("w0"), F.col("v").alias("w2"))
-    # merge hints — same rationale as triangles.py: wedge/closure join
-    # volume grows super-linearly with hub degree; sort-merge spills
-    # where a shuffled-hash build OOMs at link-graph scale
-    wedges = e1.hint("merge").join(e2, "w0").filter(F.col("w1") < F.col("w2"))
-    closer = o.select(
-        F.col("u").alias("w1"), F.col("v").alias("w2")
-    ).unionByName(o.select(F.col("u").alias("w2"), F.col("v").alias("w1")))
-    tri = wedges.hint("merge").join(closer, ["w1", "w2"])
+    tri = triangle_rows(o)
     sides = (
         tri.select(
             F.least("w0", "w1").alias("a"), F.greatest("w0", "w1").alias("b")
@@ -103,15 +95,7 @@ def k_truss(
         raise ValueError(f"k-truss needs k >= 3, got {k}")
     metrics = MetricsLogger(metrics_path, "k_truss")
 
-    canon = (
-        edges.select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    alive, n_alive, width = kernel_edges(canon, "a")
+    alive, n_alive, width = kernel_edges(_canonical_edges(edges), "a")
 
     for it in range(1, max_iter + 1):
         t0 = time.monotonic()

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from citation_graph_spark.graph.degrees import undirect
+from citation_graph_spark.graph.pagerank import _power_iteration, contribution_sums
 from citation_graph_spark.metrics import MetricsLogger
 from citation_graph_spark.session import kernel, kernel_edges
 
@@ -255,95 +256,29 @@ def personalized_pagerank(
     ``max_iter`` synchronous rounds (cross-engine determinism — same
     posture as the fixed-round global PageRank oracle). Returns
     ``(vid: long, score: double)`` over all vertices that appear as an
-    edge endpoint or a seed; Σ score = 1.
+    edge endpoint or a seed; Σ score = 1, and no rows when ``seeds`` is
+    empty. ``pagerank``'s set-up and rounds
+    (``pagerank._power_iteration``), started from and teleporting to
+    s = 1/|S| on the seeds, 0 elsewhere.
     """
-    spark = edges.sparkSession
-    metrics = MetricsLogger(metrics_path, "personalized_pagerank")
-
     seed_set = seeds.select("vid").distinct()
-    n_seeds = seed_set.count()
-    if n_seeds == 0:
-        # no teleport targets: PPR is undefined; empty result, not a
-        # ZeroDivisionError
-        return spark.createDataFrame([], "vid long, score double")
-
-    out_deg = edges.groupBy("src").agg(F.sum("weight").alias("_wout"))
-    e, n_edges, width = kernel_edges(
-        edges.join(out_deg, "src").select(
-            "src", "dst", (F.col("weight") / F.col("_wout")).alias("wnorm")
-        ),
-        "src",
-    )
-
     vertices = (
         edges.select(F.col("src").alias("vid"))
         .unionByName(edges.select(F.col("dst").alias("vid")))
-        .unionByName(seeds.select("vid"))
+        .unionByName(seed_set)
         .distinct()
     )
-    # teleport vector s(v): 1/|S| on seeds, 0 elsewhere, and the
-    # dangling flag — both carried as state columns (the pagerank.py
-    # pattern) so no per-round plan rebuilds anything
-    dangling_flags = vertices.join(
-        edges.select("src").distinct(),
-        vertices["vid"] == F.col("src"),
-        "left_anti",
-    ).withColumn("is_dangling", F.lit(True))
-    ranks = (
-        vertices.join(
-            seed_set.withColumn("_is_seed", F.lit(True)), "vid", "left"
-        )
-        .join(dangling_flags.select("vid", "is_dangling"), "vid", "left")
-        .select(
-            "vid",
-            F.when(F.col("_is_seed"), 1.0 / n_seeds)
-            .otherwise(0.0)
-            .alias("s"),
-            F.coalesce("is_dangling", F.lit(False)).alias("is_dangling"),
-        )
-        .withColumn("rank", F.col("s"))
-        .repartition(width, "vid")
-        .localCheckpoint(eager=True)
+    return _power_iteration(
+        edges,
+        vertices,
+        seed_set.withColumn("score", F.lit(1.0)),
+        contribution_sums,
+        alpha,
+        0.0,
+        max_iter,
+        personalized=True,
+        metrics_path=metrics_path,
     )
-    has_dangling = ranks.filter(F.col("is_dangling")).limit(1).count() > 0
-
-    for it in range(1, max_iter + 1):
-        t0 = time.monotonic()
-        d_mass = 0.0
-        if has_dangling:
-            # one small agg over the checkpointed state — no recompute
-            d_mass = (
-                ranks.agg(
-                    F.coalesce(
-                        F.sum(F.when(F.col("is_dangling"), F.col("rank"))),
-                        F.lit(0.0),
-                    )
-                ).collect()[0][0]
-            )
-        contribs = e.join(
-            ranks.select("vid", "rank"), e["src"] == F.col("vid")
-        ).select(F.col("dst"), (F.col("rank") * F.col("wnorm")).alias("c"))
-        sums = contribs.groupBy("dst").agg(F.sum("c").alias("m"))
-        ranks = (
-            ranks.join(sums, ranks["vid"] == sums["dst"], "left")
-            .select(
-                ranks["vid"],
-                ranks["s"],
-                ranks["is_dangling"],
-                (
-                    F.lit(1.0 - alpha) * F.col("s")
-                    + F.lit(alpha)
-                    * (
-                        F.coalesce(F.col("m"), F.lit(0.0))
-                        + F.lit(d_mass) * F.col("s")
-                    )
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        metrics.log(it, wall_s=round(time.monotonic() - t0, 4), edges=n_edges)
-
-    return ranks.select("vid", F.col("rank").alias("score"))
 
 
 _WIDEST_INF = 4611686018427387904  # 2^62 — internal "unbounded" capacity

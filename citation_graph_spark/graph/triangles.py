@@ -59,15 +59,11 @@ def oriented_edges(edges: DataFrame) -> DataFrame:
     )
 
 
-@kernel
-def triangle_counts(
-    edges: DataFrame, vertices: DataFrame | None = None
-) -> DataFrame:
-    """Returns ``(vid: long, n_triangles: long)`` — number of triangles
-    each vertex participates in; Σ = 3 × global triangle count."""
-    o = kernel_cache(oriented_edges(edges))
-    size_kernel(edges.sparkSession, o.count())
-
+def triangle_rows(o: DataFrame) -> DataFrame:
+    """``(w1, w2, w0)``: each triangle of the oriented edges ``o`` (u, v)
+    once — the wedge w0→w1, w0→w2 (w1 < w2) closed by an edge between
+    w1 and w2 in either orientation. ``o`` is read four times, so a
+    caller materializes it first."""
     e1 = o.select(F.col("u").alias("w0"), F.col("v").alias("w1"))
     e2 = o.select(F.col("u").alias("w0"), F.col("v").alias("w2"))
     # merge hints: the session prefers shuffled-hash joins (right for
@@ -79,7 +75,18 @@ def triangle_counts(
     closer = o.select(F.col("u").alias("w1"), F.col("v").alias("w2")).unionByName(
         o.select(F.col("u").alias("w2"), F.col("v").alias("w1"))
     )
-    triangles = wedges.hint("merge").join(closer, ["w1", "w2"])
+    return wedges.hint("merge").join(closer, ["w1", "w2"])
+
+
+@kernel
+def triangle_counts(
+    edges: DataFrame, vertices: DataFrame | None = None
+) -> DataFrame:
+    """Returns ``(vid: long, n_triangles: long)`` — number of triangles
+    each vertex participates in; Σ = 3 × global triangle count."""
+    o = kernel_cache(oriented_edges(edges))
+    size_kernel(edges.sparkSession, o.count())
+    triangles = triangle_rows(o)
 
     corners = (
         triangles.select(F.col("w0").alias("vid"))

@@ -843,7 +843,7 @@ def _plan_nodes(df):
 # Spark jobs per call on random_200 when they do
 LOCAL_FINISH_JOBS = {
     "connected_components": 4,
-    "greedy_coloring": 13,
+    "greedy_coloring": 11,
     "maximal_matching": 8,
     "strongly_connected_components": 5,
     "boruvka_msf": 6,
@@ -928,6 +928,39 @@ def test_local_finish_jobs(spark, name, cached):
     )
     edges.unpersist()
     assert jobs == LOCAL_FINISH_JOBS[name]
+
+
+# the four PageRank calls run one power iteration: their set-up's Spark
+# jobs on random_200, then two jobs per round
+PAGERANK_SETUP_JOBS = {
+    "pagerank": 5,
+    "pagerank_warm": 5,
+    "pagerank_csr": 5,
+    "personalized_pagerank": 6,
+}
+
+
+@pytest.mark.parametrize("name", sorted(PAGERANK_SETUP_JOBS))
+def test_pagerank_jobs(spark, name):
+    n, el = GRAPHS["random_200"]
+    edges = edges_df(spark, el).cache()
+    edges.count()
+    verts = vertices_df(spark, n)
+    prior = pagerank(edges, verts, max_iter=5)
+    rounds = 20  # tol=0 runs every round
+    calls = {
+        "pagerank": lambda: pagerank(edges, verts, tol=0.0, max_iter=rounds),
+        "pagerank_warm": lambda: pagerank(
+            edges, verts, tol=0.0, max_iter=rounds, init_ranks=prior
+        ),
+        "pagerank_csr": lambda: pagerank_csr(edges, verts, tol=0.0, max_iter=rounds),
+        "personalized_pagerank": lambda: personalized_pagerank(
+            edges, verts.filter("vid < 3"), max_iter=rounds
+        ),
+    }
+    jobs = _jobs(spark, f"pagerank-{name}", calls[name])
+    edges.unpersist()
+    assert jobs == PAGERANK_SETUP_JOBS[name] + 2 * rounds
 
 
 def test_triangle_jobs_do_not_depend_on_an_earlier_pagerank(spark):

@@ -349,3 +349,12 @@ def test_widest_round_cap_matches_synchronous_state(spark):
         for r in widest_paths(edges_df(spark, el), seeds, max_iter=3).collect()
     }
     assert got == _widest_oracle(21, el, [0], 3)
+
+
+def test_ppr_of_no_seeds_is_empty(spark):
+    el = random_graph(20, 40, seed=3)
+    out = personalized_pagerank(
+        edges_df(spark, el), vertices_df(spark, 20).filter("vid < 0")
+    )
+    assert out.count() == 0
+    assert out.columns == ["vid", "score"]
