@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from citation_graph_spark.checkpointing import checkpoints
+from citation_graph_spark.graph.degrees import endpoints
 from citation_graph_spark.metrics import MetricsLogger
 from citation_graph_spark.session import kernel, kernel_cache, size_kernel
 
@@ -79,11 +80,7 @@ def exact_balls(
     e = kernel_cache(edges.select("src", "dst").distinct())
     width = size_kernel(edges.sparkSession, e.count())
 
-    verts = (
-        e.select(F.col("src").alias("vid"))
-        .unionByName(e.select(F.col("dst").alias("vid")))
-        .distinct()
-    )
+    verts = endpoints(e)
     ball = (
         verts.select(F.col("vid").alias("v"), F.col("vid").alias("u"))
         .repartition(width, "v")
@@ -154,11 +151,7 @@ def hyperball(
     n_edges = e.count()
     width = size_kernel(spark, n_edges)
 
-    verts = (
-        e.select(F.col("src").alias("vid"))
-        .unionByName(e.select(F.col("dst").alias("vid")))
-        .distinct()
-    )
+    verts = endpoints(e)
     idx, rho = _register_cols(F.col("vid"), log2m)
 
     # alpha_m * m^2 for the raw HLL estimate (Flajolet et al. 2007
@@ -178,11 +171,14 @@ def hyperball(
             (raw <= F.lit(2.5 * m)) & (zeros > 0),
             F.lit(float(m)) * F.log(F.lit(float(m)) / zeros),
         ).otherwise(raw)
+        # lazy: the result is a union of these checkpoints, which reads
+        # as computed rows, so the scope adds no job of its own and the
+        # caller's first action computes every radius in one job
         return agg.select(
             "vid",
             F.lit(r).alias("r"),
             F.round(est).cast("long").alias("est"),
-        )
+        ).localCheckpoint(eager=False)
 
     import time as _time
 

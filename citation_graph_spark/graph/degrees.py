@@ -34,3 +34,13 @@ def undirect(edges: DataFrame) -> DataFrame:
     fwd = edges.select("src", "dst")
     rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     return fwd.unionByName(rev).distinct()
+
+
+def endpoints(edges: DataFrame) -> DataFrame:
+    """The distinct ``vid``s of ``src ∪ dst``: every vertex an edge
+    touches."""
+    return (
+        edges.select(F.col("src").alias("vid"))
+        .unionByName(edges.select(F.col("dst").alias("vid")))
+        .distinct()
+    )

@@ -35,6 +35,7 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from citation_graph_spark.graph.degrees import endpoints
 from citation_graph_spark.metrics import MetricsLogger
 from citation_graph_spark.session import kernel, kernel_edges
 
@@ -53,11 +54,7 @@ def hits(
     metrics = MetricsLogger(metrics_path, "hits")
 
     if vertices is None:
-        vertices = (
-            edges.select(F.col("src").alias("vid"))
-            .unionByName(edges.select(F.col("dst").alias("vid")))
-            .distinct()
-        )
+        vertices = endpoints(edges)
     vertices = vertices.select("vid")
     n = vertices.count()
     if n == 0:

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from citation_graph_spark.checkpointing import checkpoints
+from citation_graph_spark.graph.degrees import endpoints
 from citation_graph_spark.metrics import MetricsLogger
 from citation_graph_spark.session import kernel, kernel_edges
 
@@ -89,11 +90,7 @@ def katz_centrality(
     metrics = MetricsLogger(metrics_path, "katz")
 
     if vertices is None:
-        vertices = (
-            edges.select(F.col("src").alias("vid"))
-            .unionByName(edges.select(F.col("dst").alias("vid")))
-            .distinct()
-        )
+        vertices = endpoints(edges)
     vertices = vertices.select("vid")
     n = vertices.count()
     if n == 0:

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from citation_graph_spark.graph.degrees import endpoints
 from citation_graph_spark.session import finish_locally, kernel, size_kernel
 
 
@@ -54,11 +55,7 @@ def boruvka_msf(
     spark = edges.sparkSession
     e = normalize_edges(edges).localCheckpoint(eager=True)
     if vertices is None:
-        vertices = (
-            e.select(F.col("src").alias("vid"))
-            .unionByName(e.select(F.col("dst").alias("vid")))
-            .distinct()
-        )
+        vertices = endpoints(e)
     labels = vertices.select("vid", F.col("vid").alias("comp")).localCheckpoint(
         eager=True
     )

@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from citation_graph_spark.checkpointing import checkpoints
+from citation_graph_spark.graph.degrees import endpoints
 from citation_graph_spark.metrics import MetricsLogger
 from citation_graph_spark.session import (
     kernel,
@@ -172,11 +173,7 @@ def _power_iteration(
     width = size_kernel(spark, edge_count, num_partitions)
 
     if vertices is None:
-        vertices = (
-            edges_p.select(F.col("src").alias("vid"))
-            .unionByName(edges_p.select(F.col("dst").alias("vid")))
-            .distinct()
-        )
+        vertices = endpoints(edges_p)
 
     out_deg = kernel_cache(
         edges_p.groupBy("src").agg(F.sum("weight").alias("_wout"))

@@ -48,6 +48,7 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from citation_graph_spark.graph.degrees import endpoints
 from citation_graph_spark.metrics import MetricsLogger
 from citation_graph_spark.session import finish_locally, kernel, size_kernel
 
@@ -105,11 +106,7 @@ def strongly_connected_components(
     metrics = MetricsLogger(metrics_path, "scc")
 
     if vertices is None:
-        vertices = (
-            edges.select(F.col("src").alias("vid"))
-            .unionByName(edges.select(F.col("dst").alias("vid")))
-            .distinct()
-        )
+        vertices = endpoints(edges)
     vertices = vertices.select("vid")
 
     e = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))

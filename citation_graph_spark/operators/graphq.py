@@ -54,12 +54,14 @@ from citation_graph_spark.graph import (
     sssp,
     triangle_counts,
     undirect,
+    widest_paths,
 )
 from citation_graph_spark.graph.ids import build_vertices
 from citation_graph_spark.graph.spectral import (
     FIEDLER_SAFE_SPREAD,
     FIEDLER_SHIFT,
 )
+from citation_graph_spark.graph.traversal import _WIDEST_INF
 from citation_graph_spark.extraction import build_edges
 from citation_graph_spark.operators import register
 from citation_graph_spark.tables import load_tables
@@ -2929,9 +2931,6 @@ def graph_part_partition_quality(
 
 
 # --------------------------------------------------------------------------
-_WIDEST_INF = 4611686018427387904  # 2^62, graph/traversal.py sentinel
-
-
 @register(
     "graph_part_widest_path",
     oracle=f"""
@@ -2972,12 +2971,12 @@ def graph_part_widest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-source widest (bottleneck) paths from the every-100th-part
     seed set, edge capacity = co-order multiplicity, capped at 12
     relaxation rounds on both engines — the max-bandwidth-route dual of
-    graph_part_sssp (same semiring relaxation with (max, min) replacing
-    (min, +); the oracle carries the full width vector per round via
-    unbounded self-loops, and NULL capacities are explicitly guarded
-    because SQL least() skips NULLs)."""
-    from citation_graph_spark.graph import widest_paths
-
+    graph_part_sssp: the engine runs the same frontier relaxation
+    (``traversal._relax``) with (max, min) replacing (min, +), from
+    ``traversal._WIDEST_INF`` on the seeds. The oracle starts from the
+    same imported sentinel and carries the full width vector per round
+    via self-loops of that capacity; NULL capacities are explicitly
+    guarded because SQL least() skips NULLs."""
     t = load_tables(spark, sf_dir)
     items = t["lineitem"].select(
         F.col("l_orderkey").alias("okey"), F.col("l_partkey").alias("pk")

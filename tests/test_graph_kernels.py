@@ -963,6 +963,33 @@ def test_pagerank_jobs(spark, name):
     assert jobs == PAGERANK_SETUP_JOBS[name] + 2 * rounds
 
 
+# the four frontier-relaxation calls of KERNELS on random_200: two
+# set-up jobs for the edge cache, then one job per round
+TRAVERSAL_JOBS = {
+    "bfs_distances": 5,
+    "bfs_per_source": 6,
+    "sssp": 5,
+    "widest_paths": 5,
+}
+
+
+@pytest.mark.parametrize("cached", [False, True], ids=["uncached", "cached"])
+@pytest.mark.parametrize("name", sorted(TRAVERSAL_JOBS))
+def test_traversal_jobs(spark, name, cached):
+    n, el = GRAPHS["random_200"]
+    edges = edges_df(spark, el)
+    if cached:
+        edges = edges.cache()
+        edges.count()
+    jobs = _jobs(
+        spark,
+        f"traversal-{name}-{cached}",
+        lambda: KERNELS[name](edges, vertices_df(spark, n)),
+    )
+    edges.unpersist()
+    assert jobs == TRAVERSAL_JOBS[name]
+
+
 def test_triangle_jobs_do_not_depend_on_an_earlier_pagerank(spark):
     assert spark.conf.get(AQE) == "true"
     n, el = GRAPHS["random_200"]
